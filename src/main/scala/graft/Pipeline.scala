@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Minimal pipeline runner — the engine-side analog of the reference's
   * Airflow DAG runs (goes_satellite_etl.py task chain: download →
@@ -11,8 +12,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Stages stay lazy DataFrames; `run` times a full noop-sink
   * materialization (a `count()` would let Catalyst prune projected
-  * columns and understate the stage) and records the row count
-  * separately, untimed.
+  * columns and understate the stage) and takes the row count from an
+  * [[Observation]] on that same write, so each attempt executes the
+  * stage's plan once.
   */
 object Pipeline {
 
@@ -43,10 +45,13 @@ object Pipeline {
       val t0 = System.nanoTime()
       def attempt(n: Int): StageResult =
         try {
-          val df = s.build(spark)
-          df.write.format("noop").mode("overwrite").save()
+          // an Observation fires once, so every attempt gets its own
+          val rows = new Observation()
+          s.build(spark).observe(rows, count(lit(1)).as("n"))
+            .write.format("noop").mode("overwrite").save()
           val seconds = (System.nanoTime() - t0) / 1e9
-          StageResult(s.name, df.count(), seconds, ok = true, n, "")
+          StageResult(s.name, rows.get("n").asInstanceOf[Long], seconds,
+            ok = true, n, "")
         } catch {
           case e: Exception if n < s.maxAttempts => attempt(n + 1)
           case e: Exception =>
@@ -154,7 +159,6 @@ object Pipeline {
                    lastRunUs: Option[Long] = None, catchup: Boolean = true,
                    maxRuns: Int = 1000)
                   (stagesFor: Long => Seq[Stage]): DataFrame = {
-    import org.apache.spark.sql.functions.lit
     val frames = dueRuns(s, nowUs, lastRunUs, catchup, maxRuns).map { t =>
       run(spark, stagesFor(t)).withColumn("logical_us", lit(t))
     }

@@ -1,21 +1,12 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-
-/** Optimization-round measurement tooling (guide §1): dump
-  * `.explain("formatted")` for declared queries, and profile a single
-  * query's job/stage breakdown so time is attributed to operators,
-  * not guessed.
-  *
-  * PlanDump: `runMain graft.PlanDump <sfDir> <outDir> <suffix> [q1,q2|all]`
+/** Dump `.explain("formatted")` for declared queries:
+  * `runMain graft.PlanDump <sfDir> <outDir> <suffix> [q1,q2|all]`
   * writes `<outDir>/<query>_<suffix>.txt` per query. Queries whose
   * operators run bounded eager jobs at plan construction (trainers,
-  * checkpointed dictionaries) run them here exactly as in the bench.
-  *
-  * Profile: `runMain graft.Profile <sfDir> <cpus> <q1,q2,...>` runs
-  * each query twice (warm, timed) through the noop sink and prints a
-  * per-job table (duration, stage count, task count, description) for
-  * the TIMED pass — the empirical half of guide §1.1 without the UI.
+  * checkpointed dictionaries) run them here exactly as when they are
+  * executed. Per-job and per-layer timings come from `perfbench/`
+  * (`--trace 1`).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -39,71 +30,6 @@ object PlanDump {
         java.nio.file.Paths.get(outDir, s"${n}_$suffix.txt"),
         txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       println(s"[plandump] wrote $n")
-    }
-    spark.stop()
-  }
-}
-
-object Profile {
-  final case class JobRow(id: Int, sec: Double, stages: Int, tasks: Int,
-                          desc: String)
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val cpus = args(1).toInt
-    val names = args(2).split(",").toSeq
-    val spark = Engine.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Int, String)]()
-    val rows = new java.util.concurrent.ConcurrentLinkedQueue[JobRow]()
-    val stageRows = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Int, Double, Double)]()
-    @volatile var capture = false
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (capture) starts.put(j.jobId,
-          (System.nanoTime(), j.stageIds.size,
-           Option(j.properties.getProperty("spark.job.description")).getOrElse("")))
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        if (capture) {
-          val m = s.stageInfo.taskMetrics
-          val wall = (for {a <- s.stageInfo.completionTime; b <- s.stageInfo.submissionTime}
-            yield (a - b) / 1e3).getOrElse(-1.0)
-          stageRows.add((s.stageInfo.stageId,
-            f"gc=${m.jvmGCTime / 1e3}%.3f deser=${m.executorDeserializeTime / 1e3}%.3f cpu=${m.executorCpuTime / 1e9}%.3f " +
-              s.stageInfo.name.takeWhile(_ != '\n').take(40),
-            s.stageInfo.numTasks, wall, m.executorRunTime / 1e3))
-        }
-      override def onJobEnd(j: SparkListenerJobEnd): Unit = {
-        val st = starts.remove(j.jobId)
-        if (st != null) rows.add(JobRow(j.jobId,
-          (System.nanoTime() - st._1) / 1e9, st._2, 0, st._3))
-      }
-    })
-
-    def materialize(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    for (n <- names) {
-      val fn = SparkEntry.queries(n)
-      materialize(fn(spark, sfDir)) // warm
-      rows.clear(); starts.clear(); stageRows.clear()
-      capture = true
-      val t0 = System.nanoTime()
-      materialize(fn(spark, sfDir))
-      val total = (System.nanoTime() - t0) / 1e9
-      capture = false
-      Thread.sleep(100)
-      import scala.jdk.CollectionConverters._
-      val rs = rows.asScala.toSeq.sortBy(_.id)
-      println(f"\n=== $n timed=$total%.3f s, jobs=${rs.size} ===")
-      rs.foreach(r => println(f"  job ${r.id}%4d ${r.sec}%7.3f s stages=${r.stages}%2d ${r.desc.take(90)}"))
-      val accounted = rs.map(_.sec).sum
-      println(f"  accounted=$accounted%.3f s (gap=${total - accounted}%.3f s = planning/driver)")
-      import scala.jdk.CollectionConverters._
-      val ss = stageRows.asScala.toSeq.sortBy(-_._4).take(12)
-      ss.foreach { case (id, nm, nt, wall, run) =>
-        println(f"  stage $id%5d wall=$wall%7.3f run=$run%7.3f tasks=$nt%3d  $nm") }
     }
     spark.stop()
   }

@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   * scores are identical on any partitioning / cluster size — a float
   * dot product would drift in the last ulps between runs and engines.
   *
-  * Everything below is built from codegen'd higher-order functions
-  * (`transform`/`zip_with`/`aggregate`) — no UDFs, stays inside
-  * whole-stage codegen.
+  * Everything below resolves to native codegen'd kernels — no UDFs,
+  * stays inside whole-stage codegen. Their higher-order-function
+  * twins, the differential-test references, live beside the specs.
   */
 object Vec {
 
@@ -24,21 +24,10 @@ object Vec {
     */
   def quantize(v: Column): Column = call_function("graft_quantize", v)
 
-  /** Higher-order-function twin of [[quantize]] (differential-test
-    * reference; registration-free).
-    */
-  def quantizeHof(v: Column): Column =
-    transform(v, x => floor(x.cast("double") * 1000).cast("long"))
-
   /** Exact squared L2 distance of two quantized vectors — the native
     * [[VecSqDist]] kernel (see [[Registry.ensure]]).
     */
   def sqd2(a: Column, b: Column): Column = call_function("graft_sqd2", a, b)
-
-  /** Higher-order-function twin of [[sqd2]]. */
-  def sqd2Hof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, x) => acc + x)
 
   /** Elementwise difference of two quantized vectors (residuals) —
     * the native [[VecSubtract]] kernel.
@@ -58,19 +47,8 @@ object Vec {
     */
   def dotQ(a: Column, b: Column): Column = call_function("graft_dotq", a, b)
 
-  /** Higher-order-function formulation of the same dot product (kept
-    * as the registration-free fallback and as the differential-test
-    * twin of [[LongDotProduct]]).
-    */
-  def dotQHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
-
   /** Euclidean norm of a quantized vector (double, deterministic). */
   def normQ(a: Column): Column = sqrt(dotQ(a, a).cast("double"))
-
-  /** Cosine similarity of two quantized vectors. */
-  def cosineQ(a: Column, b: Column): Column =
-    dotQ(a, b).cast("double") / (normQ(a) * normQ(b))
 
   /** Signed projection of a quantized vector onto a ±1 hyperplane
     * (for sign-random-projection LSH): true if dot(v, plane) > 0.

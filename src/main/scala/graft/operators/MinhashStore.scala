@@ -221,17 +221,6 @@ object MinhashStore {
     fs.create(markerPath(storeDir, batchId), true).close()
   }
 
-  /** Online screen for a NOT-YET-INGESTED batch against the stored
-    * standing table — the read-only "would we keep these?" probe
-    * (same decision rule as the verdicts [[ingestBatch]] persists).
-    */
-  def screenBatch(batch: DataFrame, storeDir: String,
-                  n: Int = 3, tauEst: Double = 0.1,
-                  k: Int = Dedup.MinHashK,
-                  bands: Int = Dedup.Bands): DataFrame =
-    Dedup.minhashScreenBatch(batch,
-      storedBands(batch.sparkSession, storeDir), n, tauEst, k, bands)
-
   /** Merge-on-read retention over the STORED edge log: cluster +
     * keep-best (the q121 read-side pattern). Arrival-order-free and
     * keep-BEST — the complement of the online screen's

@@ -1266,8 +1266,7 @@ object Similarity {
     * [[ivfpqCore]] scan. Training cost: one gate scan of the corpus
     * + iters rounds over ~cap rows, versus the full trainer's iters
     * corpus scans and corpus-sized assignment shuffles — the gap
-    * widens a decade per decade of data (ScaleProbe rows
-    * ann_train_full / ann_train_sampled). A quantizer's geometry
+    * widens a decade per decade of data. A quantizer's geometry
     * saturates at tens of points per centroid, which is why FAISS
     * clamps training exactly this way.
     *

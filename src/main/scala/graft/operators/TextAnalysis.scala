@@ -424,11 +424,6 @@ object TextAnalysis {
       .select(split($"w", "").as("syms"), $"freq")
       .rdd.map(r => (r.getSeq[String](0).toArray, r.getLong(1)))
       .persist()
-    // test-only instrumentation: record the vocab-frame row count per
-    // ROUND (init + one per rewrite) so the scale invariant (the loop
-    // runs on a frame that never grows — one row per distinct word,
-    // constant across merges) is assertable. None in production.
-    vocabSizeProbe.foreach(_ += vocab.count())
     // top-k ordering: n DESC, then l, r ASC in UTF-8 binary order —
     // rdd.top takes the LARGEST elements, so the string legs reverse
     val rankOrd = new Ordering[((String, String), Long)] {
@@ -443,69 +438,74 @@ object TextAnalysis {
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
     var step = 1
     var exhausted = false
-    while (step <= nMerges && !exhausted) {
-      val ranked = vocab
-        .mapPartitions { it =>
-          val acc = new java.util.HashMap[(String, String), Long]()
-          it.foreach { case (syms, freq) =>
-            var i = 0
-            while (i < syms.length - 1) {
-              val k = (syms(i), syms(i + 1))
-              val prev = acc.get(k)
-              acc.put(k, prev + freq)
-              i += 1
+    try {
+      // test-only instrumentation: record the vocab-frame row count per
+      // ROUND (init + one per rewrite) so the scale invariant (the loop
+      // runs on a frame that never grows — one row per distinct word,
+      // constant across merges) is assertable. None in production.
+      vocabSizeProbe.foreach(_ += vocab.count())
+      while (step <= nMerges && !exhausted) {
+        val ranked = vocab
+          .mapPartitions { it =>
+            val acc = new java.util.HashMap[(String, String), Long]()
+            it.foreach { case (syms, freq) =>
+              var i = 0
+              while (i < syms.length - 1) {
+                acc.merge((syms(i), syms(i + 1)), freq, _ + _)
+                i += 1
+              }
             }
+            import scala.jdk.CollectionConverters._
+            acc.entrySet().iterator().asScala.map(e => (e.getKey, e.getValue))
           }
-          import scala.jdk.CollectionConverters._
-          acc.entrySet().iterator().asScala.map(e => (e.getKey, e.getValue))
+          .reduceByKey(_ + _)
+          .top(maxBatch + 1)(rankOrd)
+          .map { case ((l, r), n) => (l, r, n) }
+        if (ranked.isEmpty) exhausted = true
+        else {
+          // maximal pairwise-disjoint prefix over {l, r, l+r}, capped by
+          // the remaining merge budget (see batching scaladoc)
+          val cap = math.min(maxBatch, nMerges - step + 1)
+          val used = scala.collection.mutable.Set.empty[String]
+          var k = 0
+          var blocked = false
+          while (!blocked && k < math.min(cap, ranked.length)) {
+            val (l, r, _) = ranked(k)
+            val syms = Seq(l, r, l + r)
+            if (syms.exists(used.contains)) blocked = true
+            else { used ++= syms; k += 1 }
+          }
+          // rank-safety: a pair NEWLY created by a batched merge is
+          // count-bounded by a symbol-sharing parent ranked below the
+          // prefix; shrink until the last selected count strictly
+          // exceeds the first excluded one so no newborn can tie or
+          // pass a selected merge. k == ranked.length (< limit) means
+          // the pair table is complete AND fully disjoint — then no
+          // sharer exists to parent a newborn, no condition needed.
+          if (k < ranked.length)
+            while (k > 1 && ranked(k - 1)._3 <= ranked(k)._3) k -= 1
+          val batch = ranked.take(k)
+          batch.foreach { case (l, r, n) =>
+            merges += ((step, l, r, l + r, n))
+            step += 1
+          }
+          // greedy left-to-right merge: once (l,r) fuses, the fused
+          // symbol is l+r and cannot re-pair as l with a following r.
+          // The k disjoint rules fold in ONE pass: rules share no
+          // symbols (and no rule's input is another's output), so the
+          // combined fold equals applying each rule's fold in rank
+          // order — one pass per round, not per merge.
+          val rules = batch.map { case (l, r, _) => (l, r) }
+          val prev = vocab
+          vocab = vocab.map { case (syms, freq) =>
+            (bpeGreedyFold(syms, rules), freq)
+          }.persist()
+          vocabSizeProbe.foreach(_ += vocab.count())
+          if (vocabSizeProbe.isEmpty) vocab.count() // materialize this round
+          prev.unpersist(false)
         }
-        .reduceByKey(_ + _)
-        .top(maxBatch + 1)(rankOrd)
-        .map { case ((l, r), n) => (l, r, n) }
-      if (ranked.isEmpty) exhausted = true
-      else {
-        // maximal pairwise-disjoint prefix over {l, r, l+r}, capped by
-        // the remaining merge budget (see batching scaladoc)
-        val cap = math.min(maxBatch, nMerges - step + 1)
-        val used = scala.collection.mutable.Set.empty[String]
-        var k = 0
-        var blocked = false
-        while (!blocked && k < math.min(cap, ranked.length)) {
-          val (l, r, _) = ranked(k)
-          val syms = Seq(l, r, l + r)
-          if (syms.exists(used.contains)) blocked = true
-          else { used ++= syms; k += 1 }
-        }
-        // rank-safety: a pair NEWLY created by a batched merge is
-        // count-bounded by a symbol-sharing parent ranked below the
-        // prefix; shrink until the last selected count strictly
-        // exceeds the first excluded one so no newborn can tie or
-        // pass a selected merge. k == ranked.length (< limit) means
-        // the pair table is complete AND fully disjoint — then no
-        // sharer exists to parent a newborn, no condition needed.
-        if (k < ranked.length)
-          while (k > 1 && ranked(k - 1)._3 <= ranked(k)._3) k -= 1
-        val batch = ranked.take(k)
-        batch.foreach { case (l, r, n) =>
-          merges += ((step, l, r, l + r, n))
-          step += 1
-        }
-        // greedy left-to-right merge: once (l,r) fuses, the fused
-        // symbol is l+r and cannot re-pair as l with a following r.
-        // The k disjoint rules fold in ONE pass: rules share no
-        // symbols (and no rule's input is another's output), so the
-        // combined fold equals applying each rule's fold in rank
-        // order — one pass per round, not per merge.
-        val rules = batch.map { case (l, r, _) => (l, r) }
-        val prev = vocab
-        vocab = vocab.map { case (syms, freq) =>
-          (bpeGreedyFold(syms, rules), freq)
-        }.persist()
-        vocabSizeProbe.foreach(_ += vocab.count())
-        if (vocabSizeProbe.isEmpty) vocab.count() // materialize this round
-        prev.unpersist(false)
       }
-    }
+    } finally vocab.unpersist(false)
     merges.toSeq.toDF("step", "left", "right", "merged", "freq")
   }
 

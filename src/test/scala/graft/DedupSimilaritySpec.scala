@@ -305,7 +305,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .select(col("vec_id"), graft.functions.Vec.quantize(col("embedding")).as("v"))
     val diff = q.select(
         (graft.functions.Vec.dotQ(col("v"), col("v")) -
-         graft.functions.Vec.dotQHof(col("v"), col("v"))).as("d"))
+         VecHof.dotQ(col("v"), col("v"))).as("d"))
       .filter(col("d") =!= 0L).count()
     assert(diff == 0)
   }
@@ -317,7 +317,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // quantize: native == transform(floor(x*1000)) elementwise
     val qdiff = emb.select(
         graft.functions.Vec.quantize(col("embedding")).as("a"),
-        graft.functions.Vec.quantizeHof(col("embedding")).as("b"))
+        VecHof.quantize(col("embedding")).as("b"))
       .filter(!(col("a") <=> col("b"))).count()
     assert(qdiff == 0, "graft_quantize diverged from the HOF twin")
     val q = emb.select(col("vec_id"),
@@ -329,7 +329,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val centsLit = typedlit(cents.map(_.toList).toList)
     val d2diff = q.select(
         graft.functions.Vec.sqd2(col("v"), element_at(centsLit, 3)).as("a"),
-        graft.functions.Vec.sqd2Hof(col("v"), element_at(centsLit, 3)).as("b"))
+        VecHof.sqd2(col("v"), element_at(centsLit, 3)).as("b"))
       .filter(!(col("a") <=> col("b"))).count()
     assert(d2diff == 0, "graft_sqd2 diverged from the HOF twin")
     // nearestCode: native argmin == array_min(transform(struct)) rule
@@ -473,7 +473,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val native = df.select(graft.functions.Vec.dotQ(
       org.apache.spark.sql.functions.col("a"),
       org.apache.spark.sql.functions.col("b"))).collect()(0)
-    val hof = df.select(graft.functions.Vec.dotQHof(
+    val hof = df.select(VecHof.dotQ(
       org.apache.spark.sql.functions.col("a"),
       org.apache.spark.sql.functions.col("b"))).collect()(0)
     assert(native.isNullAt(0) && hof.isNullAt(0),

@@ -430,6 +430,7 @@ class NewOpsSpec extends AnyFunSuite {
       (2L, ("newest " * 6).trim, "en", "s", 42L),
       (3L, ("widest " * 3).trim, "en", "s", 21L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     val got = TextAnalysis.bpeTrain(docs, nMerges = 3)
       .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2),
         r.getString(3), r.getLong(4))).toSeq
@@ -437,6 +438,8 @@ class NewOpsSpec extends AnyFunSuite {
       (1, "e", "s", "es", 9L),
       (2, "es", "t", "est", 9L),
       (3, "l", "o", "lo", 7L)), s"merge table drifted: $got")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted,
+      "bpeTrain left its vocab RDD persisted")
   }
 
   test("bpe train: greedy left-to-right merge on overlapping pairs") {
@@ -458,8 +461,11 @@ class NewOpsSpec extends AnyFunSuite {
     val tiny = Seq((0L, "ab ab", "en", "s", 5L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     // one merge exhausts the corpus; asking for 10 returns 1 row
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     val got = TextAnalysis.bpeTrain(tiny, nMerges = 10).collect()
     assert(got.length == 1 && got(0).getString(3) == "ab")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted,
+      "bpeTrain left its vocab RDD persisted after exhausting the pairs")
     val empty = Seq.empty[(Long, String, String, String, Long)]
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val none = TextAnalysis.bpeTrain(empty, nMerges = 3)

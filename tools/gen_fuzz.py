@@ -3,8 +3,8 @@
 of the library.
 
 Generates N seeded random tiny table sets under DST/s{seed}/ with the
-exact dtype contract of the driver corpora (events.ts stays
-timestamp[ns] via parquet 2.6 + no coercion; see DataContractSpec),
+exact dtype contract of the reference corpora (events.ts keeps its
+source unit via parquet 2.6 + no coercion; see DataContractSpec),
 then each is run through Verify + tools/check.py so the full oracled
 query set gets DuckDB parity on data SHAPES the fixed generator never
 produces: empty strings, whitespace-only and unicode text (CJK, emoji,
@@ -212,8 +212,9 @@ def main():
 
         def out(name, table, d=d):
             # version 2.6 + no coercion: events.ts keeps its source
-            # unit (the sf0.001 events are micros; sf0.1's are nanos —
-            # both eras are in the engine's read contract)
+            # unit (TIMESTAMP(MICROS, isAdjustedToUTC=false) in the
+            # sf0.001 source; nanos files of older eras are also in
+            # the engine's read contract)
             pq.write_table(table, f"{d}/{name}.parquet", version="2.6",
                            coerce_timestamps=None)
 

@@ -8,11 +8,10 @@ self-comparison. This runs the SAME SQL the correctness gate trusts,
 over the SAME parquet tables the Spark bench reads, on the SAME
 machine — a cross-engine denominator on identical data.
 
-Methodology (mirrors graft.Bench): every query runs once UNTIMED
-(catalog + buffer warm), then `--passes` timed runs graded min.
-DuckDB materializes via fetchall() — the analog of Bench's noop sink
-(both pay full result production, neither pays serialization to a
-client). Threads default to the machine's cores, same as local[32]'s
+Methodology: every query runs once UNTIMED (catalog + buffer warm),
+then `--passes` timed runs graded min. DuckDB materializes via
+fetchall(), which pays full result production but no serialization
+to a client. Threads default to the machine's cores, same as local[32]'s
 32 threads on the 32-core box; override with --threads for a pinned
 run. The point is NOT to win at sf0.1 — a single-process columnar
 engine on 60 MB should win — it is the RATIO's stability across SF
@@ -28,9 +27,6 @@ Usage:
   # pairs in DuckDB there; see the cap comment in run()):
   python3 tools/oracle_bench.py /tmp/sf1 \
       /tmp/verify_out/oracle_sql.json /tmp/oracle_bench_sf1.json 3 300
-
-tools/yardstick.py merges these with a bench_detail sidecar into the
-committed ORACLE_BENCH.json ratio table.
 """
 import json
 import sys
