@@ -300,19 +300,18 @@ object Dedup {
     * one cluster with one keeper — the step that turns pairwise dedup
     * signals into an actual retention decision.
     *
-    * Algorithm: iterative min-label propagation on DataFrames. Every
-    * node starts as its own label; each round takes the min label over
-    * itself and its neighbors (one equi-join + one min-aggregate, both
-    * shuffling on node id). Labels decrease monotonically, so the sum
-    * of all labels is a convergence certificate: unchanged sum ⇒ fixed
-    * point (no per-row diff join needed). Rounds needed = component
+    * Algorithm: iterative min-label propagation. Every node starts as
+    * its own label; each round takes the min label over itself and
+    * its neighbors. Labels decrease monotonically, so the sum of all
+    * labels is a convergence certificate: unchanged sum ⇒ fixed point
+    * (no per-row diff join needed). Rounds needed = component
     * diameter; dup clusters are shallow (stars/chains of a few docs),
     * so this converges in 2-4 rounds. At 100 TB with adversarially
     * long chains, swap the loop body for the large-star/small-star
     * operators (Kiveris et al., "Connected Components in MapReduce and
     * Beyond", SoCC'14) — same per-round join shape, O(log² n) rounds.
-    * `localCheckpoint` truncates the growing lineage each round (a
-    * cluster deployment would use reliable checkpointing instead).
+    * The loop runs on RDDs held by [[DriverLoop]]; see
+    * [[dupClustersFrom]].
     */
   def dupClusters(documents: DataFrame, n: Int = 3, tau: Double = 0.1,
                   maxIters: Int = 20): DataFrame =
@@ -333,35 +332,16 @@ object Dedup {
       .filter($"doc_id" =!= $"root")
       .select($"root".as("doc_a"), $"doc_id".as("doc_b"))
     val edges = near.select($"doc_a", $"doc_b").union(exactEdges).distinct()
-    // r20 (guide §2.4): the undirected edge frame is persist()ed
-    // behind an explicit repartition + sort on the probe key u — NOT
-    // localCheckpoint()ed, because InMemoryTableScan preserves the
-    // cached plan's outputPartitioning/outputOrdering where
-    // localCheckpoint reports UnknownPartitioning (the r19 probe that
-    // led to the revert; persist is the form that makes the r19 idea
-    // work). Effect: the per-round `und ⋈ labels` join re-shuffled
-    // and re-sorted the EDGE frame every round — now it shuffles once
-    // here and every round reads the cached, pre-sorted partitions.
-    // The cache is released before returning (the bounded result is
-    // checkpointed first), so re-invocations recompute from parquet.
-    // r20 restructure (guide §1.2 / §2.4, the r19 lloydLoop / r20 q117
-    // precedent): the propagation rounds leave Catalyst. The r19 form
-    // re-planned join + aggregate + join + checkpoint + certificate
-    // queries per round (~10 AQE stage-jobs and 2 actions each, and
-    // the edge frame re-shuffled on u EVERY round because
-    // localCheckpoint loses its partitioning). Both loop frames are
-    // plain key-value RDDs sharing one HashPartitioner: `und` and the
-    // label frame are co-partitioned, so the per-round neighbor-min
-    // join is NARROW on both sides and the only shuffle left is the
-    // (v, min-label) reduce — edges move across the wire ONCE at
-    // setup instead of once per round. Each round is ONE RDD job
-    // (the certificate sum is the materializing action) with zero
-    // planning. Semantics are row-identical: inner join on u = node,
-    // min per v, left join back with least() — and the certificate
-    // stays an EXACT integer sum (BigInt here ≡ the old
-    // decimal(38,0): a long sum could overflow at 100 TB id ranges
-    // and a wrapped sum could fake a fixed point). The differential
-    // spec pins this loop against the old DataFrame formulation.
+    // The rounds run outside Catalyst: planning a join + aggregate +
+    // certificate query per round cost more than the round's work.
+    // Both loop RDDs share one HashPartitioner, so the per-round
+    // neighbor-min join is NARROW on both sides: edges cross the wire
+    // once, at setup, and the only per-round shuffle is the
+    // (v, min-label) reduce. Each round is ONE job (the certificate
+    // sum materializes the new labels). The certificate is an EXACT
+    // BigInt sum: a long sum could overflow at 100 TB id ranges, and
+    // a wrapped sum could fake a fixed point. DedupSimilaritySpec pins
+    // the rows against the DataFrame formulation of the same loop.
     val spark = documents.sparkSession
     val undDf = edges.select($"doc_a".as("u"), $"doc_b".as("v"))
       .union(edges.select($"doc_b".as("u"), $"doc_a".as("v")))
@@ -373,47 +353,41 @@ object Dedup {
     // pure per-task fixed cost on sub-MB partitions
     val nParts = math.max(1, undSrc.getNumPartitions)
     val part = new org.apache.spark.HashPartitioner(nParts)
-    val und = undSrc.partitionBy(part).persist()
-    var labels = seedDf.rdd.map(r => (r.getLong(0), r.getLong(1)))
-      .partitionBy(part).persist()
     def labelSum(rdd: org.apache.spark.rdd.RDD[(Long, Long)]): BigInt =
       rdd.mapPartitions { it =>
         var s = BigInt(0); it.foreach(kv => s += kv._2); Iterator.single(s)
       }.fold(BigInt(0))(_ + _)
-    var prevSum = labelSum(labels)
-    var prevCached = labels
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      val nbrMin = und.join(labels)
-        .map { case (_, (v, lbl)) => (v, lbl) }
-        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-      labels = labels.leftOuterJoin(nbrMin)
-        .mapValues { case (l, o) => math.min(l, o.getOrElse(l)) }
-        .persist()
-      val s = labelSum(labels)
-      prevCached.unpersist(false)
-      prevCached = labels
-      converged = s == prevSum
-      prevSum = s
-      iter += 1
+    val labelsDf = DriverLoop { loop =>
+      val und = loop.hold(undSrc.partitionBy(part))
+      var labels = loop.hold(
+        seedDf.rdd.map(r => (r.getLong(0), r.getLong(1))).partitionBy(part))
+      var prevSum = labelSum(labels)
+      var converged = false
+      var iter = 0
+      while (!converged && iter < maxIters) {
+        val nbrMin = und.join(labels)
+          .map { case (_, (v, lbl)) => (v, lbl) }
+          .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
+        val next = labels.leftOuterJoin(nbrMin)
+          .mapValues { case (l, o) => math.min(l, o.getOrElse(l)) }
+        val s = loop.replace(labels, next)(labelSum)
+        labels = next
+        converged = s == prevSum
+        prevSum = s
+        iter += 1
+      }
+      require(converged, s"label propagation did not converge in $maxIters rounds")
+      // only the UNSORTED label pairs are checkpointed (narrow, no
+      // sort) so the loop RDDs can be released; the sizes join and
+      // the output ORDER BY stay LAZY — a consumer that immediately
+      // re-joins the clusters (q123/q127/q129 keep-best) lets
+      // Catalyst eliminate the sort instead of paying an eager
+      // materialization of it
+      spark.createDataFrame(
+        labels.map { case (n, l) => org.apache.spark.sql.Row(n, l) },
+        org.apache.spark.sql.types.StructType.fromDDL("node BIGINT, label BIGINT"))
+        .localCheckpoint(true)
     }
-    require(converged, s"label propagation did not converge in $maxIters rounds")
-    // only the UNSORTED label pairs are checkpointed (narrow, no
-    // sort) so the loop RDDs can be released; the sizes join and the
-    // output ORDER BY stay LAZY — a consumer that immediately re-joins
-    // the clusters (q123/q127/q129 keep-best) lets Catalyst eliminate
-    // the sort instead of paying an eager materialization of it
-    val labelsDf = spark.createDataFrame(
-      labels.map { case (n, l) => org.apache.spark.sql.Row(n, l) },
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("label",
-          org.apache.spark.sql.types.LongType))))
-      .localCheckpoint(true)
-    und.unpersist(false)
-    labels.unpersist(false)
     val sizes = labelsDf.groupBy($"label").agg(count(lit(1)).as("cluster_size"))
     labelsDf.join(sizes, Seq("label"))
       .select($"node".as("doc_id"), $"label".as("cluster_id"),

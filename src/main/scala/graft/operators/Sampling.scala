@@ -583,23 +583,19 @@ object Sampling {
       .agg(count(lit(1)).as("cnt"))
     val biasRows = base.select($"doc_id", $"split", $"y", $"n_tok",
       lit(nFeatures).as("f"), $"n_tok".as("cnt"))
-    // r20 restructure (guide §1.2 "the distributed algorithm", the
-    // r19 lloydLoop precedent): the GD rounds leave Catalyst. The r19
-    // form re-planned a 2-aggregate + join query per round — measured
-    // ~58 jobs / ~2 s of pure driver planning gap for 12 rounds, HALF
-    // of q117's wall time, with per-round executor work of a few ms.
-    // The feature frame is instead packed ONCE into a per-doc RDD
-    // (doc_id, split, y, n_tok, [f], [cnt]) — the same artifact the
-    // old localCheckpoint materialized, grouped by doc — and each
-    // round is ONE zero-shuffle RDD job: every partition folds its
-    // docs into a local (nFeatures+1) gradient array, the driver sums
-    // the ≤ P bounded arrays (the same bounded certificate as
-    // before). Bit-equivalence: margin_int is the identical integer
-    // Σ cnt·w[f] (order-free), gq the identical
-    // floor((σ(margin)−y)/n_tok·SCALE) with the same double ops, and
-    // the gradient the identical integer Σ cnt·gq —
-    // QualityClassifierSpec's differential test pins the old
-    // DataFrame loop against this one round by round.
+    // The GD rounds run outside Catalyst: re-planning a 2-aggregate +
+    // join query per round cost more driver time than the rounds'
+    // executor work. The feature frame is packed ONCE into a per-doc
+    // RDD (doc_id, split, y, n_tok, [f], [cnt]) held by [[DriverLoop]],
+    // and each round is ONE zero-shuffle job: every partition folds
+    // its docs into a local (nFeatures+1) gradient array and
+    // `RDD.reduce` sums the arrays as tasks finish, so the driver
+    // holds O(features) at any partition count (a `treeReduce` would
+    // add a shuffle stage per round). Integer arithmetic throughout:
+    // margin_int = Σ cnt·w[f] and the gradient Σ cnt·gq are
+    // order-free, gq = floor((σ(margin)−y)/n_tok·SCALE) uses the same
+    // double ops as the DataFrame formulation, which
+    // QualityClassifierSpec's differential test pins round by round.
     val trainRows = featRows.unionByName(biasRows)
     val spark = documents.sparkSession
     val nF = nFeatures
@@ -613,7 +609,7 @@ object Sampling {
     // nDocs and in the feature-presence set (its rows grouped like
     // any other) but contributes nothing to any gradient (cnt·gq was
     // NULL, and sum() skips NULLs), and scores with y = NULL.
-    val packed = trainRows
+    val packedRows = trainRows
       .groupBy($"doc_id", $"split", $"y", $"n_tok")
       .agg(collect_list(struct($"f", $"cnt")).as("fc"))
       .rdd.map { r =>
@@ -627,98 +623,89 @@ object Sampling {
         val y: java.lang.Integer = if (r.isNullAt(2)) null else r.getInt(2)
         (r.getLong(0), r.getString(1), y, r.getLong(3), fs, cnts)
       }
-      .persist()
-    // one bounded setup job: train-doc count (the old countDistinct)
-    // plus the set of features that occur in the train shard — the
-    // old per-round collect only carried OCCURRING features, so the
-    // momentum term must only tick for exactly those
-    val (nDocsRaw, presentF) = packed.mapPartitions { it =>
-      var n = 0L
-      val present = new Array[Boolean](nF + 1)
-      it.foreach { d =>
-        if (d._2 == "train") {
-          n += 1
-          var j = 0
-          while (j < d._5.length) { present(d._5(j)) = true; j += 1 }
-        }
-      }
-      Iterator.single((n, present))
-    }.reduce { (a, b) =>
-      val m = new Array[Boolean](nF + 1)
-      var j = 0
-      while (j <= nF) { m(j) = a._2(j) || b._2(j); j += 1 }
-      (a._1 + b._1, m)
-    }
-    val nDocs = math.max(1L, nDocsRaw)
-    val w = Array.fill(nFeatures + 1)(0L)
-    val vel = Array.fill(nFeatures + 1)(0.0)
     val scale = QcScale
-    var i = 0
-    while (i < iters) {
-      val bw = w.clone()
-      val partials = packed.mapPartitions { it =>
-        val acc = new Array[Long](nF + 1)
-        it.foreach { case (_, split, y, nTok, fs, cnts) =>
-          if (split == "train" && y != null) {
-            var mint = 0L
+    DriverLoop { loop =>
+      val packed = loop.hold(packedRows)
+      // one bounded setup job: train-doc count plus the set of
+      // features that occur in the train shard — the momentum term
+      // ticks only for features that occur
+      val (nDocsRaw, presentF) = packed.mapPartitions { it =>
+        var n = 0L
+        val present = new Array[Boolean](nF + 1)
+        it.foreach { d =>
+          if (d._2 == "train") {
+            n += 1
             var j = 0
-            while (j < fs.length) { mint += cnts(j) * bw(fs(j)); j += 1 }
-            val margin = mint.toDouble / scale / nTok
-            val gq = math.floor((1.0 / (1.0 + math.exp(-margin)) -
-              y.doubleValue()) / nTok * scale).toLong
-            var k = 0
-            while (k < fs.length) { acc(fs(k)) += cnts(k) * gq; k += 1 }
+            while (j < d._5.length) { present(d._5(j)) = true; j += 1 }
           }
         }
-        Iterator.single(acc)
-      }.collect()
-      var f = 0
-      while (f <= nFeatures) {
-        if (presentF(f)) {
-          var g = 0L
-          partials.foreach(a => g += a(f))
-          // conditioning: a tf-normalized feature's gradient is ~1/nF
-          // the bias pseudo-feature's scale — equalize the step so the
-          // weights learn at the bias's rate instead of crawling; the
-          // heavy-ball term (driver-side doubles, deterministic) cuts
-          // the full-batch round count ~4x
-          val step = if (f == nFeatures) lrate else lrate * nFeatures
-          vel(f) = QcMomentum * vel(f) + step * g.toDouble / nDocs
-          w(f) -= math.round(vel(f))
-        }
-        f += 1
+        Iterator.single((n, present))
+      }.reduce { (a, b) =>
+        val m = new Array[Boolean](nF + 1)
+        var j = 0
+        while (j <= nF) { m(j) = a._2(j) || b._2(j); j += 1 }
+        (a._1 + b._1, m)
       }
-      i += 1
+      val nDocs = math.max(1L, nDocsRaw)
+      val w = Array.fill(nFeatures + 1)(0L)
+      val vel = Array.fill(nFeatures + 1)(0.0)
+      var i = 0
+      while (i < iters) {
+        val bw = w.clone()
+        val grad = packed.mapPartitions { it =>
+          val acc = new Array[Long](nF + 1)
+          it.foreach { case (_, split, y, nTok, fs, cnts) =>
+            if (split == "train" && y != null) {
+              var mint = 0L
+              var j = 0
+              while (j < fs.length) { mint += cnts(j) * bw(fs(j)); j += 1 }
+              val margin = mint.toDouble / scale / nTok
+              val gq = math.floor((1.0 / (1.0 + math.exp(-margin)) -
+                y.doubleValue()) / nTok * scale).toLong
+              var k = 0
+              while (k < fs.length) { acc(fs(k)) += cnts(k) * gq; k += 1 }
+            }
+          }
+          Iterator.single(acc)
+        }.reduce { (a, b) =>
+          var f = 0
+          while (f <= nF) { a(f) += b(f); f += 1 }
+          a
+        }
+        var f = 0
+        while (f <= nFeatures) {
+          if (presentF(f)) {
+            // conditioning: a tf-normalized feature's gradient is ~1/nF
+            // the bias pseudo-feature's scale — equalize the step so the
+            // weights learn at the bias's rate instead of crawling; the
+            // heavy-ball term (driver-side doubles, deterministic) cuts
+            // the full-batch round count ~4x
+            val step = if (f == nFeatures) lrate else lrate * nFeatures
+            vel(f) = QcMomentum * vel(f) + step * grad(f).toDouble / nDocs
+            w(f) -= math.round(vel(f))
+          }
+          f += 1
+        }
+        i += 1
+      }
+      // score EVERY document (train and val) with the final model; the
+      // split tag makes the two accuracies separable downstream. The
+      // bounded per-doc result is checkpointed eagerly, before the
+      // loop releases `packed`.
+      val fw = w.clone()
+      val scoredRows = packed.map { case (docId, split, y, nTok, fs, cnts) =>
+        var mint = 0L
+        var j = 0
+        while (j < fs.length) { mint += cnts(j) * fw(fs(j)); j += 1 }
+        val margin = mint.toDouble / scale / nTok
+        org.apache.spark.sql.Row(docId, split, y, margin,
+          1.0 / (1.0 + math.exp(-margin)))
+      }
+      val schema = org.apache.spark.sql.types.StructType.fromDDL(
+        "doc_id BIGINT, split STRING, y INT, margin DOUBLE, p DOUBLE")
+      spark.createDataFrame(scoredRows, schema)
+        .orderBy($"doc_id")
+        .localCheckpoint(true)
     }
-    // score EVERY document (train and val) with the final model; the
-    // split tag makes the two accuracies separable downstream. Same
-    // integer margin + double sigmoid as the old aggregate form. The
-    // bounded per-doc result is checkpointed eagerly so the packed
-    // RDD can be released before the caller's action replays it.
-    val fw = w.clone()
-    val scoredRows = packed.map { case (docId, split, y, nTok, fs, cnts) =>
-      var mint = 0L
-      var j = 0
-      while (j < fs.length) { mint += cnts(j) * fw(fs(j)); j += 1 }
-      val margin = mint.toDouble / scale / nTok
-      org.apache.spark.sql.Row(docId, split, y, margin,
-        1.0 / (1.0 + math.exp(-margin)))
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("split",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("y",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("margin",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("p",
-        org.apache.spark.sql.types.DoubleType)))
-    val scored = spark.createDataFrame(scoredRows, schema)
-      .orderBy($"doc_id")
-      .localCheckpoint(true)
-    packed.unpersist(false)
-    scored
   }
 }

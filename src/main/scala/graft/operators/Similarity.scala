@@ -167,17 +167,6 @@ object Similarity {
     ivfTopK(embeddings, nCells, nProbe, nQueries, k,
       centroids = Some(kmeansTrain(embeddings, nCells, iters)))
 
-  /** One Lloyd iteration of distributed k-means over quantized
-    * embeddings — the training loop that produces real IVF centroids
-    * (run it to convergence by feeding each round's means back in as
-    * the next round's centroids). Assignment broadcasts the k
-    * centroids against the corpus (one scan, no corpus shuffle) and
-    * picks argmin squared-L2 via `min(struct(d2, cid))` — exact
-    * integer math on quantized vectors, deterministic tie-break on the
-    * lower centroid id. The update step shuffles (cid, dim, q) triples
-    * with map-side partial sums — k×dim rows out, independent of
-    * corpus size.
-    */
   /** Nearest-centroid assignment over pre-quantized vectors (columns
     * vec_id, v): argmin squared-L2 against the first `kCents` vectors,
     * tie-broken on the lower centroid id. Exposed separately so the
@@ -274,6 +263,17 @@ object Similarity {
       .orderBy($"vec_id", $"dim")
   }
 
+  /** One Lloyd iteration of distributed k-means over quantized
+    * embeddings — the training loop that produces real IVF centroids
+    * (run it to convergence by feeding each round's means back in as
+    * the next round's centroids). Assignment broadcasts the k
+    * centroids against the corpus (one scan, no corpus shuffle) and
+    * picks argmin squared-L2 via `min(struct(d2, cid))` — exact
+    * integer math on quantized vectors, deterministic tie-break on the
+    * lower centroid id. The update step shuffles (cid, dim, q) triples
+    * with map-side partial sums — k×dim rows out, independent of
+    * corpus size.
+    */
   def kmeansStep(embeddings: DataFrame, kCents: Int = 8): DataFrame = {
     graft.functions.Registry.ensure(embeddings.sparkSession)
     val q = embeddings.select($"vec_id", Vec.quantize($"embedding").as("v"))
@@ -287,88 +287,50 @@ object Similarity {
   }
 
   /** Full Lloyd training loop (q108): iterate assign → mean-update
-    * `iters` times from the [[seedCentroids]] init, feeding each
-    * round's means back through [[centroidsOf]], and return the
+    * `iters` times from the [[seedCentroids]] init and return the
     * trained (cid, cv) centroid frame [[assignCells]] consumes — the
     * producer that makes q106/q107's "size the codebook to the
     * corpus" prescription a one-call composition
     * (`embeddingNearDupCells(emb, kmeansTrain(emb, k))`).
     *
-    * Scale shape per round: ONE corpus scan (the k-row centroid frame
-    * is broadcast by the assignment — the corpus is never shuffled)
-    * plus a (k × dim)-row partial-sum shuffle, independent of corpus
-    * size; the new centroid frame is eagerly localCheckpointed so
-    * lineage stays flat across rounds (the q66 discipline) and each
-    * round is exactly one job. `iters` is a bounded driver loop —
-    * k-means converges in a handful of Lloyd rounds at IVF codebook
-    * granularity, and production stops on a movement threshold the
-    * same way. Cells that lose all members keep their previous
-    * centroid (the standard Lloyd fallback), so k never silently
-    * shrinks. Objective descent is spec-pinned with a 1% per-round
-    * tolerance: [[centroidsOf]] re-quantizes means onto the 1/1000
-    * grid, so each update can sit a hair off the true argmin — a
-    * blocking-grade, not geometry-grade, approximation (same argument
-    * as its scaladoc).
+    * Training is [[lloyd]]'s one-span case: the centroids stay on the
+    * driver and each round is ONE corpus scan collecting (k × dim)
+    * partial sums, independent of corpus size. `iters` is a bounded
+    * driver loop — k-means converges in a handful of Lloyd rounds at
+    * IVF codebook granularity, and production stops on a movement
+    * threshold the same way. Cells that lose all members keep their
+    * previous centroid (the standard Lloyd fallback), so k never
+    * silently shrinks. Objective descent is spec-pinned with a 1%
+    * per-round tolerance: means are re-quantized onto the 1/1000 grid
+    * (the [[centroidsOf]] rule), so each update can sit a hair off the
+    * true argmin — a blocking-grade, not geometry-grade,
+    * approximation (same argument as its scaladoc).
     */
   def kmeansTrain(embeddings: DataFrame, kCents: Int = 8,
                   iters: Int = 5): DataFrame = {
     graft.functions.Registry.ensure(embeddings.sparkSession)
-    val q = embeddings.select($"vec_id", Vec.quantize($"embedding").as("v"))
-    val seeds = seedCentroids(q, kCents).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1))).toIndexedSeq
-    lloydLoop(q, seeds, iters)
+    centroidFrame(embeddings.sparkSession, kmeansCents(
+      embeddings.select($"vec_id", Vec.quantize($"embedding").as("v")),
+      kCents, iters, neutralSeeds = false))
   }
 
-  /** The Lloyd rounds shared by [[kmeansTrain]] (full-corpus frame)
-    * and [[kmeansTrainSampled]] (bounded sample frame): assignment +
-    * grid-requantized means + empty-cell fallback per round.
-    *
-    * The centroid table lives on the DRIVER between rounds (k × dim
-    * longs — the [[pqTrainDriverQ]] discipline, r19): assignment is
-    * the native [[graft.functions.NearestCode]] argmin against the
-    * inlined table (cents sorted by cid, so positional tie-break IS
-    * the (d2, cid) rule), and each round is exactly ONE job — the
-    * corpus scan's (cid, dim) partial-sum collect, k × dim bounded
-    * rows — with no per-round broadcast build, join, coalesce or
-    * checkpoint. Profiled before/after at sf0.1 (OPTIMIZATION_r19.md):
-    * the DataFrame-resident loop paid ~4 jobs/round plus two
-    * checkpoint materializations. Mean update and empty-cell fallback
-    * are the same double tree as kmeansStep/centroidsOf —
-    * floor((sum·1.0/1000.0/n)·1000) — so the trained centroids are
-    * bit-identical to the previous formulation (spec-pinned
-    * equivalence in DedupSimilaritySpec).
+  /** k-means as [[lloyd]]'s one-span case: driver-resident (cid, cv)
+    * centroids sorted by cid. The cids are the seed vec_ids, or with
+    * `neutralSeeds` the seed slots 0..k-1 (the sampled trainers'
+    * contract — [[ivfpqCore]]'s residual key packing needs cids <
+    * nCells).
     */
-  private def lloydLoop(q: DataFrame, seeds: IndexedSeq[(Long, Seq[Long])],
-                        iters: Int): DataFrame = {
-    val spark = q.sparkSession
+  private def kmeansCents(q: DataFrame, kCents: Int, iters: Int,
+      neutralSeeds: Boolean): IndexedSeq[(Long, Seq[Long])] = {
+    val seeds = lloydSeeds(q, kCents, neutralSeeds)
+    val cids =
+      if (neutralSeeds) seeds.indices.map(_.toLong) else seeds.map(_._1)
+    cids.zip(lloyd(q, seeds.map(_._2), 1, iters).head)
+  }
+
+  private def centroidFrame(spark: org.apache.spark.sql.SparkSession,
+      cents: IndexedSeq[(Long, Seq[Long])]): DataFrame = {
     import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
-    var cents = seeds.sortBy(_._1)
-    var i = 0
-    while (i < iters && cents.nonEmpty) {
-      val coarseLit = typedlit(cents.map(_._2.toList).toList)
-      val cidsLit = typedlit(cents.map(_._1).toList)
-      val means = q
-        .withColumn("pos", Vec.nearestCode($"v", coarseLit) + 1)
-        .select(element_at(cidsLit, $"pos").as("cid"),
-          posexplode($"v").as(Seq("dim", "q")))
-        .groupBy($"cid", $"dim")
-        .agg(sum($"q").as("sum_q"), count(lit(1)).as("n"))
-        .collect()
-      val upd = means.map(r => (r.getLong(0), r.getInt(1)) ->
-        (r.getLong(2), r.getLong(3))).toMap
-      cents = cents.map { case (cid, cv) =>
-        val dims = cv.indices.map(d => upd.get((cid, d)))
-        if (dims.exists(_.isEmpty)) (cid, cv)
-        else (cid, dims.map {
-          case Some((s, n)) =>
-            // same double tree as kmeansStep/centroidsOf:
-            // floor((sum_q * 1.0 / 1000.0 / n) * 1000)
-            math.floor(s * 1.0 / 1000.0 / n * 1000).toLong
-          case None => 0L
-        })
-      }
-      i += 1
-    }
     cents.toDF("cid", "cv")
   }
 
@@ -408,17 +370,18 @@ object Similarity {
   }
 
   /** [[kmeansTrain]] over a bounded [[trainingSample]] — the sampled
-    * coarse trainer. Seeds are the kCents smallest vec_ids IN THE
-    * SAMPLE, re-keyed to cid 0..k-1 (the full trainer's contract —
-    * and [[ivfpqCore]]'s residual key packing needs cids < nCells).
-    * On a corpus ≤ cap this is exactly [[kmeansTrain]].
+    * coarse trainer. Seeds are the kCents first vectors IN THE SAMPLE
+    * in the neutral [[seedOrder]], re-keyed to cid 0..k-1 (the full
+    * trainer's contract — and [[ivfpqCore]]'s residual key packing
+    * needs cids < nCells).
     */
   def kmeansTrainSampled(embeddings: DataFrame, kCents: Int = 8,
                          iters: Int = 5,
                          cap: Long = TrainSampleCap): DataFrame = {
     graft.functions.Registry.ensure(embeddings.sparkSession)
-    kmeansTrainOnSample(
-      trainingSample(embeddings, cap).localCheckpoint(true), kCents, iters)
+    val sample = trainingSample(embeddings, cap).localCheckpoint(true)
+    centroidFrame(embeddings.sparkSession,
+      kmeansCents(quantizedNonEmpty(sample), kCents, iters, neutralSeeds = true))
   }
 
   /** Neutral seed order for the sampled trainers: smallest
@@ -434,17 +397,17 @@ object Similarity {
     */
   private def seedOrder: Seq[Column] = Seq(xxhash64($"vec_id"), $"vec_id")
 
-  private def kmeansTrainOnSample(sample: DataFrame, kCents: Int,
-                                  iters: Int): DataFrame = {
-    val spark = sample.sparkSession
-    import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
-    val sq = quantizedNonEmpty(sample)
-    val seedRows = sq.orderBy(seedOrder: _*).limit(kCents).collect()
-    if (seedRows.isEmpty)
-      return sq.select($"vec_id".as("cid"), $"v".as("cv"))
-    val seeds = seedRows.toIndexedSeq.zipWithIndex
-      .map { case (r, i) => (i.toLong, r.getSeq[Long](1)) }
-    lloydLoop(sq, seeds, iters)
+  /** Lloyd seeds as (vec_id, v), in seed order: the vectors with
+    * vec_id < k in id order (the classic init), or with `neutral` the
+    * first k in [[seedOrder]] — for sampled training, where
+    * `vec_id < k` may match nothing and id order is a biased draw.
+    */
+  private def lloydSeeds(q: DataFrame, k: Int,
+      neutral: Boolean): IndexedSeq[(Long, Seq[Long])] = {
+    val rows =
+      if (neutral) q.orderBy(seedOrder: _*).limit(k).collect()
+      else q.filter($"vec_id" < k).collect().sortBy(_.getLong(0))
+    rows.toIndexedSeq.map(r => (r.getLong(0), r.getSeq[Long](1)))
   }
 
   /** Per-vector symmetric int8 quantization (q104) — the storage/
@@ -478,26 +441,6 @@ object Similarity {
       .orderBy($"vec_id", $"dim")
   }
 
-  /** PQ training loop, driver-resident codebooks (q111): split the
-    * dim-64 embedding into `nSub` contiguous subspaces and Lloyd-train
-    * an independent `kCodes`-centroid codebook in each — the PQ
-    * construction of Jégou/Douze/Schmid 2011 ("Product quantization
-    * for nearest neighbor search").
-    *
-    * The codebooks live on the DRIVER between rounds (nSub × kCodes ×
-    * subDim longs — ~4 KB), the same bounded-certificate discipline as
-    * the BPE merge table and exactly how Spark MLlib's KMeans carries
-    * cluster centers: assignment is then a LITERAL expression (argmin
-    * over an inlined centroid array via array_min(transform(...)) —
-    * codegen'd, no join, no shuffle), so each Lloyd round is ONE
-    * corpus scan feeding one (nSub × kCodes × subDim)-row partial-sum
-    * shuffle that collects back to the driver. iters × 1 jobs total,
-    * versus the 3-shuffle + checkpoint pipeline a DataFrame-resident
-    * centroid frame costs per round. Per-subspace semantics match
-    * [[kmeansTrain]]: first-kCodes seed, argmin-d2 with (d2, cid)
-    * tie-break, 1/1000-grid re-quantized means, empty cells keep
-    * their previous centroid.
-    */
   /** Contiguous subspace spans (start, len) for a measured input
     * dimension: dim/nSub each, the LAST span absorbing any remainder;
     * at most min(nSub, dim) non-empty spans. The dimension is always
@@ -527,6 +470,13 @@ object Similarity {
     embeddings.select($"vec_id", Vec.quantize($"embedding").as("v"))
       .filter(size($"v") > 0)
 
+  /** PQ training (q111): split the embedding into `nSub` contiguous
+    * subspaces and train an independent `kCodes`-centroid codebook in
+    * each — the PQ construction of Jégou/Douze/Schmid 2011 ("Product
+    * quantization for nearest neighbor search") — with [[lloyd]]. The
+    * codebooks (nSub × kCodes × subDim longs, ~4 KB) are returned on
+    * the driver; every consumer inlines them as literals.
+    */
   private[operators] def pqTrainDriver(
       embeddings: DataFrame, nSub: Int, kCodes: Int,
       iters: Int): IndexedSeq[IndexedSeq[Seq[Long]]] = {
@@ -537,28 +487,41 @@ object Similarity {
   /** [[pqTrainDriver]] over a PRE-QUANTIZED (vec_id, v) frame — the
     * seam residual-PQ training needs: the residual vectors (v −
     * coarse centroid) are already on the 1/1000 grid, so re-deriving
-    * them from an `embedding` column is impossible. Same seed,
-    * argmin, grid-requantize and empty-cell semantics.
+    * them from an `embedding` column is impossible. `neutralSeeds`
+    * picks [[lloydSeeds]]' hash-ordered draw for sampled training.
     */
   private[operators] def pqTrainDriverQ(
-      q: DataFrame, nSub: Int, kCodes: Int,
-      iters: Int, seedLimit: Boolean = false): IndexedSeq[IndexedSeq[Seq[Long]]] = {
-    // seedLimit: NEUTRAL hash-ordered seeds (see [[seedOrder]]) for
-    // sampled training, where `vec_id < kCodes` may match nothing and
-    // id-order is the biased draw; the default keeps the full
-    // trainer's pushdown-pruned seed slice (the declared q126
-    // contract).
-    val seedRows =
-      (if (seedLimit) q.orderBy(seedOrder: _*).limit(kCodes)
-       else q.filter($"vec_id" < kCodes).orderBy($"vec_id")).collect()
-    if (seedRows.isEmpty) return IndexedSeq(IndexedSeq.empty)
-    val dim = seedRows.head.getSeq[Long](1).size
-    val spans = subSpans(dim, nSub)
-    var cents: IndexedSeq[IndexedSeq[Seq[Long]]] =
-      spans.map { case (start, len) =>
-        seedRows.toIndexedSeq.map(r =>
-          r.getSeq[Long](1).slice(start, start + len))
-      }
+      q: DataFrame, nSub: Int, kCodes: Int, iters: Int,
+      neutralSeeds: Boolean = false): IndexedSeq[IndexedSeq[Seq[Long]]] =
+    lloyd(q, lloydSeeds(q, kCodes, neutralSeeds).map(_._2), nSub, iters)
+
+  /** The one Lloyd routine: k-means (one span) and PQ / residual PQ
+    * (`nSub` spans) both train here. The vectors of `q` (vec_id, v)
+    * are cut into [[subSpans]] of the widest seed, and each span gets
+    * one codebook, seeded with the seeds' slices of that span.
+    *
+    * The codebooks live on the DRIVER between rounds — the bounded
+    * certificate discipline of the BPE merge table, and how Spark
+    * MLlib's KMeans carries cluster centers. Assignment is the native
+    * argmin ([[bestCode]]) over the inlined codebook literal inside
+    * the scan projection — no join, no broadcast build, no checkpoint
+    * — so each round is ONE job: a corpus scan feeding an
+    * (nSub × k × subDim)-row partial-sum aggregate collected back to
+    * the driver. Per span: argmin squared-L2 with the lower-slot
+    * tie-break (the (d2, cid) rule of [[assignCells]] when slots are in
+    * cid order), means re-quantized onto the 1/1000 grid with the
+    * [[centroidsOf]] double tree floor((sum·1.0/1000.0/n)·1000), and a
+    * centroid missing members on any of its dims keeps its previous
+    * value, so k never silently shrinks. DedupSimilaritySpec pins the
+    * one-span case against the DataFrame-resident k-means loop.
+    */
+  private[operators] def lloyd(q: DataFrame, seeds: IndexedSeq[Seq[Long]],
+      nSub: Int, iters: Int): IndexedSeq[IndexedSeq[Seq[Long]]] = {
+    if (seeds.isEmpty) return IndexedSeq(IndexedSeq.empty)
+    val spans = subSpans(seeds.map(_.size).max, nSub)
+    var cents = spans.map { case (start, len) =>
+      seeds.map(_.slice(start, start + len))
+    }
     var i = 0
     while (i < iters) {
       val assigned = q.select($"vec_id" +:
@@ -582,13 +545,12 @@ object Similarity {
         (r.getLong(3), r.getLong(4))).toMap
       cents = cents.indices.map { m =>
         IndexedSeq.tabulate(cents(m).size) { c =>
-          val dims = (0 until spans(m)._2).map(d => upd.get((m, c, d)))
-          if (dims.exists(_.isEmpty)) cents(m)(c)
-          else dims.map { case Some((s, n)) =>
-            // same double tree as kmeansStep/centroidsOf:
-            // floor((sum_q * 1.0 / 1000.0 / n) * 1000)
+          val cv = cents(m)(c)
+          val dims = cv.indices.map(d => upd.get((m, c, d)))
+          if (dims.exists(_.isEmpty)) cv
+          else dims.flatten.map { case (s, n) =>
             math.floor(s * 1.0 / 1000.0 / n * 1000).toLong
-          case None => 0L }
+          }
         }
       }
       i += 1
@@ -723,8 +685,7 @@ object Similarity {
                   r: Int = 64): DataFrame = {
     graft.functions.Registry.ensure(embeddings.sparkSession)
     val cents = pqTrainDriver(embeddings, nSub, kCodes, iters)
-    val qRows = quantizedNonEmpty(embeddings)
-      .filter($"vec_id" < nQueries).orderBy($"vec_id").collect()
+    val qRows = queryRows(embeddings, nQueries)
     if (cents.head.isEmpty || qRows.isEmpty)
       return embeddings.select($"vec_id".as("query_id"), $"vec_id",
         lit(0L).as("adc_d2"), lit(0).as("rank")).filter(lit(false))
@@ -792,8 +753,7 @@ object Similarity {
              rerank: Option[Int] = None): DataFrame = {
     graft.functions.Registry.ensure(embeddings.sparkSession)
     val cents = pqTrainDriver(embeddings, nSub, kCodes, iters)
-    val qRows = quantizedNonEmpty(embeddings)
-      .filter($"vec_id" < nQueries).orderBy($"vec_id").collect()
+    val qRows = queryRows(embeddings, nQueries)
     if (cents.head.isEmpty || qRows.isEmpty)
       return embeddings.select($"vec_id".as("query_id"), $"vec_id",
         lit(0L).as("d2"), lit(0).as("rank")).filter(lit(false))
@@ -972,23 +932,34 @@ object Similarity {
     adcScanCore(encodeCellsLit(embeddings, cents, coarse, byResidual),
       cents, coarse, qRows, probeMap(coarse, qRows, nProbe), r, byResidual)
 
+  /** IVFPQ training, shared by the in-session searches and
+    * [[ivfpqWriteIndex]]: the coarse quantizer ([[kmeansCents]], sorted
+    * by cid) and the PQ sub-codebooks, both driver-resident. Residual
+    * mode trains the sub-codebooks on (v − coarse centroid) — FAISS's
+    * by_residual default: residual magnitudes are smaller than raw
+    * coordinates, so the same kCodes span a finer grid.
+    */
   private def ivfpqTrained(embeddings: DataFrame, nCells: Int, nSub: Int,
-      kCodes: Int, iters: Int, nQueries: Int,
-      byResidual: Boolean = false) = {
-    val coarse = kmeansTrain(embeddings, nCells, iters).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1))).toIndexedSeq.sortBy(_._1)
-    // residual mode trains the sub-codebooks on (v − coarse centroid)
-    // — FAISS's by_residual default: residual magnitudes are smaller
-    // than raw coordinates, so the same kCodes span a finer grid
+      kCodes: Int, iters: Int, byResidual: Boolean)
+      : (IndexedSeq[(Long, Seq[Long])], IndexedSeq[IndexedSeq[Seq[Long]]]) = {
+    val coarse = kmeansCents(
+      embeddings.select($"vec_id", Vec.quantize($"embedding").as("v")),
+      nCells, iters, neutralSeeds = false)
     val cents =
       if (byResidual && coarse.nonEmpty)
         pqTrainDriverQ(residualFrame(embeddings, coarse)
           .select($"vec_id", $"v"), nSub, kCodes, iters)
       else pqTrainDriver(embeddings, nSub, kCodes, iters)
-    val qRows = quantizedNonEmpty(embeddings)
-      .filter($"vec_id" < nQueries).orderBy($"vec_id").collect()
-    (coarse, cents, qRows)
+    (coarse, cents)
   }
+
+  /** The query set every top-k search here uses: the non-empty
+    * vectors with vec_id < nQueries, as (vec_id, v) rows in id order.
+    */
+  private def queryRows(embeddings: DataFrame,
+      nQueries: Int): Array[org.apache.spark.sql.Row] =
+    quantizedNonEmpty(embeddings)
+      .filter($"vec_id" < nQueries).orderBy($"vec_id").collect()
 
   /** IVFPQ shortlist with its own training pass — exposed so the
     * candidate-volume law (∝ nProbe/nCells at constant occupancy) is
@@ -999,9 +970,9 @@ object Similarity {
                      iters: Int = 3, nQueries: Int = 10,
                      r: Int = 64, byResidual: Boolean = false): DataFrame = {
     graft.functions.Registry.ensure(embeddings.sparkSession)
-    val (coarse, cents, qRows) =
-      ivfpqTrained(embeddings, nCells, nSub, kCodes, iters, nQueries,
-        byResidual)
+    val (coarse, cents) =
+      ivfpqTrained(embeddings, nCells, nSub, kCodes, iters, byResidual)
+    val qRows = queryRows(embeddings, nQueries)
     if (coarse.isEmpty || cents.head.isEmpty || qRows.isEmpty)
       return embeddings.select($"vec_id".as("query_id"), $"vec_id",
         lit(0L).as("cid"), lit(0L).as("adc_d2"), lit(0).as("rank"))
@@ -1064,9 +1035,22 @@ object Similarity {
                 rerank: Option[Int] = None,
                 byResidual: Boolean = false): DataFrame = {
     graft.functions.Registry.ensure(embeddings.sparkSession)
-    val (coarse, cents, qRows) =
-      ivfpqTrained(embeddings, nCells, nSub, kCodes, iters, nQueries,
-        byResidual)
+    val (coarse, cents) =
+      ivfpqTrained(embeddings, nCells, nSub, kCodes, iters, byResidual)
+    ivfpqSearch(embeddings, coarse, cents, nProbe, nQueries, k, rerank,
+      byResidual)
+  }
+
+  /** The search half of [[ivfpqTopK]] and [[ivfpqTopKSampled]]: the
+    * [[ivfpqCore]] shortlist over trained quantizers, re-ranked
+    * exactly.
+    */
+  private def ivfpqSearch(embeddings: DataFrame,
+      coarse: IndexedSeq[(Long, Seq[Long])],
+      cents: IndexedSeq[IndexedSeq[Seq[Long]]], nProbe: Int,
+      nQueries: Int, k: Int, rerank: Option[Int],
+      byResidual: Boolean): DataFrame = {
+    val qRows = queryRows(embeddings, nQueries)
     if (coarse.isEmpty || cents.head.isEmpty || qRows.isEmpty)
       return embeddings.select($"vec_id".as("query_id"), $"vec_id",
         lit(0L).as("d2"), lit(0).as("rank")).filter(lit(false))
@@ -1116,8 +1100,7 @@ object Similarity {
     *  - `meta/` — one row: (n_cells, n_sub, k_codes, by_residual), so
     *    a search opens the index without out-of-band knowledge.
     *
-    * Training is [[kmeansTrain]] + [[pqTrainDriver]] exactly as in
-    * [[ivfpqTopK]], and the encode pass is the same one map-only
+    * Training is [[ivfpqTrained]], exactly as in [[ivfpqTopK]], and the encode pass is the same one map-only
     * projection — so a stored search returns byte-identical results
     * to the in-session path (spec-pinned).
     */
@@ -1130,16 +1113,9 @@ object Similarity {
     // narrow implicits: the full spark.implicits._ would shadow the
     // package-level $ interpolator
     import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
-    val coarseFrame = kmeansTrain(embeddings, nCells, iters)
-      .localCheckpoint(true)
-    val coarse = coarseFrame.collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1))).toIndexedSeq.sortBy(_._1)
-    val cents =
-      if (byResidual && coarse.nonEmpty)
-        pqTrainDriverQ(residualFrame(embeddings, coarse)
-          .select($"vec_id", $"v"), nSub, kCodes, iters)
-      else pqTrainDriver(embeddings, nSub, kCodes, iters)
-    coarseFrame.write.mode("overwrite").parquet(s"$dir/coarse")
+    val (coarse, cents) =
+      ivfpqTrained(embeddings, nCells, nSub, kCodes, iters, byResidual)
+    centroidFrame(spark, coarse).write.mode("overwrite").parquet(s"$dir/coarse")
     cents.zipWithIndex.flatMap { case (cb, sub) =>
       cb.zipWithIndex.map { case (cv, code) => (sub, code, cv) }
     }.toDF("sub", "code", "cv")
@@ -1293,21 +1269,13 @@ object Similarity {
                        rerank: Option[Int] = None,
                        cap: Long = TrainSampleCap): DataFrame = {
     graft.functions.Registry.ensure(embeddings.sparkSession)
-    val sample = trainingSample(embeddings, cap).localCheckpoint(true)
-    val coarse = kmeansTrainOnSample(sample, nCells, iters).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1))).toIndexedSeq.sortBy(_._1)
-    val cents = pqTrainDriverQ(quantizedNonEmpty(sample), nSub, kCodes,
-      iters, seedLimit = true)
-    val qRows = quantizedNonEmpty(embeddings)
-      .filter($"vec_id" < nQueries).orderBy($"vec_id").collect()
-    if (coarse.isEmpty || cents.head.isEmpty || qRows.isEmpty)
-      return embeddings.select($"vec_id".as("query_id"), $"vec_id",
-        lit(0L).as("d2"), lit(0).as("rank")).filter(lit(false))
-    val dim = qRows.head.getSeq[Long](1).size
-    val r = rerank.getOrElse(autoRerank(embeddings, dim))
-    val short = ivfpqCore(embeddings, cents, coarse, qRows, nProbe, r)
-      .select($"query_id", $"vec_id")
-    exactRerank(embeddings, short, qRows, k)
+    val sample = quantizedNonEmpty(
+      trainingSample(embeddings, cap).localCheckpoint(true))
+    val coarse = kmeansCents(sample, nCells, iters, neutralSeeds = true)
+    val cents = pqTrainDriverQ(sample, nSub, kCodes, iters,
+      neutralSeeds = true)
+    ivfpqSearch(embeddings, coarse, cents, nProbe, nQueries, k, rerank,
+      byResidual = false)
   }
 
   private def readCoarse(spark: org.apache.spark.sql.SparkSession,
@@ -1327,8 +1295,7 @@ object Similarity {
     val spark = embeddings.sparkSession
     graft.functions.Registry.ensure(spark)
     val coarse = readCoarse(spark, indexDir)
-    val qRows = quantizedNonEmpty(embeddings)
-      .filter($"vec_id" < nQueries).orderBy($"vec_id").collect()
+    val qRows = queryRows(embeddings, nQueries)
     if (coarse.isEmpty || qRows.isEmpty) Seq.empty
     else probeMap(coarse, qRows, nProbe).values.flatten.toSeq.distinct.sorted
   }
@@ -1352,8 +1319,7 @@ object Similarity {
     val cents = readCodebooks(spark, indexDir)
     val byResidual = spark.read.parquet(s"$indexDir/meta").head()
       .getAs[Boolean]("by_residual")
-    val qRows = quantizedNonEmpty(embeddings)
-      .filter($"vec_id" < nQueries).orderBy($"vec_id").collect()
+    val qRows = queryRows(embeddings, nQueries)
     if (coarse.isEmpty || cents.head.isEmpty || qRows.isEmpty)
       return embeddings.select($"vec_id".as("query_id"), $"vec_id",
         lit(0L).as("d2"), lit(0).as("rank")).filter(lit(false))
@@ -2456,12 +2422,13 @@ object Similarity {
     * radius certificate at selection time, monotone non-increasing.
     *
     * Scale shape: the min-distance-so-far frame is maintained
-    * incrementally — each round is one `least(md, d2-to-new-center)`
-    * projection over the corpus (the new center is a driver-resident
-    * 64-long literal) + one distributed top-1 (`orderBy.limit(1)` —
-    * Spark's TakeOrdered, a per-partition top-1 then a k-way driver
-    * merge, never a single-partition sort), localCheckpointed per
-    * round so lineage stays flat (the q66 discipline). k bounded
+    * incrementally as an RDD held by [[DriverLoop]] — each round is
+    * one `least(md, d2-to-new-center)` projection over the corpus (the
+    * new center is a driver-resident 64-long literal) + one
+    * distributed top-1 (`orderBy.limit(1)` — Spark's TakeOrdered, a
+    * per-partition top-1 then a k-way driver merge, never a
+    * single-partition sort), in ONE job that also materializes the
+    * new frame, after which the previous one is released. k bounded
     * driver rounds with a 1-row certificate collect each — the BPE
     * merge-table pattern. All integer math on the 1/1000 grid, so
     * the pick sequence is partitioning-invariant and hash-oracles
@@ -2485,23 +2452,28 @@ object Similarity {
     if (seedRow.isEmpty)
       return Seq.empty[(Int, Long, Long)].toDF("round", "vec_id", "maxmin_d2")
     val seed = seedRow(0)
-    var picked = Vector((1, seed.getLong(0), 0L))
-    var mind = q0.filter($"vec_id" =!= seed.getLong(0))
+    val first = q0.filter($"vec_id" =!= seed.getLong(0))
       .select($"vec_id", $"v", d2To(seed.getSeq[Long](1)).as("md"))
-      .localCheckpoint(true)
-    var r = 2
-    var exhausted = false
-    while (r <= k && !exhausted) {
-      val top = mind.orderBy($"md".desc, $"vec_id").limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val t = top(0)
-        picked = picked :+ ((r, t.getLong(0), t.getLong(2)))
-        mind = mind.filter($"vec_id" =!= t.getLong(0))
-          .select($"vec_id", $"v",
-            least($"md", d2To(t.getSeq[Long](1))).as("md"))
-          .localCheckpoint(true)
-        r += 1
+    def frame(rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) =
+      spark.createDataFrame(rows, first.schema)
+    def farthest(rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) =
+      frame(rows).orderBy($"md".desc, $"vec_id").limit(1).collect().headOption
+    var picked = Vector((1, seed.getLong(0), 0L))
+    DriverLoop { loop =>
+      var mind = loop.hold(first.rdd)
+      var top = if (k > 1) farthest(mind) else None
+      while (top.nonEmpty) {
+        val t = top.get
+        picked = picked :+ ((picked.size + 1, t.getLong(0), t.getLong(2)))
+        top = if (picked.size >= k) None else {
+          val next = frame(mind).filter($"vec_id" =!= t.getLong(0))
+            .select($"vec_id", $"v",
+              least($"md", d2To(t.getSeq[Long](1))).as("md"))
+            .rdd
+          val nextTop = loop.replace(mind, next)(farthest)
+          mind = next
+          nextTop
+        }
       }
     }
     picked.toDF("round", "vec_id", "maxmin_d2").orderBy($"round")

@@ -328,57 +328,6 @@ object TextAnalysis {
       .orderBy($"n".desc, $"pair")
       .limit(k)
 
-  /** Full BPE merge-table training (Sennrich et al. 2016, "Neural
-    * Machine Translation of Rare Words with Subword Units") — the
-    * tokenizer-vocabulary learner [[bpePairFreq]]'s scaladoc promises:
-    * start from characters, repeatedly merge the most frequent
-    * adjacent symbol pair, emit the learned merge table
-    * (step, left, right, merged, freq).
-    *
-    * Scale shape: the corpus is scanned ONCE — BPE statistics live on
-    * the word VOCABULARY (distinct word → count), which the first
-    * groupBy collapses to ~10⁸ rows at 100 TB, orders of magnitude
-    * below the corpus. Every merge ROUND then runs on that vocab
-    * frame only: an adjacent-pair count whose keyspace is bounded by
-    * symbols² (map-side combine shrinks it to almost nothing), a
-    * `limit(maxBatch+1)` ranked collect — a bounded driver
-    * certificate, the same pattern as [[Dedup.dupClusters]] — and an
-    * `aggregate` left-fold that rewrites each word's symbol array in
-    * place (greedy left-to-right, so "aaa" merges to ["aa","a"] like
-    * the reference implementation). `localCheckpoint` per round
-    * bounds the growing lineage exactly as the label-propagation
-    * loop does. Determinism: ties break (freq DESC, left ASC,
-    * right ASC), so the merge table is a pure function of the corpus.
-    *
-    * MERGE BATCHING (round 12): the driver loop is the measured
-    * wall-clock floor (~0.14 s/round ⇒ ~25 min for a 10k-merge
-    * production train), so each round applies up to `maxBatch`
-    * NON-INTERACTING merges instead of one. The batch is the maximal
-    * prefix of the (freq DESC, left ASC, right ASC)-ranked pair list
-    * that stays pairwise disjoint over each pair's THREE symbols
-    * {l, r, l+r} (so no batched merge can consume or produce another
-    * batched merge's symbols), shrunk until the last selected count
-    * strictly exceeds the first excluded count. That prefix is
-    * provably the exact sequence sequential Sennrich training would
-    * pick: disjointness preserves every selected pair's own count
-    * under the earlier merges in the batch (merging never makes two
-    * previously non-adjacent symbols adjacent), and any pair NEWLY
-    * created by a batched merge is bounded by the count of a parent
-    * pair that shares a symbol with it — a pair that, being a sharer,
-    * ranks strictly below the selected prefix, so the strict count
-    * drop keeps every newborn below every selected count. A batch of
-    * size 1 is the plain argmax with no side condition. The k
-    * disjoint rewrites fuse into ONE `aggregate` pass (disjoint rules
-    * commute and cannot chain), so a round costs one collect + one
-    * checkpoint regardless of batch size — BpeMergeProbe measures the
-    * round-trip reduction (≥4× at 100 merges on the sf0.1 corpus).
-    * `maxBatch = 1` reproduces the pre-batching loop exactly; the
-    * batched≡unbatched table equality is spec-pinned (NewOpsSpec).
-    *
-    * Iterative and therefore not SQL-expressible in one statement —
-    * rows-only in the oracle gate, with planted-corpus specs pinning
-    * the classic merge sequences.
-    */
   /** UTF-8 binary string ordering — identical to Spark SQL's
     * UTF8String/string sort order (byte-wise unsigned), which differs
     * from java.lang.String's UTF-16 code-unit order for supplementary
@@ -398,6 +347,55 @@ object TextAnalysis {
     x.length - y.length
   }
 
+  /** Full BPE merge-table training (Sennrich et al. 2016, "Neural
+    * Machine Translation of Rare Words with Subword Units") — the
+    * tokenizer-vocabulary learner [[bpePairFreq]]'s scaladoc promises:
+    * start from characters, repeatedly merge the most frequent
+    * adjacent symbol pair, emit the learned merge table
+    * (step, left, right, merged, freq).
+    *
+    * Scale shape: the corpus is scanned ONCE — BPE statistics live on
+    * the word VOCABULARY (distinct word → count), which the first
+    * groupBy collapses to ~10⁸ rows at 100 TB, orders of magnitude
+    * below the corpus. Every merge ROUND then runs on that vocab RDD
+    * only, held by [[DriverLoop]]: per-partition adjacent-pair counts
+    * whose keyspace is bounded by symbols², a bounded top-(maxBatch+1)
+    * collect — the driver certificate, the same pattern as
+    * [[Dedup.dupClusters]] — and a per-word greedy left-to-right
+    * rewrite of the symbol array (so "aaa" merges to ["aa","a"] like
+    * the reference implementation) that replaces the vocab RDD.
+    * Determinism: ties break (freq DESC, left ASC, right ASC) in
+    * UTF-8 binary order, so the merge table is a pure function of the
+    * corpus.
+    *
+    * MERGE BATCHING: the driver loop is the wall-clock floor
+    * (~0.14 s/round ⇒ ~25 min for a 10k-merge production train), so
+    * each round applies up to `maxBatch` NON-INTERACTING merges
+    * instead of one. The batch is the maximal prefix of the (freq
+    * DESC, left ASC, right ASC)-ranked pair list that stays pairwise
+    * disjoint over each pair's THREE symbols {l, r, l+r} (so no
+    * batched merge can consume or produce another batched merge's
+    * symbols), shrunk until the last selected count strictly exceeds
+    * the first excluded count. That prefix is provably the exact
+    * sequence sequential Sennrich training would pick: disjointness
+    * preserves every selected pair's own count under the earlier
+    * merges in the batch (merging never makes two previously
+    * non-adjacent symbols adjacent), and any pair NEWLY created by a
+    * batched merge is bounded by the count of a parent pair that
+    * shares a symbol with it — a pair that, being a sharer, ranks
+    * strictly below the selected prefix, so the strict count drop
+    * keeps every newborn below every selected count. A batch of size
+    * 1 is the plain argmax with no side condition. The k disjoint
+    * rewrites fuse into ONE per-word fold (disjoint rules commute and
+    * cannot chain), and the next round's pair count materializes the
+    * rewrite, so a round is one job regardless of batch size.
+    * `maxBatch = 1` is the sequential loop; the batched≡unbatched table equality is
+    * spec-pinned (NewOpsSpec).
+    *
+    * Iterative and therefore not SQL-expressible in one statement —
+    * rows-only in the oracle gate, with planted-corpus specs pinning
+    * the classic merge sequences.
+    */
   def bpeTrain(documents: DataFrame, nMerges: Int = 10,
                vocabSizeProbe: Option[scala.collection.mutable.Buffer[Long]] =
                  None,
@@ -407,23 +405,19 @@ object TextAnalysis {
     // only the Seq→DF conversion; the full implicits would shadow the
     // package-level $ column interpolator
     import spark.implicits.{newProductEncoder, localSeqToDatasetHolder}
-    // r20 (guide §1.2, the q117/q66 precedent): the merge rounds leave
-    // Catalyst. The corpus scan + distinct-word collapse stays SQL;
-    // the loop state — one (syms, freq) row per distinct word — is an
-    // RDD, each round ONE job: per-partition adjacent-pair counting
-    // into a local map, a bounded top-(maxBatch+1) collect (same
-    // (n desc, l, r) order, UTF-8-binary tie-break), and the batched
-    // greedy rewrite as a plain per-row fold. The r19 form re-planned
-    // and re-codegen'd a ~16-rule nested-CASE aggregate expression per
-    // round — most of q100/q102's wall time was that analysis, not
-    // executor work.
-    var vocab = documents
+    // The merge rounds run outside Catalyst (re-planning a nested-CASE
+    // rewrite expression per round cost more than the round's work):
+    // the corpus scan and distinct-word collapse stay SQL, the loop
+    // state — one (syms, freq) row per distinct word — is an RDD, and
+    // each round is ONE job: per-partition pair counts reduced to the
+    // bounded top-(maxBatch+1), which also materializes the previous
+    // round's rewrite.
+    val words = documents
       .select(explode(tokens(lower($"text"))).as("w"))
       .filter($"w" =!= "")
       .groupBy($"w").agg(count(lit(1)).as("freq"))
       .select(split($"w", "").as("syms"), $"freq")
       .rdd.map(r => (r.getSeq[String](0).toArray, r.getLong(1)))
-      .persist()
     // top-k ordering: n DESC, then l, r ASC in UTF-8 binary order —
     // rdd.top takes the LARGEST elements, so the string legs reverse
     val rankOrd = new Ordering[((String, String), Long)] {
@@ -435,77 +429,79 @@ object TextAnalysis {
         utf8Compare(b._1._2, a._1._2)
       }
     }
+    def rankPairs(vocab: org.apache.spark.rdd.RDD[(Array[String], Long)]) =
+      vocab
+        .mapPartitions { it =>
+          val acc = new java.util.HashMap[(String, String), Long]()
+          it.foreach { case (syms, freq) =>
+            var i = 0
+            while (i < syms.length - 1) {
+              acc.merge((syms(i), syms(i + 1)), freq, _ + _)
+              i += 1
+            }
+          }
+          import scala.jdk.CollectionConverters._
+          acc.entrySet().iterator().asScala.map(e => (e.getKey, e.getValue))
+        }
+        .reduceByKey(_ + _)
+        .top(maxBatch + 1)(rankOrd)
+        .map { case ((l, r), n) => (l, r, n) }
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
     var step = 1
-    var exhausted = false
-    try {
-      // test-only instrumentation: record the vocab-frame row count per
+    DriverLoop { loop =>
+      var vocab = loop.hold(words)
+      // test-only instrumentation: record the vocab row count per
       // ROUND (init + one per rewrite) so the scale invariant (the loop
       // runs on a frame that never grows — one row per distinct word,
       // constant across merges) is assertable. None in production.
       vocabSizeProbe.foreach(_ += vocab.count())
-      while (step <= nMerges && !exhausted) {
-        val ranked = vocab
-          .mapPartitions { it =>
-            val acc = new java.util.HashMap[(String, String), Long]()
-            it.foreach { case (syms, freq) =>
-              var i = 0
-              while (i < syms.length - 1) {
-                acc.merge((syms(i), syms(i + 1)), freq, _ + _)
-                i += 1
-              }
-            }
-            import scala.jdk.CollectionConverters._
-            acc.entrySet().iterator().asScala.map(e => (e.getKey, e.getValue))
-          }
-          .reduceByKey(_ + _)
-          .top(maxBatch + 1)(rankOrd)
-          .map { case ((l, r), n) => (l, r, n) }
-        if (ranked.isEmpty) exhausted = true
-        else {
-          // maximal pairwise-disjoint prefix over {l, r, l+r}, capped by
-          // the remaining merge budget (see batching scaladoc)
-          val cap = math.min(maxBatch, nMerges - step + 1)
-          val used = scala.collection.mutable.Set.empty[String]
-          var k = 0
-          var blocked = false
-          while (!blocked && k < math.min(cap, ranked.length)) {
-            val (l, r, _) = ranked(k)
-            val syms = Seq(l, r, l + r)
-            if (syms.exists(used.contains)) blocked = true
-            else { used ++= syms; k += 1 }
-          }
-          // rank-safety: a pair NEWLY created by a batched merge is
-          // count-bounded by a symbol-sharing parent ranked below the
-          // prefix; shrink until the last selected count strictly
-          // exceeds the first excluded one so no newborn can tie or
-          // pass a selected merge. k == ranked.length (< limit) means
-          // the pair table is complete AND fully disjoint — then no
-          // sharer exists to parent a newborn, no condition needed.
-          if (k < ranked.length)
-            while (k > 1 && ranked(k - 1)._3 <= ranked(k)._3) k -= 1
-          val batch = ranked.take(k)
-          batch.foreach { case (l, r, n) =>
-            merges += ((step, l, r, l + r, n))
-            step += 1
-          }
-          // greedy left-to-right merge: once (l,r) fuses, the fused
-          // symbol is l+r and cannot re-pair as l with a following r.
-          // The k disjoint rules fold in ONE pass: rules share no
-          // symbols (and no rule's input is another's output), so the
-          // combined fold equals applying each rule's fold in rank
-          // order — one pass per round, not per merge.
-          val rules = batch.map { case (l, r, _) => (l, r) }
-          val prev = vocab
-          vocab = vocab.map { case (syms, freq) =>
-            (bpeGreedyFold(syms, rules), freq)
-          }.persist()
-          vocabSizeProbe.foreach(_ += vocab.count())
-          if (vocabSizeProbe.isEmpty) vocab.count() // materialize this round
-          prev.unpersist(false)
+      var ranked = rankPairs(vocab)
+      while (step <= nMerges && ranked.nonEmpty) {
+        // maximal pairwise-disjoint prefix over {l, r, l+r}, capped by
+        // the remaining merge budget (see batching scaladoc)
+        val cap = math.min(maxBatch, nMerges - step + 1)
+        val used = scala.collection.mutable.Set.empty[String]
+        var k = 0
+        var blocked = false
+        while (!blocked && k < math.min(cap, ranked.length)) {
+          val (l, r, _) = ranked(k)
+          val syms = Seq(l, r, l + r)
+          if (syms.exists(used.contains)) blocked = true
+          else { used ++= syms; k += 1 }
         }
+        // rank-safety: a pair NEWLY created by a batched merge is
+        // count-bounded by a symbol-sharing parent ranked below the
+        // prefix; shrink until the last selected count strictly
+        // exceeds the first excluded one so no newborn can tie or
+        // pass a selected merge. k == ranked.length (< limit) means
+        // the pair table is complete AND fully disjoint — then no
+        // sharer exists to parent a newborn, no condition needed.
+        if (k < ranked.length)
+          while (k > 1 && ranked(k - 1)._3 <= ranked(k)._3) k -= 1
+        val batch = ranked.take(k)
+        batch.foreach { case (l, r, n) =>
+          merges += ((step, l, r, l + r, n))
+          step += 1
+        }
+        // greedy left-to-right merge: once (l,r) fuses, the fused
+        // symbol is l+r and cannot re-pair as l with a following r.
+        // The k disjoint rules fold in ONE pass: rules share no
+        // symbols (and no rule's input is another's output), so the
+        // combined fold equals applying each rule's fold in rank
+        // order — one pass per round, not per merge.
+        val rules = batch.map { case (l, r, _) => (l, r) }
+        val next = vocab.map { case (syms, freq) =>
+          (bpeGreedyFold(syms, rules), freq)
+        }
+        // once the budget is spent the rewrite is never read, so
+        // nothing materializes it (except the test-only probe)
+        ranked = loop.replace(vocab, next) { v =>
+          vocabSizeProbe.foreach(_ += v.count())
+          if (step <= nMerges) rankPairs(v) else Array.empty[(String, String, Long)]
+        }
+        vocab = next
       }
-    } finally vocab.unpersist(false)
+    }
     merges.toSeq.toDF("step", "left", "right", "merged", "freq")
   }
 
@@ -552,24 +548,13 @@ object TextAnalysis {
     * Scale shape: the merge table is driver-resident by construction
     * (one row per merge round — [[bpeTrain]]'s bounded certificate),
     * and the rewrite runs on the distinct-word vocabulary, never the
-    * corpus. Merges apply in column-expression batches of
-    * [[BpeFoldBatch]] with a `localCheckpoint` between batches: the
-    * batch keeps the fold inside one projection, the checkpoint stops
-    * a production-size table (1000s of merges) from growing an
-    * expression tree past what codegen tolerates.
+    * corpus: one map over the words, each folded through the merges
+    * one rule at a time. A plain per-row loop, not column
+    * expressions, so a production-size table (1000s of merges) costs
+    * no analysis or codegen and never grows an expression tree.
     */
-  val BpeFoldBatch = 8
-
   def bpeApplyMerges(vocabWords: DataFrame,
                      merges: Seq[(String, String)]): DataFrame = {
-    // r20: the per-merge fold runs as a plain per-row loop (RDD map)
-    // instead of [[BpeFoldBatch]]-chunked nested `aggregate` column
-    // expressions with a checkpoint per chunk — analyzing/codegen'ing
-    // those expression towers was most of q102's wall time, while the
-    // fold itself is vocabulary-sized. Rank-order sequential
-    // one-rule folds, exactly the pre-r20 semantics (spec-pinned
-    // against the plain-Scala reference encoder, and differentially
-    // against the old column fold).
     val spark = vocabWords.sparkSession
     val out = vocabWords.select($"w").rdd.map { row =>
       val w = row.getString(0)

@@ -464,6 +464,19 @@ class DedupSimilaritySpec extends AnyFunSuite {
       assert(got == ref, s"RDD label propagation diverged " +
         s"(first diff: ${got.zip(ref).find(p => p._1 != p._2).take(1)})")
     }
+    // non-convergence fails loudly and still releases the loop state:
+    // the chain 1-2-3 needs two rounds to settle, one is allowed
+    import spark.implicits._
+    val chain = Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma"))
+      .toDF("doc_id", "text")
+    val near = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val err = intercept[IllegalArgumentException](
+      Dedup.dupClustersFrom(chain, near, maxIters = 1))
+    assert(err.getMessage.contains(
+      "label propagation did not converge in 1 rounds"), err.getMessage)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted,
+      "label propagation left its loop RDDs persisted after failing")
   }
 
   test("native dot product returns NULL on ragged vectors like the HOF twin") {

@@ -1498,8 +1498,11 @@ class NewOpsSpec extends AnyFunSuite {
   test("k-center: output equals an exact driver replay; radius monotone") {
     import spark.implicits._
     val emb = Tables.embeddings(spark, dir)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     val out = Similarity.kcenterSample(emb).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted,
+      "kcenterSample left its per-round distance frames persisted")
     // exact greedy replay on the driver (bounded corpus at sf0.001)
     val vecs = emb.select($"vec_id",
       expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS LONG))").as("v"))
