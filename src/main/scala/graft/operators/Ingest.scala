@@ -106,8 +106,8 @@ object Ingest {
 
   /** Kafka-message round trip: serialize events to the JSON wire shape
     * the reference's producers emit (real_data_etl.py:43-50 crypto
-    * records: timestamp/id/value/source), then parse back with an
-    * explicit schema — `to_json`/`from_json` are the codegen'd
+    * records: timestamp/id/value/source), then parse back with the
+    * declared wire schema — `to_json`/`from_json` are the codegen'd
     * serde pair a Spark Kafka source/sink uses.
     */
   def kafkaRoundTrip(events: DataFrame): DataFrame = {
@@ -122,10 +122,8 @@ object Ingest {
           $"event_type".as("kind"),
           $"value".as("value"),
           lit("events").as("source"))).as("json"))
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "timestamp BIGINT, kind STRING, value DOUBLE, source STRING")
     wire
-      .withColumn("rec", from_json($"json", schema))
+      .withColumn("rec", from_json($"json", graft.streaming.EventStream.wireSchema))
       .select(
         $"event_id",
         $"rec.timestamp".as("timestamp"),

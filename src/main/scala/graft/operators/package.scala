@@ -34,14 +34,22 @@ package operators {
 
     /** Conditional fan-out for a CPU-dense per-row stage right after a
       * scan (guide §2.5 "input skew: one huge unsplittable file …
-      * repartition immediately after the read"): when the input is too
-      * small for the scan itself to parallelize (fewer splits than
-      * cores — locally the single-row-group test files produce ONE
-      * scan task, so every tokenizer/regex/shingle kernel ran
-      * serially), hash-repartition on the row key so the heavy work
-      * uses every core. When the scan is already at least
-      * core-parallel (any at-scale corpus), this is the identity — no
-      * extra corpus shuffle is ever introduced at scale.
+      * repartition immediately after the read"): locally the
+      * single-row-group test files produce ONE scan task, so every
+      * tokenizer/regex/shingle kernel would run serially. This
+      * hash-repartitions on the row key into
+      * `min(defaultParallelism, bytes / FanGranularity)` partitions
+      * (`bytes` is the optimizer's size estimate) — one task per
+      * 64 KiB of compressed input, capped at the core count, not
+      * "every core" regardless of size.
+      *
+      * It is the identity in two cases:
+      *   - the input is at least `defaultParallelism ×
+      *     filesMaxPartitionBytes`, so the scan already splits into at
+      *     least one task per core (any at-scale corpus — no extra
+      *     corpus shuffle is introduced at scale);
+      *   - the input is under 2 × `FanGranularity` (128 KiB), where the
+      *     width would be 1 and a shuffle buys nothing.
       */
     def fan(df: DataFrame, key: Column): DataFrame = {
       val spark = df.sparkSession
@@ -58,8 +66,8 @@ package operators {
       else df.repartition(parts, key)
     }
 
-    /** Compressed-input bytes per fanned task (~0.5 MB of raw text at
-      * typical parquet text compression).
+    /** Compressed-input bytes per fanned task: ~0.5 MB of raw text,
+      * assuming parquet compresses text about 8:1.
       */
     val FanGranularity: Long = 64L * 1024
 

@@ -25,18 +25,13 @@ object CatalogMeta {
     */
   def describeTables(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits.{newProductEncoder, localSeqToDatasetHolder}
-    // The catalog reports ON-DISK types (storage, not engine
-    // normalization): a nanos-era events.ts surfaces as bigint
-    // (nanosAsLong), the current NTZ-micros era as timestamp_ntz.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val dfs = Tables.names.map(t => t -> Tables.load(spark, dir, t))
-    val schemaRows = dfs.flatMap { case (t, df) =>
-      df.schema.fields.zipWithIndex.map { case (f, i) =>
-        (t, i, f.name, f.dataType.simpleString)
-      }
-    }.toDF("table_name", "ordinal", "column_name", "data_type")
-    val counts = dfs.map { case (t, df) =>
-      df.agg(count(lit(1)).as("n_rows"))
+    // the catalog reports ON-DISK types (storage, not the declared
+    // contract): the generated events.ts is timestamp_ntz here
+    val schemaRows = (for (t <- Tables.names;
+        ((c, ty), i) <- Tables.footerTypes(spark, s"$dir/$t.parquet").zipWithIndex)
+      yield (t, i, c, ty)).toDF("table_name", "ordinal", "column_name", "data_type")
+    val counts = Tables.names.map { t =>
+      Tables.load(spark, dir, t).agg(count(lit(1)).as("n_rows"))
         .select(lit(t).as("table_name"), col("n_rows"))
     }.reduce(_ unionByName _)
     schemaRows.join(broadcast(counts), Seq("table_name"))

@@ -43,11 +43,8 @@ object SqlServer {
     // live session). Clients address them as global_temp.<table>; a
     // production deployment would instead persist the catalog to a
     // metastore (saveAsTable) and drop the prefix.
-    Tables.names.foreach { t =>
-      val df = if (t == "events") Tables.events(spark, dir)
-               else Tables.load(spark, dir, t)
-      df.createOrReplaceGlobalTempView(t)
-    }
+    Tables.names.foreach(t =>
+      Tables.load(spark, dir, t).createOrReplaceGlobalTempView(t))
     spark.sparkContext.hadoopConfiguration
       .set("hive.server2.thrift.port", port.toString)
     // HiveThriftServer2.startWithContext(SQLContext): HiveThriftServer2

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 import graft.functions.Exact.dsum
 
 /** Structured Streaming pipeline — SURVEY.md §2 block G.
@@ -15,37 +15,6 @@ import graft.functions.Exact.dsum
   * keep the query).
   */
 object EventStream {
-
-  /** Fallback schema for the events stream, used only when the source
-    * directory has no files yet (a normal startup mode for a file
-    * stream: open the stream, then files land). `ts` has shipped with
-    * three physical types across dataset eras — TIMESTAMP(NANOS)
-    * (surfaces as long under `nanosAsLong`), TIMESTAMP(MICROS,
-    * isAdjustedToUTC=false) (reads as TIMESTAMP_NTZ, the current era)
-    * and plain TIMESTAMP(MICROS) — so when files ARE present the
-    * schema is sniffed from a batch read of the same glob the stream
-    * uses, and this value declares the current-era shape for the
-    * empty-dir case. Either way [[fromRaw]] normalizes `ts` to
-    * session-TZ TimestampType before any watermark sees it.
-    *
-    * Known mixed-era failure mode (deliberate): a stream opened on an
-    * EMPTY dir locks in this NTZ schema, so if nanos-era files (ts as
-    * parquet TIMESTAMP(NANOS), surfacing as long) later land in that
-    * dir, the first micro-batch fails with a parquet type-convert
-    * error rather than being normalized. That is current-era-only by
-    * design — a dir that mixes eras got there by operator error, and
-    * the loud batch failure beats silently reinterpreting longs.
-    */
-  val rawSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", TimestampNTZType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
-  private def fromRaw(df: DataFrame): DataFrame =
-    graft.sources.Tables.normalizeEventTs(df)
 
   /** 5-minute windowed rollup per event_type (Druid
     * queryGranularity-style). Works identically on a bounded batch
@@ -68,81 +37,27 @@ object EventStream {
     windowRollup(events, watermarked = false)
       .orderBy(col("window_start"), col("event_type"))
 
-  /** Open the events directory as an unbounded stream.
+  /** Open the events directory as an unbounded stream on the declared
+    * `events` schema ([[graft.sources.Tables.schemas]]).
     *
-    * Same session-wide `nanosAsLong` side effect as
-    * [[graft.sources.Tables.events]] (see its scaladoc): the conf must
-    * stay on for the lifetime of the streaming query, so it is not
-    * restored.
+    * The contract is checked here, against the first committed file
+    * the stream's glob matches now, so drift or a corrupt file fails
+    * at open, where it names the source, not mid-stream as an opaque
+    * batch error. A source with no committed file yet (the glob
+    * matches nothing, or only `_temporary` spills, `_SUCCESS` markers
+    * and still-empty part files) is the normal "open the stream, then
+    * files land" startup and opens unchecked. The glob also covers
+    * layouts like `events.parquet_a/_b`.
     */
   def readEventStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Sniff the on-disk schema (nanos-era files surface ts as long,
-    // micros-era as timestamp_ntz) with the SAME glob the stream
-    // reads — batch reads expand globs, so sniff and stream always
-    // see the same files (a literal `events.parquet` path would miss
-    // glob-only layouts like `events.parquet_a/_b`). Only a
-    // not-yet-populated source falls back to the declared current-era
-    // schema so the stream can still start; any other open-time
-    // failure (corrupt footer, conflicting schemas across files)
-    // propagates HERE, where it names the bad source, instead of
-    // surfacing mid-stream as an opaque batch error against the
-    // fallback schema. "Not yet populated" is checked via the Hadoop
-    // FS API, NOT by catching AnalysisException, and covers (round
-    // 12) BOTH open-before-first-write shapes: the glob matching
-    // nothing, and the glob matching a directory the producer has
-    // created but not yet committed data into — only `_temporary`,
-    // `_SUCCESS`/dot-hidden entries, or still-zero-length part files
-    // (Spark's schema inference would throw "Unable to infer schema"
-    // on those, turning a benign startup race into an open failure).
     val glob = s"$dir/events.parque*"
-    val globPath = new org.apache.hadoop.fs.Path(glob)
-    val fs = globPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val matched = fs.globStatus(globPath) // null when parent dir absent
-    val onDisk =
-      if (matched == null || matched.isEmpty ||
-          !matched.exists(st => hasCommittedData(fs, st))) rawSchema
-      // sniff via the EXPANDED match set, not the glob string (r15):
-      // handing resolveRelation a glob makes FileStreamSink.hasMetadata
-      // stat the literal `...parque*` path and log a caught
-      // FileNotFoundException STACK TRACE — the q121/NetCdf logged-
-      // exception class, one layer down. Same files either way; the
-      // expansion is the `matched` list we already hold.
-      else spark.read.parquet(
-        matched.map(_.getPath.toString).toSeq: _*).schema
-    fromRaw(
-      spark.readStream.schema(onDisk)
-        // glob form: FileStreamSource force-overrides basePath with the
-        // source path unless it's a glob, and a file basePath breaks
-        // partition inference in getBatch
-        .option("basePath", dir)
-        .parquet(glob))
-  }
-
-  /** True when a glob-matched source entry holds at least one
-    * committed data file: a non-empty file whose path below the match
-    * root has no hidden component (leading `_` or `.` — `_temporary`
-    * spill dirs, `_SUCCESS` markers, dot-files). A match with none is
-    * a producer-created-but-unwritten source; [[readEventStream]]
-    * treats it like an unmatched glob and opens against the declared
-    * schema instead of failing the "open stream, then files land"
-    * startup race.
-    */
-  private def hasCommittedData(fs: org.apache.hadoop.fs.FileSystem,
-                               root: org.apache.hadoop.fs.FileStatus): Boolean = {
-    def hidden(name: String) = name.startsWith("_") || name.startsWith(".")
-    if (root.isFile) !hidden(root.getPath.getName) && root.getLen > 0
-    else {
-      val rootUri = root.getPath.toUri.getPath
-      val it = fs.listFiles(root.getPath, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val f = it.next()
-        val rel = f.getPath.toUri.getPath.stripPrefix(rootUri)
-        found = f.getLen > 0 && !rel.split("/").exists(hidden)
-      }
-      found
-    }
+    graft.sources.Tables.checkContract(spark, "events", glob)
+    spark.readStream.schema(graft.sources.Tables.schemas("events"))
+      // glob form: FileStreamSource force-overrides basePath with the
+      // source path unless it's a glob, and a file basePath breaks
+      // partition inference in getBatch
+      .option("basePath", dir)
+      .parquet(glob)
   }
 
   /** Checkpointed ingestion into a parquet sink: the durable
@@ -524,11 +439,8 @@ object EventStream {
     * (real_data_etl.py:43-50) — the same shape
     * [[graft.operators.Ingest.kafkaRoundTrip]] serdes.
     */
-  val wireSchema: StructType = StructType(Seq(
-    StructField("timestamp", LongType),
-    StructField("kind", StringType),
-    StructField("value", DoubleType),
-    StructField("source", StringType)))
+  val wireSchema: StructType =
+    StructType.fromDDL("timestamp BIGINT, kind STRING, value DOUBLE, source STRING")
 
   /** Kafka connector seam (reference demoKafka.py:14-93): when the
     * session sets [[KafkaBootstrapConf]], read the topic through

@@ -6,18 +6,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Tables
 import graft.streaming.EventStream
 
-/** Dataset-era tripwires. The `events.ts` physical type has shipped
-  * three ways across testdata regens (parquet TIMESTAMP(NANOS) —
-  * surfaces as long under `nanosAsLong`; TIMESTAMP(MICROS,
-  * isAdjustedToUTC=false) — surfaces as TIMESTAMP_NTZ; plain
-  * TIMESTAMP(MICROS)), and twice — rounds 8 and 9 — a regen landed a
-  * type [[graft.sources.Tables.normalizeEventTs]] didn't cover and
-  * the breakage shipped SILENTLY: every event-time query died in the
-  * driver's bench while the suite stayed green, because nothing
-  * pinned the loaded dtype and the streaming specs built their frames
-  * in-memory. These specs are that missing tripwire — they go red on
-  * physical-type drift BEFORE the driver's bench does, against every
-  * SF dir the driver grades.
+/** The data contract ([[graft.sources.Tables.schemas]]) against the
+  * data on disk. Every table is read with its declared schema, and a
+  * load checks that schema against the parquet footer before reading.
+  * Type drift in `events.ts` has broken the bench silently twice
+  * (every event-time query died in the bench while the suite stayed
+  * green), so these specs pin the contract against every graded SF
+  * dir, and pin that a copy which breaks it fails at load with the
+  * table, column and both types named instead of reading NULLs or
+  * failing mid-query.
   */
 class DataContractSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Engine.builder("local[4]", 4).getOrCreate()
@@ -37,9 +34,8 @@ class DataContractSpec extends AnyFunSuite {
     for (d <- sfDirs) {
       val dt = Tables.events(spark, d).schema("ts").dataType
       assert(dt == TimestampType,
-        s"$d: events.ts loaded as $dt, not TimestampType — the on-disk " +
-          "physical type drifted past Tables.normalizeEventTs; add the " +
-          "new era there before anything downstream runs")
+        s"$d: events.ts loaded as $dt, not TimestampType — the declared " +
+          "events schema in Tables.schemas no longer says timestamp")
     }
   }
 
@@ -79,8 +75,7 @@ class DataContractSpec extends AnyFunSuite {
 
   test("every canonical table loads non-empty with its full column set") {
     for (d <- sfDirs; t <- Tables.names) {
-      val df = if (t == "events") Tables.events(spark, d)
-               else Tables.load(spark, d, t)
+      val df = Tables.load(spark, d, t)
       val missing = canonicalCols(t) -- df.columns.toSet
       assert(missing.isEmpty,
         s"$d/$t: regen dropped or renamed columns $missing")
@@ -171,5 +166,61 @@ class DataContractSpec extends AnyFunSuite {
     intercept[Exception] {
       EventStream.readEventStream(spark, d.toString)
     }
+  }
+
+  /** A copy of sf0.001 `events` rewritten by Spark through `edit`, as
+    * a table dir holding `events.parquet`.
+    */
+  private def eventsCopy(prefix: String)(
+      edit: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toString
+    edit(Tables.events(spark, "/root/testdata/sf0.001"))
+      .write.parquet(s"$d/events.parquet")
+    d
+  }
+
+  test("an events copy with props dropped fails at load, naming the drift") {
+    val d = eventsCopy("graft_drop_props")(_.drop("props"))
+    val e = intercept[IllegalArgumentException](Tables.load(spark, d, "events"))
+    for (part <- Seq("events", "props", "declared string", "(missing)"))
+      assert(e.getMessage.contains(part), s"'$part' not in: ${e.getMessage}")
+  }
+
+  test("an events copy with value written as string fails at load, naming the drift") {
+    import org.apache.spark.sql.functions.col
+    val d = eventsCopy("graft_value_string")(
+      df => df.withColumn("value", col("value").cast("string")))
+    val e = intercept[IllegalArgumentException](Tables.load(spark, d, "events"))
+    for (part <- Seq("events", "value", "declared double", "found string"))
+      assert(e.getMessage.contains(part), s"'$part' not in: ${e.getMessage}")
+  }
+
+  test("a Spark-written (UTC-adjusted ts) events copy loads with the original ts") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    import org.apache.spark.sql.functions.col
+    val key = "spark.sql.parquet.outputTimestampType"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "TIMESTAMP_MICROS")
+    val d = try eventsCopy("graft_utc_ts")(identity)
+            finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val part = new java.io.File(s"$d/events.parquet").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(part.toString),
+      new org.apache.hadoop.conf.Configuration()))
+    val schema = try reader.getFooter.getFileMetaData.getSchema
+                 finally reader.close()
+    val ts = schema.getType(schema.getFieldIndex("ts"))
+    assert(ts.getLogicalTypeAnnotation == LogicalTypeAnnotation.timestampType(
+      true, LogicalTypeAnnotation.TimeUnit.MICROS), s"written ts is $ts")
+    // the original's instants: its TIMESTAMP_NTZ micros read as UTC
+    val orig = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+      .select(col("event_id"), col("ts").cast("timestamp").as("ts"))
+    val copy = Tables.load(spark, d, "events").select("event_id", "ts")
+    assert(copy.schema("ts").dataType == TimestampType)
+    assert(copy.count() == orig.count())
+    assert(copy.exceptAll(orig).isEmpty && orig.exceptAll(copy).isEmpty)
   }
 }

@@ -226,8 +226,7 @@ class StreamingFormatsSpec extends AnyFunSuite {
   test("adapter seam reads through an explicit scheme URI and format name") {
     // the s3a://-shaped code path on the local scheme: same reader,
     // same options surface, only the scheme/jar differ in deployment.
-    // Tables.events first: it flips the session-wide nanosAsLong conf
-    // the events file needs (documented side effect).
+    // The seam infers the file's own schema; the count is the same.
     val expected = Tables.events(spark, dir).count()
     val uri = s"file://$dir/events.parquet"
     val viaSeam = Formats.readSource(spark, "parquet", Map.empty, Some(uri))

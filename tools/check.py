@@ -58,4 +58,6 @@ for name, sql in sorted(oracle.items()):
     else:
         print(f"ok   {name} ({len(exp)} rows)")
 print(f"\n{len(oracle) - fails}/{len(oracle)} queries match")
-sys.exit(1 if fails else 0)
+# a gate: non-zero on any failed or mismatched query, and on an empty
+# oracle file (nothing checked is not a pass)
+sys.exit(1 if fails or not oracle else 0)

@@ -212,9 +212,9 @@ def main():
 
         def out(name, table, d=d):
             # version 2.6 + no coercion: events.ts keeps its source
-            # unit (TIMESTAMP(MICROS, isAdjustedToUTC=false) in the
-            # sf0.001 source; nanos files of older eras are also in
-            # the engine's read contract)
+            # unit, TIMESTAMP(MICROS, isAdjustedToUTC=false), which the
+            # engine's declared `timestamp` reads; a TIMESTAMP(NANOS)
+            # file would fail the contract check at load
             pq.write_table(table, f"{d}/{name}.parquet", version="2.6",
                            coerce_timestamps=None)
 

@@ -59,8 +59,8 @@ a change alters CONTENT without changing row counts (the r14 sign
 diagonals were invisible to the copies+rows stale-guard); scale specs
 that depend on the content assert it.
 - events.ts keeps the source's TIMESTAMP(MICROS, isAdjustedToUTC=false)
-  (parquet version 2.6, no coercion); `Tables.events` reads it as
-  TIMESTAMP_NTZ and converts.
+  (parquet version 2.6, no coercion); `Tables.events` reads it into
+  its declared `timestamp` type.
 
 Usage: python3 tools/gen_sf1.py [SRC] [DST] [COPIES]
 Then:  sbt "runMain graft.Verify /tmp/sf1 /tmp/verify_sf1"
