@@ -195,6 +195,35 @@ class DataContractSpec extends AnyFunSuite {
       assert(e.getMessage.contains(part), s"'$part' not in: ${e.getMessage}")
   }
 
+  test("a TIMESTAMP(NANOS) events file fails at load, naming the column's parquet type") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      """message events {
+        |  optional int64 event_id;
+        |  optional int64 ts (TIMESTAMP(NANOS,false));
+        |  optional int64 user_id;
+        |  optional binary event_type (STRING);
+        |  optional double value;
+        |  optional binary props (STRING);
+        |}""".stripMargin)
+    val d = java.nio.file.Files.createTempDirectory("graft_nanos_ts").toString
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$d/events.parquet"), conf))
+      .withConf(conf).withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 1L).append("ts", 1700000000123456789L)
+      .append("user_id", 2L).append("event_type", "click")
+      .append("value", 1.5).append("props", "{}"))
+    finally w.close()
+    val e = intercept[IllegalArgumentException](Tables.load(spark, d, "events"))
+    for (part <- Seq("events", "column ts", "declared timestamp", "TIMESTAMP(NANOS"))
+      assert(e.getMessage.contains(part), s"'$part' not in: ${e.getMessage}")
+  }
+
   test("a Spark-written (UTC-adjusted ts) events copy loads with the original ts") {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
