@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.TimestampType
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,7 +17,9 @@ import graft.streaming.EventStream
   * green), so these specs pin the contract against every graded SF
   * dir, and pin that a copy which breaks it fails at load with the
   * table, column and both types named instead of reading NULLs or
-  * failing mid-query.
+  * failing mid-query. Reading the contract starts no Spark job: a
+  * load or a stream open builds its DataFrame without schema
+  * inference.
   */
 class DataContractSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Engine.builder("local[4]", 4).getOrCreate()
@@ -168,13 +173,13 @@ class DataContractSpec extends AnyFunSuite {
     }
   }
 
-  /** A copy of sf0.001 `events` rewritten by Spark through `edit`, as
+  /** A copy of the smallest SF dir's `events` rewritten by Spark through `edit`, as
     * a table dir holding `events.parquet`.
     */
   private def eventsCopy(prefix: String)(
       edit: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): String = {
     val d = java.nio.file.Files.createTempDirectory(prefix).toString
-    edit(Tables.events(spark, "/root/testdata/sf0.001"))
+    edit(Tables.events(spark, sfDirs.head))
       .write.parquet(s"$d/events.parquet")
     d
   }
@@ -245,11 +250,52 @@ class DataContractSpec extends AnyFunSuite {
     assert(ts.getLogicalTypeAnnotation == LogicalTypeAnnotation.timestampType(
       true, LogicalTypeAnnotation.TimeUnit.MICROS), s"written ts is $ts")
     // the original's instants: its TIMESTAMP_NTZ micros read as UTC
-    val orig = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    val orig = spark.read.parquet(s"${sfDirs.head}/events.parquet")
       .select(col("event_id"), col("ts").cast("timestamp").as("ts"))
     val copy = Tables.load(spark, d, "events").select("event_id", "ts")
     assert(copy.schema("ts").dataType == TimestampType)
     assert(copy.count() == orig.count())
     assert(copy.exceptAll(orig).isEmpty && orig.exceptAll(copy).isEmpty)
+  }
+
+  /** Job count per job group for every `(group, body)`, each body run
+    * under its own group. A sentinel job started after the bodies is
+    * awaited, so every job a body started has been delivered to the
+    * listener (one listener queue delivers in order) before counting.
+    */
+  private def jobsByGroup(bodies: Seq[(String, () => Any)]): Map[String, Int] = {
+    val groups = new ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      for ((g, body) <- bodies) {
+        sc.setJobGroup(g, g)
+        try body() finally sc.clearJobGroup()
+      }
+      sc.setJobGroup("sentinel", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!groups.contains("sentinel") && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(groups.contains("sentinel"), "listener never saw the sentinel job")
+      bodies.map { case (g, _) => g -> groups.asScala.count(_ == g) }.toMap
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("Tables.load of each of the ten tables starts no Spark job") {
+    val jobs = jobsByGroup(Tables.names.map(t =>
+      t -> (() => Tables.load(spark, sfDirs.head, t))))
+    assert(jobs.size == 10)
+    assert(jobs.values.forall(_ == 0), s"jobs per load: $jobs")
+  }
+
+  test("readEventStream on a populated source starts no Spark job") {
+    val jobs = jobsByGroup(Seq(
+      "stream" -> (() => EventStream.readEventStream(spark, sfDirs.head))))
+    assert(jobs("stream") == 0, s"opening the stream started ${jobs("stream")} job(s)")
   }
 }
