@@ -184,8 +184,9 @@ object SparkEntry {
       operators.Sampling.contextPack(Tables.documents(s, d))),
     "q96_inverted_index" -> ((s, d) =>
       TextAnalysis.invertedIndex(Tables.documents(s, d))),
-    // reads the REAL GOES NetCDF-4 sample via the from-scratch HDF5
-    // reader; sfDir-independent input, rows-only (DuckDB has no HDF5)
+    // reads the committed synthetic GOES-shaped NetCDF-4 fixture
+    // (NetCdf.goesSampleGlob) via the from-scratch HDF5 reader;
+    // sfDir-independent input, rows-only (DuckDB has no HDF5)
     "q97_goes_irradiance" -> ((s, _) => sources.NetCdf.goesIrradiance(s)),
     "q98_substring_dedup" -> ((s, d) =>
       operators.Dedup.substringDedup(Tables.documents(s, d))),

@@ -326,21 +326,41 @@ object NetCdf {
         "integration_time")
   }
 
-  /** The reference's real GOES sample, shipped read-only with the
-    * repo under test; the q97 default input.
-    */
-  val GoesSampleGlob: String =
-    "/root/reference/obdi-opensourcedatapipeline-main/test_downloads/*.nc"
+  /** Class-path directory of q97's default input. */
+  val GoesSampleResource = "graft/goes"
 
-  /** q97: per-channel irradiance summary over real GOES NetCDF-4
-    * products — the aggregate the reference's Druid/Superset layer
-    * charts from the satellite ETL's Kafka records (README.md:277's
-    * dashboard path), computed here straight off the files. Long-form
+  /** q97's default input: every `.nc` file in the [[GoesSampleResource]]
+    * directory on the class path. The repo commits one there, a small
+    * synthetic NetCDF-4 file shaped like the GOES-18 EXIS
+    * `OR_EXIS-L1b-SFXR` product (the eight variables [[readGoes]]
+    * reads, 30 samples at a 1 s cadence, chunked shuffle+deflate),
+    * generated by the test helper `graft.GoesFixture`. It is NOT real
+    * GOES data. Resolved from the class loader, so the working
+    * directory does not matter; a class path that packs the resource
+    * into a jar has no plain file to glob, and fails here naming it —
+    * pass [[goesIrradiance]] an explicit glob then.
+    */
+  def goesSampleGlob: String = {
+    val url = Option(getClass.getClassLoader.getResource(GoesSampleResource))
+      .getOrElse(sys.error(s"class-path resource '$GoesSampleResource' (q97's " +
+        "default GOES input) not found; pass goesIrradiance an explicit glob"))
+    require(url.getProtocol == "file",
+      s"class-path resource '$GoesSampleResource' (q97's default GOES input) is " +
+        s"$url, not a plain directory; pass goesIrradiance an explicit glob")
+    s"${java.nio.file.Paths.get(url.toURI)}/*.nc"
+  }
+
+  /** q97: per-channel irradiance summary over GOES NetCDF-4 products —
+    * the aggregate the reference's Druid/Superset layer charts from
+    * the satellite ETL's Kafka records (README.md:277's dashboard
+    * path), computed here straight off the files. Long-form
     * (product_time, channel, n, avg, max) — one row per X-ray
-    * channel. Rows-only by necessity: the DuckDB oracle cannot read
-    * HDF5 containers, so NetCdfSpec pins the values instead (the
-    * channel count, the 30-sample cadence, and the physical W/m²
-    * range of each mean).
+    * channel. By default it reads the committed synthetic fixture
+    * ([[goesSampleGlob]]); pass `glob` to read real products. Rows-only
+    * by necessity: the DuckDB oracle cannot read HDF5 containers, so
+    * NetCdfSpec pins the values instead — exactly on the fixture, and
+    * by channel count, 30-sample cadence and physical W/m² range on the
+    * real sample when that file is present.
     *
     * Scale shape: [[readGoes]] parallelizes by file; this adds one
     * (product_time, channel)-keyed map-side-combined aggregate —
@@ -348,7 +368,7 @@ object NetCdf {
     * shuffle larger than (files × channels) rows.
     */
   def goesIrradiance(spark: SparkSession,
-                     glob: String = GoesSampleGlob): DataFrame = {
+                     glob: String = goesSampleGlob): DataFrame = {
     import org.apache.spark.sql.functions._
     readGoes(spark, glob)
       .select(col("product_time"), expr(

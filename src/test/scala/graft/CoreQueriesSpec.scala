@@ -19,7 +19,7 @@ class CoreQueriesSpec extends AnyFunSuite {
     val qs = SparkEntry.queries
     assert(SparkEntry.oracleSql.keySet.subsetOf(qs.keySet))
     qs.foreach { case (name, fn) =>
-      val df = fn(spark, dir)
+      val df = QueryClue(name)(fn(spark, dir))
       assert(df.columns.nonEmpty, s"$name has no columns")
       assert(df.count() >= 0, s"$name failed to execute")
     }

@@ -11,7 +11,9 @@ import graft.sources.NetCdf
   * dim/gatt/var lists, fixed data, interleaved record data) — the
   * encoder below doubles as executable documentation of the layout
   * the parser consumes. The real reference GOES sample is NetCDF-4
-  * (HDF5 container) and exercises the classification seam.
+  * (HDF5 container) and exercises the classification seam; its cases
+  * cancel when that out-of-repo file is absent. q97's default input,
+  * the committed [[GoesFixture]], is pinned exactly at the end.
   */
 class NetCdfSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Engine.builder("local[4]", 4).getOrCreate()
@@ -259,7 +261,7 @@ class NetCdfSpec extends AnyFunSuite {
 
   test("q97 goes irradiance: per-channel summary off the real sample (rows-only oracle)") {
     assume(Files.exists(Paths.get(goesSample)), "reference sample absent")
-    val rows = NetCdf.goesIrradiance(spark).collect()
+    val rows = NetCdf.goesIrradiance(spark, goesSample).collect()
     assert(rows.length == 5, s"expected 5 channels, got ${rows.length}")
     val byChannel = rows.map(r => r.getString(1) ->
       (r.getLong(2), r.getDouble(3), r.getDouble(4))).toMap
@@ -273,5 +275,50 @@ class NetCdfSpec extends AnyFunSuite {
       assert(maxIrr >= avgIrr, s"$c max<avg")
     }
     assert(rows.forall(_.getString(0) == "s20231160000599"))
+  }
+
+  // ----- q97's default input: the committed GOES-shaped fixture -----
+
+  test("q97 goes irradiance: per-channel summary off the committed fixture (rows-only oracle)") {
+    val rows = NetCdf.goesIrradiance(spark).collect()
+    assert(rows.length == 5, s"expected 5 channels, got ${rows.length}")
+    val byChannel = rows.map(r => r.getString(1) -> r).toMap
+    assert(byChannel.keySet == GoesFixture.Channels.map(_._1).toSet)
+    GoesFixture.Channels.foreach { case (c, _, base, step) =>
+      val r = byChannel(c)
+      assert(r.getString(0) == GoesFixture.ProductTime, c)
+      assert(r.getLong(2) == GoesFixture.Samples.toLong, s"$c n")
+      assert(r.getDouble(3) == GoesFixture.meanIrradiance(base, step), s"$c avg")
+      assert(r.getDouble(4) == GoesFixture.maxIrradiance(base, step), s"$c max")
+    }
+    // the file name's sYYYYJJJHHMMSSt stamp is its first time value
+    val stamp = GoesFixture.ProductTime
+    val stampEpoch = java.time.LocalDate.ofYearDay(stamp.slice(1, 5).toInt, stamp.slice(5, 8).toInt)
+      .atTime(stamp.slice(8, 10).toInt, stamp.slice(10, 12).toInt, stamp.slice(12, 14).toInt)
+      .toEpochSecond(java.time.ZoneOffset.UTC)
+    val times = NetCdf.readGoes(spark, NetCdf.goesSampleGlob)
+      .orderBy("time").collect().map(_.getLong(2))
+    assert(times.toSeq == (0 until GoesFixture.Samples).map(stampEpoch + _))
+  }
+
+  test("GOES fixture: the committed file decodes to what the generator writes") {
+    import graft.sources.Hdf5
+    val url = getClass.getResource(s"/${NetCdf.GoesSampleResource}/${GoesFixture.FileName}")
+    assert(url != null, s"${GoesFixture.FileName} missing from the class path")
+    // decoded content, not bytes: deflate output differs across zlib builds
+    def decoded(bytes: Array[Byte]) = Hdf5.parse(bytes).vars.map { v =>
+      (v.name, v.dims, v.dtype, v.layout.kind, v.layout.chunkDims,
+        v.layout.v4.map(_.indexType), v.filters,
+        v.attrs.find(_.name == "units").map(_.str),
+        Hdf5.readDoubles(bytes, v).toSeq)
+    }
+    val committed = decoded(Files.readAllBytes(Paths.get(url.toURI)))
+    assert(committed == decoded(GoesFixture.bytes))
+    assert(committed.map(v => (v._1, v._8, v._9)) ==
+      GoesFixture.variables.map { case (n, u, vs) => (n, Some(u), vs.toSeq) })
+    committed.foreach { v =>
+      assert(v._2 == Seq(GoesFixture.Samples.toLong) && v._4 == "chunked" &&
+        v._7.map(_.id) == Seq(2, 1), s"${v._1}: dims ${v._2}, ${v._4}, filters ${v._7}")
+    }
   }
 }

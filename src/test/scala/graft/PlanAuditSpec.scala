@@ -63,12 +63,14 @@ class PlanAuditSpec extends AnyFunSuite {
     */
   private lazy val audited: Map[String, (String, Int)] =
     SparkEntry.queries.map { case (name, fn) =>
-      val qe = fn(spark, dir).queryExecution
-      val globalWindows = qe.optimizedPlan.collect {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window
-          if w.partitionSpec.isEmpty => w
-      }.size
-      name -> ((qe.executedPlan.toString, globalWindows))
+      name -> QueryClue(name) {
+        val qe = fn(spark, dir).queryExecution
+        val globalWindows = qe.optimizedPlan.collect {
+          case w: org.apache.spark.sql.catalyst.plans.logical.Window
+            if w.partitionSpec.isEmpty => w
+        }.size
+        (qe.executedPlan.toString, globalWindows)
+      }
     }
 
   test("no query plans a CartesianProduct") {

@@ -128,7 +128,7 @@ class ScanCountGateSpec extends AnyFunSuite {
   test("every query's plan scans each table at most its allowed count") {
     val violations = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
-        val plan = fn(spark, dir).queryExecution.executedPlan.toString
+        val plan = QueryClue(name)(fn(spark, dir).queryExecution.executedPlan.toString)
         val perQuery = allow.getOrElse(name, Map.empty)
         tables.flatMap { t =>
           val c = plan.linesIterator.count(l =>
