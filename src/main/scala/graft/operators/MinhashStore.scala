@@ -63,7 +63,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * fan-in is bounded the same way q121's is — fold old segments with
   * an overwrite of a base segment under the same append-only row
   * semantics (band rows are immutable facts, so compaction here is a
-  * pure concatenation, even simpler than q121's latest-wins).
+  * pure concatenation, even simpler than q121's sum merge).
   */
 object MinhashStore {
 
@@ -338,7 +338,7 @@ object MinhashStore {
     val df = spark.read.option("basePath", root)
       .parquet(dataPaths.map(_.toString): _*).drop("seg")
     // band rows are immutable facts, so the fold is PURE CONCATENATION
-    // (simpler than q121's latest-wins); the bands subdir re-applies
+    // (simpler than q121's sum merge); the bands subdir re-applies
     // the one-file-per-band layout law on the way through
     val writer =
       if (partitioned)

@@ -369,21 +369,6 @@ object Similarity {
     }
   }
 
-  /** [[kmeansTrain]] over a bounded [[trainingSample]] — the sampled
-    * coarse trainer. Seeds are the kCents first vectors IN THE SAMPLE
-    * in the neutral [[seedOrder]], re-keyed to cid 0..k-1 (the full
-    * trainer's contract — and [[ivfpqCore]]'s residual key packing
-    * needs cids < nCells).
-    */
-  def kmeansTrainSampled(embeddings: DataFrame, kCents: Int = 8,
-                         iters: Int = 5,
-                         cap: Long = TrainSampleCap): DataFrame = {
-    graft.functions.Registry.ensure(embeddings.sparkSession)
-    val sample = trainingSample(embeddings, cap).localCheckpoint(true)
-    centroidFrame(embeddings.sparkSession,
-      kmeansCents(quantizedNonEmpty(sample), kCents, iters, neutralSeeds = true))
-  }
-
   /** Neutral seed order for the sampled trainers: smallest
     * (xxhash64(vec_id), vec_id) — a deterministic, partitioning-
     * invariant uniform draw. The full trainers seed on the first

@@ -307,28 +307,6 @@ object TimeSeries {
         vbinFinite($"value").as("bin"))
       .agg(count(lit(1)).as("n"))
 
-  /** Streaming twin of [[dailyValueSketch]] (the q119 pattern: the
-    * sketch table stays FRESH at ingest): the same bin expression
-    * grouped on a 1-day event-time window, so the streaming variant
-    * drops closed-day state behind the watermark while every
-    * percentile read stays a batch-side merge of sketch rows — the
-    * Druid ingest-rollup shape end-to-end. `watermarked = false`
-    * runs the identical plan on a bounded frame (window(1 day) in a
-    * UTC session buckets exactly like to_date — equality with
-    * [[dailyValueSketch]] and stream ≡ batch are both spec-pinned
-    * via MemoryStream increments).
-    */
-  def valueSketchWindowed(events: DataFrame,
-                          watermarked: Boolean): DataFrame = {
-    val in = if (watermarked) events.withWatermark("ts", "1 day") else events
-    in.filter($"value".isNotNull && !isnan($"value")) // NULL ≠ ±Inf, see dailyValueSketch
-      .groupBy(window($"ts", "1 day"), $"event_type",
-        vbinFinite($"value").as("bin"))
-      .agg(count(lit(1)).as("n"))
-      .select($"window.start".cast("date").as("day"), $"event_type",
-        $"bin", $"n")
-  }
-
   /** Coarse-grain percentile rollup from merged daily sketches:
     * per event_type, approx p25/p50/p75/p95 plus n_values (finite
     * values only), n_nonfinite (±Inf rows, counted but never binned

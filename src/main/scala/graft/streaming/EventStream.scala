@@ -80,50 +80,54 @@ object EventStream {
 
   /** Persisted, RESTARTABLE sketch-segment ingest (q121) — the
     * reference's actual Druid loop (druid-kafka-datasource.json:
-    * stream → rollup SEGMENT → query) composed end-to-end from parts
-    * that already exist: the watermarked value sketch
-    * ([[graft.operators.TimeSeries.valueSketchWindowed]], q120's
-    * streaming twin) maintained as a parquet SEGMENT TABLE through a
-    * checkpointed exactly-once sink, with every later percentile read
-    * answered from the stored table
-    * ([[graft.operators.TimeSeries.quantileRollupFrom]]).
+    * stream → rollup SEGMENT → query): each micro-batch's on-time rows
+    * are rolled up into their own DELTA segment of
+    * [[graft.operators.TimeSeries.dailyValueSketch]] rows, and every
+    * later percentile read sums the deltas
+    * ([[storedValueSketch]] → [[graft.operators.TimeSeries.quantileRollupFrom]]).
+    * Sketch counts merge by addition, so no batch needs another
+    * batch's counts: the query is a stateless `foreachBatch`, with no
+    * state store and no aggregate checkpoint.
     *
-    * Exactly-once mechanics: the windowed aggregate runs in UPDATE
-    * mode, so each micro-batch emits the keys whose counts changed,
-    * carrying their full CUMULATIVE value (state lives in the
-    * checkpoint and survives restart). `foreachBatch` lands batch i
-    * at `tableDir/seg=<i>` with mode=overwrite — the documented
-    * idempotent-foreachBatch pattern: a crash between sink write and
-    * offset commit replays batch i, which OVERWRITES seg=i with
-    * identical content instead of duplicating it. The read side
-    * ([[storedValueSketch]]) is latest-wins per key over segments —
-    * q75's merge-upsert decided at read time, i.e. Druid's
-    * merge-on-read segment model.
+    * Exactly-once: batch i lands at `tableDir/seg=<i>` with
+    * mode=overwrite — the documented idempotent-foreachBatch pattern.
+    * A crash between sink write and offset commit replays batch i,
+    * which OVERWRITES seg=i with identical content instead of adding
+    * it twice. A batch with no on-time row writes an empty segment,
+    * which reads as no rows under [[SegmentSchema]].
+    *
+    * Late rows: the stream keeps a 1-day event-time watermark, and a
+    * row is not counted when its day ended at or before the watermark
+    * of its batch — the rule a stateful 1-day windowed aggregate
+    * applies. The watermark is read from the query's own offset log,
+    * where Spark records it before the batch runs, so a replayed batch
+    * reads the same watermark and lands the same rows.
     *
     * At 100 TB: each segment holds sketch rows (grains × ≤~150 bins),
-    * never events, so segment count grows with trigger count and the
-    * compaction window shuffles sketch rows only. A production table
-    * would periodically fold old segments into one base segment with
-    * the same latest-wins rule (the read plan IS the compaction job's
-    * plan) — elided here, the read side already proves the rule.
+    * never events, so segment count grows with trigger count and
+    * [[compactSegments]] bounds the read fan-in.
     *
     * Same contract as [[ingestOnce]]: processes whatever is in
     * `srcDir` now and returns; re-invoking with the same checkpoint
-    * resumes from recorded offsets and saved aggregate state.
+    * resumes from the recorded offsets.
     */
   def sketchSegmentsOnce(spark: SparkSession, srcDir: String,
                          tableDir: String, checkpointDir: String): Unit = {
-    val sketch = graft.operators.TimeSeries.valueSketchWindowed(
-      readEventStream(spark, srcDir), watermarked = true)
-    val q = sketch.writeStream
-      .outputMode("update")
+    import org.apache.spark.sql.execution.streaming.checkpointing.OffsetSeqLog
+    val offsets = new OffsetSeqLog(spark, s"$checkpointDir/offsets")
+    val dayEndMs = unix_millis(date_add(to_date(col("ts")), 1).cast("timestamp"))
+    val q = readEventStream(spark, srcDir)
+      .withWatermark("ts", "1 day")
+      .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // an empty update batch writes no segment — a schema-only
-        // seg dir would add nothing and a table of ONLY empty
-        // segments could not even be read
-        if (!batch.isEmpty)
-          batch.write.mode("overwrite").parquet(s"$tableDir/seg=$batchId")
+        val watermarkMs = offsets.offsetSeqMetadataForBatchId(batchId)
+          .getOrElse(throw new IllegalStateException(
+            s"no offset log entry for batch $batchId under $checkpointDir"))
+          .batchWatermarkMs
+        graft.operators.TimeSeries
+          .dailyValueSketch(batch.filter(dayEndMs > lit(watermarkMs)))
+          .write.mode("overwrite").parquet(s"$tableDir/seg=$batchId")
       }
       .start()
     // stop() signals the query thread; await its termination so a
@@ -135,14 +139,20 @@ object EventStream {
     }
   }
 
-  /** Latest-wins view of the segment table [[sketchSegmentsOnce]]
-    * maintains: one row per (day, event_type, bin) from the highest
-    * segment that touched it — update-mode rows carry cumulative
-    * counts, so the newest write IS the truth and older segments'
-    * rows for the same key are superseded, never summed. Equality
-    * with the batch [[graft.operators.TimeSeries.dailyValueSketch]]
-    * over the same events is spec-pinned, restart and replay
-    * included.
+  /** Declared schema of a sketch segment, so reading one starts no
+    * schema-inference job and an empty segment reads as no rows.
+    */
+  private val SegmentSchema = "day DATE, event_type STRING, bin BIGINT, n BIGINT"
+
+  /** Summed view of the segment table [[sketchSegmentsOnce]] writes:
+    * one row per (day, event_type, bin), its count the sum over the
+    * segments' deltas. Equality with the batch
+    * [[graft.operators.TimeSeries.dailyValueSketch]] over the same
+    * on-time events is spec-pinned, restart and replay included.
+    *
+    * A table written by a cumulative-count writer (each segment the
+    * running total) must not be read here: the sum would count every
+    * earlier batch again.
     */
   def storedValueSketch(spark: SparkSession, tableDir: String): DataFrame = {
     // NON-MUTATING read (r19, ADVICE on the shared protocol): a
@@ -163,44 +173,25 @@ object EventStream {
       s"segment table at $tableDir holds no seg=* directory — " +
         "nothing was ever ingested (or the path is wrong); run " +
         "sketchSegmentsOnce against a non-empty source first")
-    def keyed(df: DataFrame): DataFrame =
-      df.select(col("day"), col("event_type"), col("bin"), col("n"),
-        col("seg").cast("long").as("seg"))
-    val base =
-      if (liveIds.isEmpty) None
-      else Some(keyed(spark.read.option("basePath", tableDir)
-        .parquet(liveIds.map(i => s"$tableDir/seg=$i"): _*)))
-    val tmpPart = fold.map { case (tmp, target) =>
-      keyed(spark.read.parquet(tmp.toString).withColumn("seg", lit(target)))
-    }
-    latestWinsOver((base.toSeq ++ tmpPart.toSeq).reduce(_ unionByName _))
+    sumMerge(spark,
+      liveIds.map(i => s"$tableDir/seg=$i") ++ fold.map(_._1.toString))
   }
 
-  /** Latest-wins merge — the shared read kernel of
-    * [[storedValueSketch]] and [[compactSegments]] (the read plan IS
-    * the compaction plan, literally the same DataFrame).
+  /** Sum merge — the shared read kernel of [[storedValueSketch]] and
+    * [[compactSegments]] (the read plan IS the compaction plan).
     */
-  private def latestWinsOver(all: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("day"), col("event_type"), col("bin"))
-      .orderBy(col("seg").desc)
-    all.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(col("day"), col("event_type"), col("bin"), col("n"))
-  }
-
-  private def latestWins(spark: SparkSession, tableDir: String,
-                         segs: Seq[String]): DataFrame =
-    latestWinsOver(spark.read.option("basePath", tableDir).parquet(segs: _*))
+  private def sumMerge(spark: SparkSession, segs: Seq[String]): DataFrame =
+    spark.read.schema(SegmentSchema).parquet(segs: _*)
+      .groupBy(col("day"), col("event_type"), col("bin"))
+      .agg(sum(col("n")).as("n"))
 
   /** Fold every segment except the newest `keepNewest` into ONE base
-    * segment under the same latest-wins rule — Druid's segment
-    * compaction, made a tested write path (r15; r14 documented the
-    * read plan as the elided compaction plan, this runs that exact
-    * plan and persists it). The base keeps the fold set's HIGHEST
-    * segment id, so ordering against the surviving newer segments —
-    * and therefore every future read — is unchanged; re-reading the
-    * table before/after is spec-pinned identical.
+    * segment holding their summed counts — Druid's segment
+    * compaction, made a tested write path (r15): the fold runs the
+    * read's own [[sumMerge]] and persists it. Addition is associative,
+    * so re-reading the table before/after is spec-pinned identical.
+    * The base takes the fold set's HIGHEST segment id, so every
+    * surviving segment stays above it.
     *
     * Crash-safe without a transaction log, via a commit marker:
     *   1. the merged base is written to `_compact_tmp` (invisible to
@@ -208,11 +199,10 @@ object EventStream {
     *   2. the marker file inside it is the COMMIT POINT — until it
     *      exists, recovery abandons the tmp dir and the table is
     *      untouched,
-    *   3. after it exists, recovery (run by every read and every
-    *      compaction) deterministically finishes: delete every
-    *      segment ≤ target, rename tmp to `seg=<target>`. Both steps
-    *      are idempotent, so a crash ANYWHERE re-runs to the same
-    *      table.
+    *   3. after it exists, recovery (run by every compaction)
+    *      deterministically finishes: delete every segment ≤ target,
+    *      rename tmp to `seg=<target>`. Both steps are idempotent, so
+    *      a crash ANYWHERE re-runs to the same table.
     * Single-writer like the ingest itself: run between
     * [[sketchSegmentsOnce]] invocations, not concurrently with one.
     *
@@ -236,7 +226,7 @@ object EventStream {
     val tmp = new org.apache.hadoop.fs.Path(tableDir,
       graft.SegmentProtocol.FoldTmp)
     fs.delete(tmp, true) // an uncommitted earlier attempt is garbage
-    latestWins(spark, tableDir, fold.map(i => s"$tableDir/seg=$i"))
+    sumMerge(spark, fold.map(i => s"$tableDir/seg=$i"))
       .write.mode("overwrite").parquet(tmp.toString)
     // the commit point — written only after the merged data (and its
     // _SUCCESS) are durable — then the finish, both the kernel's
@@ -257,9 +247,10 @@ object EventStream {
     * segments_folded, segments_after) — is the decision record for
     * callers that materialize it directly.
     *
-    * The fold itself is [[compactSegments]] with its full marker
-    * protocol, so a crash mid-schedule recovers exactly as the
-    * unscheduled path does. Single-writer discipline carries over:
+    * The fold itself is [[compactSegments]]: it sums the folded
+    * delta segments into one base, so the stored read is unchanged,
+    * and it runs the full marker protocol, so a crash mid-schedule
+    * recovers exactly as the unscheduled path does. Single-writer discipline carries over:
     * schedule it in the SAME pipeline as the ingest stage, never
     * concurrently with one.
     */
@@ -278,8 +269,9 @@ object EventStream {
     }
 
   /** Declared q121 shape: run the full Druid loop — stream `sfDir`'s
-    * events through the checkpointed segment sink into a segment
-    * table, then answer percentiles FROM THE STORED TABLE.
+    * events through the checkpointed segment sink into a table of
+    * per-batch delta segments, then answer percentiles FROM THE
+    * STORED TABLE (the deltas' sum).
     *
     * Table + checkpoint dirs are PER-SESSION, KEYED BY SOURCE (r15,
     * ADVICE): the first invocation for an `sfDir` pays the full
@@ -290,7 +282,8 @@ object EventStream {
     * stored segments. (The r14 fresh-dirs-per-call version leaked two
     * temp dirs and re-streamed the whole corpus on every bench pass.)
     * Results are identical either way — spec-pinned ≡ q120 — because
-    * the segment table's latest-wins read is idempotent under replay.
+    * a replayed batch overwrites its own delta segment, so the summed
+    * read is idempotent under replay.
     * Dirs are removed by a shutdown hook, not deleteOnExit (which
     * cannot remove non-empty directories).
     */

@@ -72,37 +72,6 @@ class StreamingFormatsSpec extends AnyFunSuite {
       s"stream assignment diverged from batch for ${bad.size} vectors: ${bad.take(3)}")
   }
 
-  test("streaming value sketch: windowed twin equals batch; stream equals batch") {
-    import spark.implicits._
-    import graft.operators.TimeSeries
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ev = Tables.events(spark, dir)
-    def keyed(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("day"), col("event_type"), col("bin"), col("n"))
-        .collect().map(r => (r.getDate(0).toString, r.getString(1),
-          r.getLong(2)) -> r.getLong(3)).toMap
-    // bounded-frame equality: window(1 day) buckets like to_date
-    val batch = keyed(TimeSeries.dailyValueSketch(ev))
-    val windowed = keyed(TimeSeries.valueSketchWindowed(ev, watermarked = false))
-    assert(windowed == batch, "windowed sketch diverged from to_date batch")
-    // stream the events in TWO increments; the complete-mode sketch
-    // table after the last must equal the batch sketch
-    val rows = ev.select($"ts", $"event_type", $"value").collect()
-      .map(r => (r.getTimestamp(0), r.getString(1), r.getDouble(2)))
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(java.sql.Timestamp, String, Double)]
-    val out = TimeSeries.valueSketchWindowed(
-      ms.toDF.toDF("ts", "event_type", "value"), watermarked = true)
-    val query = out.writeStream.format("memory")
-      .queryName("graft_value_sketch").outputMode("complete").start()
-    val (a, b) = rows.splitAt(rows.length / 2)
-    ms.addData(a.toSeq); query.processAllAvailable()
-    ms.addData(b.toSeq); query.processAllAvailable()
-    val got = keyed(spark.table("graft_value_sketch"))
-    query.stop()
-    assert(got == batch,
-      s"stream sketch diverged from batch: ${(got.toSet diff batch.toSet).take(3)}")
-  }
-
   test("csv round trip preserves the events table") {
     val events = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
@@ -428,11 +397,11 @@ class StreamingFormatsSpec extends AnyFunSuite {
     val ckpt = Files.createTempDirectory("graft_seg_ck").toString
     val ev = Tables.events(spark, dir)
     // split at the median TIMESTAMP (not a day boundary): the median
-    // day's keys then receive a CUMULATIVE update in batch 1, so the
-    // latest-wins read is exercised on overlapping keys — a sum-
-    // instead-of-supersede bug would double those counts. In-order
-    // arrival (A strictly before B) keeps every B row ahead of the
-    // restored watermark, the ingest pattern the operator declares.
+    // day's keys then land in both batches' delta segments, so the
+    // summed read is exercised on overlapping keys — a read that kept
+    // one segment's count instead of the sum would lose the other's.
+    // In-order arrival (A strictly before B) keeps every B row ahead
+    // of the watermark, the ingest pattern the operator declares.
     val tMidUs = ev.select(percentile_approx(unix_micros(col("ts")),
       lit(0.5), lit(10000))).head.getLong(0)
     val a = ev.filter(unix_micros(col("ts")) < tMidUs)
@@ -446,8 +415,8 @@ class StreamingFormatsSpec extends AnyFunSuite {
     assert(keyed(EventStream.storedValueSketch(spark, table)) ==
       keyed(TimeSeries.dailyValueSketch(a)),
       "first-increment segment table diverged from batch sketch of A")
-    // RESTART with the same checkpoint: new file processes against the
-    // SAVED aggregate state, so overlap-day keys emit cumulative counts
+    // RESTART with the same checkpoint: only the new file is processed,
+    // and its overlap-day keys land as deltas in a second segment
     b.write.parquet(s"$src/events.parquet_b")
     EventStream.sketchSegmentsOnce(spark, src, table, ckpt)
     val all = keyed(TimeSeries.dailyValueSketch(ev))
@@ -480,6 +449,52 @@ class StreamingFormatsSpec extends AnyFunSuite {
       "stored-table percentiles diverged from the direct q120 rollup")
   }
 
+  test("sketch segment table: rows of days closed behind the 1-day watermark are not counted") {
+    import java.nio.file.Files
+    import graft.operators.TimeSeries
+    val src = Files.createTempDirectory("graft_late_src").toString
+    val table = Files.createTempDirectory("graft_late_tbl").toString
+    val ckpt = Files.createTempDirectory("graft_late_ck").toString
+    val ev = Tables.events(spark, dir)
+    def keyed(df: org.apache.spark.sql.DataFrame): Map[(String, String, Long), Long] =
+      df.select(col("day"), col("event_type"), col("bin"), col("n"))
+        .collect().map(r => (r.getDate(0).toString, r.getString(1),
+          r.getLong(2)) -> r.getLong(3)).toMap
+    def stored = keyed(EventStream.storedValueSketch(spark, table))
+    val tMidUs = ev.select(percentile_approx(unix_micros(col("ts")),
+      lit(0.5), lit(10000))).head.getLong(0)
+    ev.filter(unix_micros(col("ts")) < tMidUs).write.parquet(s"$src/events.parquet_a")
+    EventStream.sketchSegmentsOnce(spark, src, table, ckpt)
+    ev.filter(unix_micros(col("ts")) >= tMidUs).write.parquet(s"$src/events.parquet_b")
+    EventStream.sketchSegmentsOnce(spark, src, table, ckpt)
+    assert(stored == keyed(TimeSeries.dailyValueSketch(ev)))
+    // after A and B the watermark is the newest ts minus 1 day, which
+    // falls inside the day before the last: the last 2 days are still
+    // open, and every earlier day ended at or before the watermark
+    val day = to_date(col("ts"))
+    val days = ev.select(day.as("d")).distinct().orderBy("d")
+      .collect().map(_.getDate(0)).toSeq
+    assert(days.length >= 5, s"spec vacuous: only ${days.length} days of events")
+    val idShift = ev.agg(max(col("event_id"))).head.getLong(0) + 1
+    // copies of the rows of `ds` with fresh event ids (shifted k blocks up)
+    def copies(ds: Seq[java.sql.Date], k: Int) =
+      ev.filter(day.isin(ds: _*))
+        .withColumn("event_id", col("event_id") + lit(idShift * k))
+    val (first3, last2) = (days.take(3), days.takeRight(2))
+    assert(!copies(first3, 1).isEmpty && !copies(last2, 1).isEmpty)
+    copies(first3 ++ last2, 1).write.parquet(s"$src/events.parquet_l")
+    EventStream.sketchSegmentsOnce(spark, src, table, ckpt)
+    val onTime = keyed(TimeSeries.dailyValueSketch(ev.union(copies(last2, 1))))
+    assert(onTime != keyed(TimeSeries.dailyValueSketch(ev.union(copies(first3 ++ last2, 1)))),
+      "spec vacuous: counting the late rows would not change the sketch")
+    assert(stored == onTime,
+      "the stored sketch counted rows of days that closed behind the watermark")
+    // a file of first-day rows only is late in full: the table reads the same
+    copies(days.take(1), 2).write.parquet(s"$src/events.parquet_m")
+    EventStream.sketchSegmentsOnce(spark, src, table, ckpt)
+    assert(stored == onTime, "an all-late file changed the stored sketch")
+  }
+
   test("segment compaction: folds under latest-wins, read-identical, recovers from both crash windows") {
     import java.nio.file.Files
     import graft.operators.TimeSeries
@@ -509,9 +524,7 @@ class StreamingFormatsSpec extends AnyFunSuite {
     ev.filter(unix_micros(col("ts")) >= t2)
       .write.parquet(s"$src/events.parquet_c")
     EventStream.sketchSegmentsOnce(spark, src, table, ckpt)
-    // segment ids come from micro-batch ids, which the AvailableNow
-    // restarts do NOT hand out contiguously (an empty commit batch
-    // sits between runs: 0, 2, 4 today) — the protocol only needs
+    // segment ids come from micro-batch ids — the protocol only needs
     // them monotone, so the spec pins count and order, not the values
     assert(segNames.length == 3, s"expected 3 segments, got $segNames")
     val ids = segNames.map(_.stripPrefix("seg=").toLong)
@@ -629,6 +642,17 @@ class StreamingFormatsSpec extends AnyFunSuite {
         EventStream.storedValueSketch(spark, table)).collect().map(_.toSeq).toSeq ==
       TimeSeries.quantileRollup(ev).collect().map(_.toSeq).toSeq,
       "percentiles off the auto-compacted table diverged from q120")
+  }
+
+  test("q121 catalog entry answers q120's rows, built twice in one session") {
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+    val want = rows(SparkEntry.queries("q120_quantile_rollup")(spark, dir))
+    assert(want.nonEmpty, "spec vacuous: q120 returned no rows")
+    // the second build reopens the first one's checkpoint and table:
+    // no new file, no new segment, the same answer
+    for (build <- 1 to 2)
+      assert(rows(SparkEntry.queries("q121_sketch_store")(spark, dir)) == want,
+        s"q121 build $build diverged from q120")
   }
 
   test("session_window operator matches the lag-based sessionize totals") {
