@@ -19,12 +19,8 @@ object Engine {
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // (r20 measured-and-rejected: lowering
-      // spark.sql.adaptive.coalescePartitions.minPartitionSize to 256k
-      // to give CPU-dense small shuffles more post-shuffle tasks was a
-      // full-suite LOSS — geomean 1.045× slower, the extra per-task
-      // fixed cost on byte-light aggregation stages outweighed the
-      // pair-join parallelism it bought. The stock 1m floor stands.)
+      // The stock 1m coalescePartitions.minPartitionSize stays: a 256k floor
+      // added more per-task fixed cost than parallelism on small shuffles.
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.ansi.enabled", "false")
@@ -35,6 +31,24 @@ object Engine {
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.ui.enabled", "false")
+      // Generated classes are cached JVM-wide, keyed by their source. A
+      // `dashboard` pass at sf0.1 compiles 405 distinct classes and the
+      // whole catalog about 2,000 (1,972 at sf0.001, 1,990 at sf0.1). The
+      // stock 100 entries miss on nearly every lookup of a repeated pass,
+      // so every query recompiles. 4096 holds twice the largest working set.
+      // A held class costs about 20-27 KB of live heap, so the cap bounds
+      // the cache near 110 MB in a long-lived session that compiles ad hoc
+      // SQL. Static: the cache is sized once per JVM, at the first code
+      // generation.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // The UI is off and nothing reads the status store, so it keeps the
+      // last 10 jobs, stages and SQL executions (each execution with its
+      // plan graph) and 1000 tasks a stage instead of 1000/1000/1000 and
+      // 100,000: driver memory stays bounded in a long session.
+      .config("spark.ui.retainedJobs", "10")
+      .config("spark.ui.retainedStages", "10")
+      .config("spark.ui.retainedTasks", "1000")
+      .config("spark.sql.ui.retainedExecutions", "10")
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
     builder(s"local[$cores]", math.max(cores, 4)).getOrCreate()
