@@ -3,48 +3,60 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** The segment-store commit kernel — the q121 marker protocol as a
-  * first-class thing (r19): ONE implementation of the commit-marker /
-  * fold / recover discipline that the engine's standing stores share
-  * instead of carrying verbatim copies. Call sites:
-  * [[graft.streaming.EventStream]] (sketch segments, q121),
-  * [[graft.operators.MinhashStore]] (band/edge/decision segments,
-  * q129), and [[graft.operators.Similarity]]'s IVFPQ index lifecycle
-  * (codes compaction q130/q134/q135 and the whole-index retrain swap
-  * q136). Everything goes through the Hadoop FileSystem API, so a
-  * store lives wherever Spark wrote it; `rename()` on one filesystem
-  * is the protocol's only atomicity primitive — exactly the assumption
-  * Druid's segment handoff and Hive's INSERT OVERWRITE make
-  * (reference: README.md:172-193's Druid segment/compaction model).
+/** The segment-store kernel: every store step that more than one of
+  * the engine's standing stores takes, written once. The stores follow
+  * Druid's model (reference: README.md:172-193): one segment lands per
+  * batch, reads union the segments, and a scheduled compaction folds
+  * them. Callers: [[graft.streaming.EventStream]] (q121 sketch
+  * segments), [[graft.operators.MinhashStore]] (q129 band, edge and
+  * decision segments) and [[graft.operators.Similarity]]'s IVFPQ index
+  * (q130–q138: streaming code segments, the manifest delta ledger, the
+  * codes compaction swap and the retrain swap).
   *
-  * Two protocols:
+  * What the kernel owns:
   *
-  * '''FOLD''' — bound a `seg=<id>` table's read fan-in by folding old
+  *  - the `commits/<id>` batch ledger ([[committedIds]],
+  *    [[commitBatch]]);
+  *  - the read view of a `seg=<id>` table around a committed fold
+  *    ([[readSegments]]);
+  *  - the FOLD protocol ([[fold]], [[recoverFold]], [[commitFold]]) and
+  *    its scheduled decision ([[compactionStage]]);
+  *  - the SWAP protocol ([[commitSwap]], [[recoverSwap]],
+  *    [[swapReadPath]]);
+  *  - one temp store dir per declared query and source
+  *    ([[sessionStore]]).
+  *
+  * What each store merges, filters or sweeps stays with that store; the
+  * kernel never branches on its caller. Everything goes through the
+  * Hadoop FileSystem API, so a store lives wherever Spark wrote it;
+  * `rename()` on one filesystem is the protocols' only atomicity
+  * primitive, the assumption Druid's segment handoff and Hive's INSERT
+  * OVERWRITE make.
+  *
+  * '''FOLD''' bounds a `seg=<id>` table's read fan-in by folding old
   * segments into one base segment:
   *
   *   1. the folded rows are written to `_compact_tmp` under the table
   *      root (invisible to readers; the folded segments are intact),
-  *   2. the `_COMPACT_TARGET` marker inside it — carrying the target
-  *      segment id — is the COMMIT POINT,
+  *   2. the `_COMPACT_TARGET` marker inside it, carrying the target
+  *      segment id, is the COMMIT POINT,
   *   3. finish: delete every `seg=<id ≤ target>`, rename the tmp to
   *      `seg=<target>`, drop the marker last (a crash right there
   *      leaves a "_"-file parquet readers ignore).
   *
-  * READERS NEVER MUTATE (r19, ADVICE): a read concurrent with an
-  * in-flight compaction must not delete the writer's unmarked tmp —
-  * the old reader-side "abandon or finish" recovery could do exactly
-  * that, and a reader-side finish could race a second reader's finish.
-  * Instead readers take [[readView]], which reads AROUND a
-  * committed-but-unfinished fold: on-disk segments strictly above the
-  * marker's target stay live, and the tmp dir itself stands in for
-  * `seg=<target>` (it is complete — the marker says so — and the
-  * possibly half-deleted folded segments ≤ target are all superseded
-  * by it). Every mutation — finishing a crashed fold forward,
-  * abandoning a pre-marker tmp — is WRITER-CLASS: it runs at the start
+  * Readers never mutate: a read concurrent with an in-flight compaction
+  * must not delete the writer's unmarked tmp, and a reader-side finish
+  * could race a second reader's. Readers take [[readSegments]], which
+  * reads AROUND a committed-but-unfinished fold: on-disk segments
+  * strictly above the marker's target stay live, and the tmp dir
+  * stands in for `seg=<target>` (it is complete, the marker says so,
+  * and the possibly half-deleted folded segments ≤ target are all
+  * superseded by it). Every mutation (finishing a crashed fold forward,
+  * abandoning a pre-marker tmp) is writer-class: it runs at the start
   * of the next fold ([[recoverFold]]) under the store's single-writer
   * rule, where nothing can race it.
   *
-  * '''SWAP''' — replace a whole directory (an index layout, a full
+  * '''SWAP''' replaces a whole directory (an index layout, a full
   * rebuild) behind readers' backs:
   *
   *   1. the replacement is built in a sibling tmp dir,
@@ -96,33 +108,77 @@ object SegmentProtocol {
       hasData
     }
 
+  // ------------------------------------------------------------------
+  // Batch ledger
+  // ------------------------------------------------------------------
+
+  /** Committed batch ids of the ledger under `root`, ascending.
+    * Driver-side listing of `root/commits` — O(batches) names, no job.
+    */
+  def committedIds(fs: FileSystem, root: String): Seq[Long] = {
+    val p = new Path(root, "commits")
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq.map(_.getPath.getName)
+      .filter(_.forall(_.isDigit)).map(_.toLong).sorted
+  }
+
+  /** Land batch `batchId` of the ledger under `root` exactly once.
+    * A committed id is a replay and a driver-side no-op. An unmarked id
+    * below a committed one is refused: the caller's ledger (a streaming
+    * checkpoint, a deployment's batch log) and the store disagree.
+    * Otherwise `write` lands the batch's segments (mode=overwrite, so a
+    * replay of an uncommitted batch rewrites the same bytes) and the
+    * bare `commits/<batchId>` marker, created only after it, is the
+    * COMMIT POINT. Single-writer.
+    */
+  def commitBatch(fs: FileSystem, root: String, batchId: Long)
+                 (write: => Unit): Unit = {
+    val marker = new Path(s"$root/commits/$batchId")
+    if (fs.exists(marker)) return
+    val committed = committedIds(fs, root)
+    require(committed.forall(_ < batchId),
+      s"batchId $batchId is below a committed segment " +
+        s"(${committed.max}) but carries no marker — the ingest ledger " +
+        "and the store disagree; refusing to rewrite history")
+    write
+    fs.create(marker, true).close()
+  }
+
+  // ------------------------------------------------------------------
+  // FOLD protocol
+  // ------------------------------------------------------------------
+
   /** The committed-but-unfinished fold under `root`, if any:
     * (tmp path, target segment id). Pre-marker tmps are NOT reported —
     * to a reader they do not exist.
     */
-  def committedFold(fs: FileSystem, root: String): Option[(Path, Long)] = {
+  private def committedFold(fs: FileSystem, root: String): Option[(Path, Long)] = {
     val tmp = new Path(root, FoldTmp)
     val marker = new Path(tmp, FoldMarker)
     if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      val target = try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-                   finally in.close()
-      Some((tmp, target))
-    }
+    else Some((tmp, readTarget(fs, marker)))
   }
 
-  /** The reader's view of a fold table: (live on-disk segment ids,
-    * committed fold). Ids ≤ a committed fold's target are superseded
-    * by the tmp (which stands in for `seg=<target>`) and excluded —
-    * they may be half-deleted by a crashed finish, and reading them
-    * TOGETHER with the tmp would double-count. Purely observational:
-    * never mutates, so it is safe concurrent with the single writer.
+  private def readTarget(fs: FileSystem, marker: Path): Long = {
+    val in = fs.open(marker)
+    try scala.io.Source.fromInputStream(in).mkString.trim.toLong
+    finally in.close()
+  }
+
+  /** The segments a reader of the fold table under `root` unions, as
+    * (segment id, dir) pairs: the live `seg=<id>` dirs, then a
+    * committed-but-unfinished fold's tmp under its target id. Ids ≤
+    * that target are superseded by the tmp and left out: a crashed
+    * finish may have half-deleted them, and reading them TOGETHER with
+    * the tmp would double-count. Each reader applies its own filter
+    * (committed ids, non-empty dirs). Purely observational: never
+    * mutates, so it is safe concurrent with the single writer.
     */
-  def readView(fs: FileSystem, root: String): (Seq[Long], Option[(Path, Long)]) = {
+  def readSegments(fs: FileSystem, root: String): Seq[(Long, Path)] = {
     val fold = committedFold(fs, root)
     val cut = fold.map(_._2).getOrElse(Long.MinValue)
-    (segIdsOnDisk(fs, root).filter(_ > cut), fold)
+    segIdsOnDisk(fs, root).filter(_ > cut)
+      .map(i => (i, new Path(s"$root/seg=$i"))) ++ fold.map(_.swap)
   }
 
   /** WRITER-CLASS recovery: finish a marker-committed fold forward,
@@ -134,6 +190,24 @@ object SegmentProtocol {
     if (!fs.exists(tmp)) return
     if (fs.exists(new Path(tmp, FoldMarker))) finishFold(fs, root)
     else fs.delete(tmp, true) // crashed before the commit point
+  }
+
+  /** One fold of the table under `root`: recover, let `choose` pick the
+    * fold set from the on-disk segment ids, `write` the folded rows of
+    * those segment dirs to the tmp path, and commit them into the set's
+    * highest id, so every segment left stays above the base. Fewer than
+    * two chosen segments fold nothing. Single-writer. Returns the
+    * number of segments folded.
+    */
+  def fold(fs: FileSystem, root: String)(choose: Seq[Long] => Seq[Long])
+          (write: (Seq[Path], String) => Unit): Int = {
+    recoverFold(fs, root)
+    val ids = choose(segIdsOnDisk(fs, root))
+    if (ids.length < 2) return 0
+    write(ids.map(i => new Path(s"$root/seg=$i")),
+      new Path(root, FoldTmp).toString)
+    commitFold(fs, root, ids.last)
+    ids.length
   }
 
   /** The fold's commit: write the `target` marker into the
@@ -150,10 +224,7 @@ object SegmentProtocol {
 
   private def finishFold(fs: FileSystem, root: String): Unit = {
     val tmp = new Path(root, FoldTmp)
-    val markerPath = new Path(tmp, FoldMarker)
-    val in = fs.open(markerPath)
-    val target = try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-                 finally in.close()
+    val target = readTarget(fs, new Path(tmp, FoldMarker))
     segIdsOnDisk(fs, root).filter(_ <= target)
       .foreach(i => fs.delete(new Path(s"$root/seg=$i"), true))
     val dst = new Path(s"$root/seg=$target")
@@ -165,6 +236,25 @@ object SegmentProtocol {
     // crash right here leaves a "_"-file parquet readers ignore.
     fs.delete(new Path(dst, FoldMarker), false)
   }
+
+  /** A fold as a schedulable [[graft.Pipeline.Stage]], the way Druid's
+    * coordinator drives compaction: each run inspects the segment count
+    * under `root` driver-side and calls `compact` only when it exceeds
+    * `maxSegments`. The stage's one row, (segments_before,
+    * segments_folded, segments_after), is the decision record; run it
+    * in the same pipeline as the store's ingest, never concurrently
+    * with one.
+    */
+  def compactionStage(name: String, root: String, maxSegments: Int)
+                     (compact: SparkSession => Int): Pipeline.Stage =
+    Pipeline.stage(name) { spark =>
+      import spark.implicits.{newProductEncoder, localSeqToDatasetHolder}
+      val fs = fsOf(spark, root)
+      val before = segIdsOnDisk(fs, root).length
+      val folded = if (before > maxSegments) compact(spark) else 0
+      Seq((before.toLong, folded.toLong, segIdsOnDisk(fs, root).length.toLong))
+        .toDF("segments_before", "segments_folded", "segments_after")
+    }
 
   // ------------------------------------------------------------------
   // SWAP protocol
@@ -224,4 +314,39 @@ object SegmentProtocol {
     if (fs.exists(live)) live
     else if (fs.exists(new Path(tmp, marker))) tmp
     else live // caller's read of the absent live dir raises its own error
+
+  // ------------------------------------------------------------------
+  // Session store dirs
+  // ------------------------------------------------------------------
+
+  private val sessionStores =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), String]
+
+  // a shutdown hook, not deleteOnExit, which cannot remove non-empty
+  // directories
+  sys.addShutdownHook(sessionStores.values.forEach(d => rmRf(d)))
+
+  private def rmRf(dir: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    val p = java.nio.file.Paths.get(dir)
+    if (java.nio.file.Files.exists(p))
+      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.deleteIfExists(_))
+  }
+
+  /** The temp store dir of the declared query `kind` over `source`, one
+    * per JVM: the first call creates it and runs `build` on it, every
+    * later call returns it as built. This is a standing store's
+    * deployment contract (pay the ingest once, answer from the store
+    * after that), and it keeps a repeated query from re-ingesting its
+    * corpus. The dirs are removed at JVM exit; a dir whose `build`
+    * throws is removed at once and built again by the next call.
+    */
+  def sessionStore(kind: String, source: String)(build: String => Unit): String =
+    sessionStores.computeIfAbsent((kind, source), { _ =>
+      val d = java.nio.file.Files.createTempDirectory(s"graft_$kind").toString
+      try build(d)
+      catch { case e: Throwable => rmRf(d); throw e }
+      d
+    })
 }

@@ -116,7 +116,7 @@ object SparkEntry {
     "q53_time_weighted_avg" -> ((s, d) => TimeSeries.timeWeightedAvg(Tables.events(s, d))),
     "q54_weighted_mean" -> ((s, d) => Analytics.weightedMeanByType(Tables.events(s, d))),
     "q55_sql_interface" -> { (s, d) =>
-      Tables.registerViews(s, d)
+      Tables.events(s, d).createOrReplaceTempView("events")
       s.sql(sqlInterfaceQuery)
     },
     "q56_semi_join" -> ((s, d) =>

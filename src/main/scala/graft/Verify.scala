@@ -1,14 +1,17 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   /** Dump every selected query's result for one table dir, plus the
     * oracle SQL map — the unit both [[Verify.main]] (one corpus) and
-    * [[VerifySweep.main]] (a root of fuzz corpora) drive.
+    * [[VerifySweep.main]] (a root of fuzz corpora) drive. A failing
+    * query is reported and the others still dump; returns the names of
+    * the queries that failed.
     */
-  def dump(spark: SparkSession, sfDir: String, outDir: String): Unit = {
+  def dump(spark: SparkSession, sfDir: String, outDir: String): Seq[String] = {
     new java.io.File(outDir).mkdirs()
     // dev-loop filter (driver never sets it): SPARK_GRAFT_ONLY=q69_spend_deciles
     val only = sys.env.get("SPARK_GRAFT_ONLY").filter(_.nonEmpty)
@@ -16,11 +19,14 @@ object Verify {
     val selected =
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (k, _) => only.contains(k) }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failed = selected.toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -38,7 +44,15 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    failed
   }
+
+  /** Exit 1 naming every failed query, after the session is stopped. */
+  private[graft] def exitOnFailures(failed: Seq[String]): Unit =
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.length} failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -47,8 +61,9 @@ object Verify {
     // exactly the optimizer settings the library is tested with
     val spark = Engine.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    dump(spark, sfDir, outDir)
+    val failed = dump(spark, sfDir, outDir)
     spark.stop()
+    exitOnFailures(failed)
   }
 }
 
@@ -71,10 +86,11 @@ object VerifySweep {
     val dirs = Option(new java.io.File(root).listFiles())
       .getOrElse(Array.empty).filter(_.isDirectory).map(_.getName).sorted
     require(dirs.nonEmpty, s"no corpus subdirs under $root")
-    dirs.foreach { d =>
+    val failed = dirs.toSeq.flatMap { d =>
       println(s"[verify-sweep] $d")
-      Verify.dump(spark, s"$root/$d", s"$outRoot/$d")
+      Verify.dump(spark, s"$root/$d", s"$outRoot/$d").map(q => s"$d/$q")
     }
     spark.stop()
+    Verify.exitOnFailures(failed)
   }
 }

@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * 6-group parse costs 6 renders + 6 regex executions per row (q20
   * measured ~1.4 s at sf0.1 for a 5-column extract). This runs the
   * match once; consume it through a generator barrier (see
-  * `Ingest.parseLogLines`) so the array is also evaluated once.
+  * `Ingest.logParse`) so the array is also evaluated once.
   *
   * Per-group semantics mirror `regexp_extract`: unanchored `find()`,
   * "" for a group that did not participate, and "" for every group

@@ -1257,33 +1257,4 @@ object Dedup {
         $"matched_doc".isNull.as("keep"))
       .orderBy($"doc_id")
   }
-
-  /** q129's two-batch shape over a FRESH persisted band store (round
-    * 18 — the r17 localCheckpoint stand-in retired): the corpus split
-    * at its median doc_id and ingested as two marker-committed
-    * batches into [[MinhashStore]], retention answered MERGE-ON-READ
-    * from the STORED edge log — which provably equals one-shot q127:
-    * each pair is discovered exactly once, when its later-arriving
-    * member arrives, so the accumulated edge set IS the one-shot edge
-    * set under any arrival order (both equalities spec-pinned). The
-    * incremental saving is in the signatures: batch 2 never
-    * re-tokenizes or re-signatures batch 1's corpus, and
-    * standing×standing pairs are never re-generated. This form builds
-    * a fresh temp store per call (the spec path); the declared query
-    * is [[MinhashStore.roundTrip]], which session-caches the store
-    * per source — the deployment contract.
-    */
-  def dedupKeepBestLshTwoBatch(documents: DataFrame, n: Int = 3,
-                               tauEst: Double = 0.1, k: Int = MinHashK,
-                               bands: Int = Bands): DataFrame = {
-    val d = java.nio.file.Files.createTempDirectory("graft_minhash_2b")
-    sys.addShutdownHook {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(d))
-        java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-    MinhashStore.ingestTwoBatches(documents, d.toString, n, tauEst, k, bands)
-    MinhashStore.dedupKeepBestStored(documents, d.toString)
-  }
 }

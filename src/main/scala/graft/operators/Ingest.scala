@@ -49,9 +49,6 @@ object Ingest {
     * array is materialized once and the final projection reads plain
     * array elements. Still fully codegen'd end to end.
     */
-  def parseLogLines(lines: DataFrame): DataFrame =
-    parsedLines(lines).orderBy($"event_id")
-
   private def parsedLines(lines: DataFrame): DataFrame = {
     graft.functions.Registry.ensure(lines.sparkSession)
     lines

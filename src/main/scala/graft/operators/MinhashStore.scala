@@ -2,14 +2,14 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
+import graft.SegmentProtocol
 
-/** The PERSISTED standing MinHash band table (q129, round 18) — the
-  * parquet store a crawl-dedup deployment actually maintains between
-  * batches, replacing r17's in-session `localCheckpoint` stand-in
-  * (whose own scaladoc named the gap). The standing artifact is
-  * [[Dedup.minhashBanded]]'s output: one row per (doc, band) carrying
-  * the band bucket key AND the full signature, so probing it is one
+/** The PERSISTED standing MinHash band table (q129) — the parquet
+  * store a crawl-dedup deployment actually maintains between batches.
+  * The standing artifact is [[Dedup.minhashBanded]]'s output: one row
+  * per (doc, band) carrying the band bucket key AND the full
+  * signature, so probing it is one
   * equi-join with in-row est-Jaccard verification — an arriving batch
   * pays its own signature pass plus that join; the standing corpus is
   * never re-tokenized, re-signatured, or re-paired against itself.
@@ -26,8 +26,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *     commits/<batchId>               commit markers (the commit POINT)
   * }}}
   *
-  * Exactly-once mechanics — the q121 segment-sink discipline applied
-  * to the dedup screen:
+  * Exactly-once mechanics — [[graft.SegmentProtocol.commitBatch]]'s
+  * batch ledger applied to the dedup screen:
   *
   *  - a batch's three frames all land under `seg=<batchId>` dirs with
   *    mode=overwrite, and the bare `commits/<batchId>` marker is
@@ -67,21 +67,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   */
 object MinhashStore {
 
-  private def fsOf(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def markerPath(storeDir: String, batchId: Long): Path =
-    new Path(s"$storeDir/commits/$batchId")
-
   /** Committed batch ids, ascending. Driver-side listing of
     * `commits/` — O(batches) names, no job.
     */
-  def committedIds(spark: SparkSession, storeDir: String): Seq[Long] = {
-    val fs = fsOf(spark, storeDir)
-    val dir = new Path(s"$storeDir/commits")
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName.toLong).sorted
-  }
+  def committedIds(spark: SparkSession, storeDir: String): Seq[Long] =
+    SegmentProtocol.committedIds(SegmentProtocol.fsOf(spark, storeDir), storeDir)
 
   /** Read the committed segments in `ids` under `root` as one frame —
     * `project` (applied per part, before the union) selects the
@@ -90,42 +80,27 @@ object MinhashStore {
     * data: an EMPTY batch frame writes no part file (only _SUCCESS —
     * or, for a duplicate-free batch's edges, nothing at all), and a
     * path list containing such a segment would fail schema inference
-    * for the whole union. Driver-side listing, O(segments) — the
-    * explicit-dir discipline q121's storedValueSketch established (a
-    * glob would turn the empty case into a stack trace).
+    * for the whole union.
     *
-    * NON-MUTATING (r19, ADVICE): a committed-but-unfinished fold is
-    * read AROUND via [[graft.SegmentProtocol.readView]] — segments
-    * above the fold target from disk, the tmp dir standing in for
-    * `seg=<target>` — instead of finished from the read path, so a
-    * read concurrent with an in-flight or crashed compaction never
-    * deletes the writer's tmp and never races another reader's
-    * recovery. Finishing forward is writer-class: the next
-    * [[compactStore]] does it. The tmp substitutes soundly under any
-    * caller filter because fold targets are committed ids and ingest
-    * ids are monotonic: every standing-table window (`id <
-    * beforeBatch` for a fresh or replayed batch) contains either ALL
-    * of the fold set or none of it.
+    * The segments come from [[graft.SegmentProtocol.readSegments]], so
+    * a read never mutates a crashed or in-flight compaction. Its tmp
+    * substitutes soundly under any caller filter because fold targets
+    * are committed ids and ingest ids are monotonic: every
+    * standing-table window (`id < beforeBatch` for a fresh or replayed
+    * batch) contains either ALL of the fold set or none of it.
     */
   private def readSub(spark: SparkSession, root: String, ids: Seq[Long])
                      (project: DataFrame => DataFrame): Option[DataFrame] = {
-    val fs = fsOf(spark, root)
-    val (liveIds, fold) = graft.SegmentProtocol.readView(fs, root)
+    val fs = SegmentProtocol.fsOf(spark, root)
     val want = ids.toSet
-    val segPaths = liveIds.filter(want)
-      .map(i => new Path(s"$root/seg=$i"))
-      .filter(graft.SegmentProtocol.hasDataFiles(fs, _))
-      .map(_.toString)
+    val (segs, tmp) = SegmentProtocol.readSegments(fs, root).collect {
+      case (i, p) if want(i) && SegmentProtocol.hasDataFiles(fs, p) => p
+    }.partition(_.getName.startsWith("seg="))
     val base =
-      if (segPaths.isEmpty) None
-      else Some(project(spark.read.option("basePath", root)
-        .parquet(segPaths: _*)))
-    val tmpPart = fold.collect {
-      case (tmp, target) if want(target) &&
-          graft.SegmentProtocol.hasDataFiles(fs, tmp) =>
-        project(spark.read.parquet(tmp.toString))
-    }
-    (base.toSeq ++ tmpPart.toSeq).reduceOption(_ unionByName _)
+      if (segs.isEmpty) None
+      else Some(spark.read.option("basePath", root).parquet(segs.map(_.toString): _*))
+    (base ++ tmp.map(p => spark.read.parquet(p.toString))).map(project)
+      .reduceOption(_ unionByName _)
   }
 
   /** The standing band table visible to batch `beforeBatch`: committed
@@ -192,33 +167,26 @@ object MinhashStore {
                   n: Int = 3, tauEst: Double = 0.1,
                   k: Int = Dedup.MinHashK, bands: Int = Dedup.Bands): Unit = {
     val spark = batch.sparkSession
-    val fs = fsOf(spark, storeDir)
-    if (fs.exists(markerPath(storeDir, batchId))) return // committed replay
-    val committed = committedIds(spark, storeDir)
-    require(committed.forall(_ < batchId),
-      s"batchId $batchId is below a committed segment " +
-        s"(${committed.max}) but carries no marker — the ingest ledger " +
-        "and the store disagree; refusing to rewrite history")
-    val banded = Dedup.minhashBanded(batch, n, k, bands).localCheckpoint(true)
-    val standing = storedBandsBefore(spark, storeDir, batchId)
-    // 1. online decisions for THIS batch against the pre-batch
-    //    standing table (keep-first-arrival; recomputed identically on
-    //    replay because the standing set is frozen by the marker rule)
-    Dedup.minhashScreenBatch(batch, standing, n, tauEst, k, bands,
-        prebanded = Some(banded))
-      .write.mode("overwrite").parquet(s"$storeDir/decisions/seg=$batchId")
-    // 2. the batch's signature contribution — band-partitioned, one
-    //    file per band (the q130 one-file-per-partition discipline)
-    banded.repartition($"band")
-      .write.mode("overwrite").partitionBy("band")
-      .parquet(s"$storeDir/bands/seg=$batchId")
-    // 3. the edges this arrival discovers (within-batch + cross into
-    //    the standing corpus) — the arrival-order-invariant log
-    Dedup.minhashProbe(banded, standing, tauEst, k)
-      .write.mode("overwrite").parquet(s"$storeDir/edges/seg=$batchId")
-    // 4. the commit point — only now does the segment become visible
-    fs.mkdirs(new Path(s"$storeDir/commits"))
-    fs.create(markerPath(storeDir, batchId), true).close()
+    SegmentProtocol.commitBatch(SegmentProtocol.fsOf(spark, storeDir),
+        storeDir, batchId) {
+      val banded = Dedup.minhashBanded(batch, n, k, bands).localCheckpoint(true)
+      val standing = storedBandsBefore(spark, storeDir, batchId)
+      // 1. online decisions for THIS batch against the pre-batch
+      //    standing table (keep-first-arrival; recomputed identically on
+      //    replay because the standing set is frozen by the marker rule)
+      Dedup.minhashScreenBatch(batch, standing, n, tauEst, k, bands,
+          prebanded = Some(banded))
+        .write.mode("overwrite").parquet(s"$storeDir/decisions/seg=$batchId")
+      // 2. the batch's signature contribution — band-partitioned, one
+      //    file per band (the q130 one-file-per-partition discipline)
+      banded.repartition($"band")
+        .write.mode("overwrite").partitionBy("band")
+        .parquet(s"$storeDir/bands/seg=$batchId")
+      // 3. the edges this arrival discovers (within-batch + cross into
+      //    the standing corpus) — the arrival-order-invariant log
+      Dedup.minhashProbe(banded, standing, tauEst, k)
+        .write.mode("overwrite").parquet(s"$storeDir/edges/seg=$batchId")
+    }
   }
 
   /** Merge-on-read retention over the STORED edge log: cluster +
@@ -251,49 +219,33 @@ object MinhashStore {
                        checkpointDir: String,
                        n: Int = 3, tauEst: Double = 0.1,
                        k: Int = Dedup.MinHashK,
-                       bands: Int = Dedup.Bands): Unit = {
-    val q = docs.writeStream
+                       bands: Int = Dedup.Bands): Unit =
+    graft.streaming.EventStream.drainOnce(docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         ingestBatch(batch, storeDir, batchId, n, tauEst, k, bands)
-      }
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop(); q.awaitTermination()
-    }
-  }
+      })
 
-  /** Declared q129 shape (round 18: the store is REAL — r17's
-    * localCheckpoint stand-in retired): the corpus split at its
-    * median doc_id arrives as two batches through the marker-committed
-    * ingest into a persisted store; retention is answered
-    * MERGE-ON-READ from the stored edge log. Store dirs are
-    * per-session, keyed by source (the q121/q130 discipline): the
-    * first invocation pays both ingests, every later one answers from
-    * the standing store — exactly the operator's deployment contract.
+  /** Declared q129 shape: the corpus split at its median doc_id
+    * arrives as two batches through the marker-committed ingest into a
+    * persisted store; retention is answered MERGE-ON-READ from the
+    * stored edge log. The store is built once per source
+    * ([[graft.SegmentProtocol.sessionStore]]): the first invocation
+    * pays both ingests, every later one answers from the standing
+    * store — exactly the operator's deployment contract.
     */
   def roundTrip(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = graft.sources.Tables.documents(spark, sfDir)
-    val dir = storeDirs.computeIfAbsent(sfDir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft_minhash_store")
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        if (java.nio.file.Files.exists(d))
-          java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-      ingestTwoBatches(docs, d.toString)
-      d.toString
-    })
-    dedupKeepBestStored(docs, dir)
+    dedupKeepBestStored(docs,
+      SegmentProtocol.sessionStore("minhash_store", sfDir)(
+        ingestTwoBatches(docs, _)))
   }
 
-  /** One subdir's fold — [[graft.SegmentProtocol]]'s fold protocol
-    * (r19: the shared kernel replaced this file's verbatim copy) with
-    * the store's own invariants layered on:
+  /** One subdir's fold — [[graft.SegmentProtocol.fold]] with the
+    * store's own invariants layered on:
     *
     *  - the fold set is the on-disk segments INTERSECTED with the
-    *    commit ledger (r19, ADVICE): a crashed uncommitted ingest
+    *    commit ledger: a crashed uncommitted ingest
     *    leaves seg dirs without a marker, and folding one would make
     *    its phantom rows reader-visible inside a committed base (or
     *    fold committed rows into an uncommitted target id every
@@ -303,52 +255,49 @@ object MinhashStore {
     *    garbage; an uncommitted dir ABOVE it is an ingest awaiting
     *    replay and is left alone (and, being above every committed
     *    id, can never sit below a fold target).
-    *  - only data-bearing segments are read (r19, ADVICE): a
+    *  - only data-bearing segments are read: a
     *    duplicate-free corpus commits edge segments holding only
     *    _SUCCESS, and a path list of those would fail schema
     *    inference. If the whole fold set is empty dirs there is
     *    nothing to publish — the folded dirs are simply deleted
-    *    (readers resolve a missing seg dir to no extra path).
+    *    (readers resolve a missing seg dir to no extra path), and the
+    *    subdir reports no fold.
     */
   private def foldSub(spark: SparkSession, root: String,
                       committed: Seq[Long], partitioned: Boolean,
                       keepNewest: Int): Int = {
-    val fs = fsOf(spark, root)
-    graft.SegmentProtocol.recoverFold(fs, root)
-    val onDisk = graft.SegmentProtocol.segIdsOnDisk(fs, root)
+    val fs = SegmentProtocol.fsOf(spark, root)
     val committedSet = committed.toSet
-    if (committed.nonEmpty)
-      onDisk.filter(i => !committedSet(i) && i < committed.max)
-        .foreach(i => fs.delete(new Path(s"$root/seg=$i"), true))
-    val fold = onDisk.filter(committedSet).dropRight(keepNewest)
-    if (fold.length < 2) return 0
-    val target = fold.last
-    require(committedSet(target), s"fold target $target is not committed")
-    val tmp = new Path(root, graft.SegmentProtocol.FoldTmp)
-    fs.delete(tmp, true) // an uncommitted earlier attempt is garbage
-    val dataPaths = fold.map(i => new Path(s"$root/seg=$i"))
-      .filter(graft.SegmentProtocol.hasDataFiles(fs, _))
-    if (dataPaths.isEmpty) {
-      // nothing to publish: drop the empty folded dirs directly —
-      // no marker needed, a crash mid-delete leaves empty dirs that
-      // carry no data and fold again next period
-      fold.foreach(i => fs.delete(new Path(s"$root/seg=$i"), true))
-      return fold.length
+    def segDir(i: Long) = new Path(s"$root/seg=$i")
+    SegmentProtocol.fold(fs, root) { onDisk =>
+      if (committed.nonEmpty)
+        onDisk.filter(i => !committedSet(i) && i < committed.max)
+          .foreach(i => fs.delete(segDir(i), true))
+      val fold = onDisk.filter(committedSet).dropRight(keepNewest)
+      if (fold.length < 2 || fold.exists(i => SegmentProtocol.hasDataFiles(fs, segDir(i))))
+        fold
+      else {
+        // nothing to publish: drop the empty folded dirs directly —
+        // no marker needed, a crash mid-delete leaves empty dirs that
+        // carry no data and fold again next period
+        fold.foreach(i => fs.delete(segDir(i), true))
+        Seq.empty
+      }
+    } { (segs, tmp) =>
+      val df = spark.read.option("basePath", root)
+        .parquet(segs.filter(SegmentProtocol.hasDataFiles(fs, _)).map(_.toString): _*)
+        .drop("seg")
+      // band rows are immutable facts, so the fold is PURE CONCATENATION
+      // (simpler than q121's sum merge); the bands subdir re-applies
+      // the one-file-per-band layout law on the way through
+      val writer =
+        if (partitioned)
+          df.select($"doc_id", $"band_key", $"sig", $"band")
+            .repartition($"band")
+            .write.partitionBy("band")
+        else df.write
+      writer.mode("overwrite").parquet(tmp)
     }
-    val df = spark.read.option("basePath", root)
-      .parquet(dataPaths.map(_.toString): _*).drop("seg")
-    // band rows are immutable facts, so the fold is PURE CONCATENATION
-    // (simpler than q121's sum merge); the bands subdir re-applies
-    // the one-file-per-band layout law on the way through
-    val writer =
-      if (partitioned)
-        df.select($"doc_id", $"band_key", $"sig", $"band")
-          .repartition($"band")
-          .write.partitionBy("band")
-      else df.write
-    writer.mode("overwrite").parquet(tmp.toString)
-    graft.SegmentProtocol.commitFold(fs, root, target)
-    fold.length
   }
 
   /** Fold every data segment except the newest `keepNewest` into one
@@ -381,26 +330,14 @@ object MinhashStore {
     folded
   }
 
-  /** The fold as a schedulable [[graft.Pipeline.Stage]] (the
-    * EventStream.compactionStage coordinator cadence): inspect each
-    * interval, fold only past `maxSegments` fragmentation, record the
-    * decision row.
+  /** [[compactStore]] as a schedulable [[graft.Pipeline.Stage]] that
+    * folds once the bands subdir holds more than `maxSegments` segments
+    * ([[graft.SegmentProtocol.compactionStage]]).
     */
   def compactionStage(storeDir: String, maxSegments: Int = 8,
                       keepNewest: Int = 1): graft.Pipeline.Stage =
-    graft.Pipeline.stage(s"compact-minhash:$storeDir") { spark =>
-      import spark.implicits.{newProductEncoder, localSeqToDatasetHolder}
-      val fs = fsOf(spark, storeDir)
-      val before =
-        graft.SegmentProtocol.segIdsOnDisk(fs, s"$storeDir/bands").length
-      val folded =
-        if (before > maxSegments) compactStore(spark, storeDir, keepNewest)
-        else 0
-      Seq((before.toLong, folded.toLong,
-          graft.SegmentProtocol.segIdsOnDisk(fs, s"$storeDir/bands")
-            .length.toLong))
-        .toDF("segments_before", "segments_folded", "segments_after")
-    }
+    SegmentProtocol.compactionStage(s"compact-minhash:$storeDir",
+      s"$storeDir/bands", maxSegments)(compactStore(_, storeDir, keepNewest))
 
   /** Split at the median doc_id and ingest as two batches — the
     * deterministic two-arrival cadence the q129 specs pin (shared by
@@ -423,7 +360,4 @@ object MinhashStore {
     ingestBatch(docs.filter($"doc_id" > cut), storeDir, 1L,
       n, tauEst, k, bands)
   }
-
-  private val storeDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
 }

@@ -1325,30 +1325,17 @@ object Similarity {
     exactRerank(embeddings, short, qRows, k)
   }
 
-  /** Declared q130 shape: build the persisted index ONCE per session
-    * per source (the q121 segment-store discipline — the first call
-    * pays training + encode + write, every later call searches the
-    * SAME stored index, which is exactly the operator's deployment
+  /** Declared q130 shape: build the persisted index ONCE per source
+    * ([[graft.SegmentProtocol.sessionStore]] — the first call pays
+    * training + encode + write, every later call searches the SAME
+    * stored index, which is exactly the operator's deployment
     * contract), then answer the standard query batch FROM storage.
     */
-  private val ivfpqIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   def ivfpqStoreRoundTrip(spark: org.apache.spark.sql.SparkSession,
                           sfDir: String): DataFrame = {
     val emb = graft.sources.Tables.embeddings(spark, sfDir)
-    val dir = ivfpqIndexDirs.computeIfAbsent(sfDir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft_ivfpq_idx")
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        if (java.nio.file.Files.exists(d))
-          java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-      ivfpqWriteIndex(emb, d.toString)
-      d.toString
-    })
-    ivfpqStoredTopK(emb, dir)
+    ivfpqStoredTopK(emb, graft.SegmentProtocol.sessionStore("ivfpq_idx", sfDir)(
+      ivfpqWriteIndex(emb, _)))
   }
 
   /** Append a batch of vectors to a persisted IVFPQ index (q134) —
@@ -1440,18 +1427,7 @@ object Similarity {
 
   private def segRoot(indexDir: String) = s"$indexDir/codes_seg"
 
-  private def segMarkerPath(indexDir: String, batchId: Long) =
-    new org.apache.hadoop.fs.Path(s"${segRoot(indexDir)}/commits/$batchId")
-
   private[graft] val FoldedSegsFile = "_FOLDED_SEGS"
-
-  private def committedSegIds(fs: org.apache.hadoop.fs.FileSystem,
-                              indexDir: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"${segRoot(indexDir)}/commits")
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.forall(_.isDigit)).map(_.toLong).sorted
-  }
 
   /** Segment ids a compaction folded into the live base layout, per
     * the base's own `_FOLDED_SEGS` list (read from the swap-aware
@@ -1489,7 +1465,8 @@ object Similarity {
     */
   private def liveSegDirs(fs: org.apache.hadoop.fs.FileSystem,
                           indexDir: String): Seq[org.apache.hadoop.fs.Path] = {
-    val committed = committedSegIds(fs, indexDir).toSet
+    val committed =
+      graft.SegmentProtocol.committedIds(fs, segRoot(indexDir)).toSet
     if (committed.isEmpty) return Seq.empty
     val folded = foldedSegIds(fs, indexDir)
     graft.SegmentProtocol.segIdsOnDisk(fs, segRoot(indexDir))
@@ -1499,8 +1476,8 @@ object Similarity {
   }
 
   /** Ingest one arriving vector batch as a marker-committed streaming
-    * segment (q138) — [[graft.operators.MinhashStore.ingestBatch]]'s
-    * contract for the ANN store: single-writer, `batchId` fresh and
+    * segment (q138) — [[graft.SegmentProtocol.commitBatch]]'s ledger
+    * under `codes_seg/`: single-writer, `batchId` fresh and
     * above every committed id or a committed replay (no-op); cost ∝
     * batch (one [[encodeCellsLit]] projection against the stored
     * quantizers, one overwrite write, one batch-sized delta
@@ -1515,37 +1492,30 @@ object Similarity {
     graft.functions.Registry.ensure(spark)
     ivfpqRecoverCompact(spark, indexDir) // writer-class: swap + seg sweep
     val fs = graft.SegmentProtocol.fsOf(spark, indexDir)
-    if (fs.exists(segMarkerPath(indexDir, batchId))) return // committed replay
-    val committed = committedSegIds(fs, indexDir)
-    require(committed.forall(_ < batchId),
-      s"batchId $batchId is below a committed segment " +
-        s"(${committed.max}) but carries no marker — the streaming " +
-        "checkpoint and the store disagree; refusing to rewrite history")
-    val coarse = readCoarse(spark, indexDir)
-    val cents = readCodebooks(spark, indexDir)
-    require(coarse.nonEmpty && cents.head.nonEmpty,
-      s"ivfpqIngestBatch: index at $indexDir has an empty quantizer — " +
-        "train/write it before ingesting")
-    val byResidual = spark.read.parquet(s"$indexDir/meta").head()
-      .getAs[Boolean]("by_residual")
-    val segDir = s"${segRoot(indexDir)}/seg=$batchId"
-    encodeCellsLit(batch, cents, coarse, byResidual, withD2 = true)
-      .repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(segDir)
-    // the segment's ledger delta, from its own just-written columnar
-    // (cid, d2) — self-consistent by construction, same as the build's
-    // seed; skipped for an empty batch (nothing to count, and the
-    // empty read would fail schema inference)
-    if (segHasCodes(fs, new org.apache.hadoop.fs.Path(segDir)))
-      spark.read.parquet(segDir)
-        .groupBy(col("cid").cast("long").as("cid"))
-        .agg(count(lit(1)).as("d_n"), sum($"d2").as("d_sum_d2"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$segDir/_delta")
-    // the commit point — only now does the segment (codes AND delta)
-    // become visible; the marker survives the compaction fold so a
-    // late replay of a folded batch stays a no-op forever
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"${segRoot(indexDir)}/commits"))
-    fs.create(segMarkerPath(indexDir, batchId), true).close()
+    // the commit marker survives the compaction fold, so a late replay
+    // of a folded batch stays a no-op forever
+    graft.SegmentProtocol.commitBatch(fs, segRoot(indexDir), batchId) {
+      val coarse = readCoarse(spark, indexDir)
+      val cents = readCodebooks(spark, indexDir)
+      require(coarse.nonEmpty && cents.head.nonEmpty,
+        s"ivfpqIngestBatch: index at $indexDir has an empty quantizer — " +
+          "train/write it before ingesting")
+      val byResidual = spark.read.parquet(s"$indexDir/meta").head()
+        .getAs[Boolean]("by_residual")
+      val segDir = s"${segRoot(indexDir)}/seg=$batchId"
+      encodeCellsLit(batch, cents, coarse, byResidual, withD2 = true)
+        .repartition(col("cid"))
+        .write.mode("overwrite").partitionBy("cid").parquet(segDir)
+      // the segment's ledger delta, from its own just-written columnar
+      // (cid, d2) — self-consistent by construction, same as the build's
+      // seed; skipped for an empty batch (nothing to count, and the
+      // empty read would fail schema inference)
+      if (segHasCodes(fs, new org.apache.hadoop.fs.Path(segDir)))
+        spark.read.parquet(segDir)
+          .groupBy(col("cid").cast("long").as("cid"))
+          .agg(count(lit(1)).as("d_n"), sum($"d2").as("d_sum_d2"))
+          .coalesce(1).write.mode("overwrite").parquet(s"$segDir/_delta")
+    }
   }
 
   /** STREAMING ingest — [[ivfpqIngestBatch]] as the checkpointed
@@ -1558,17 +1528,12 @@ object Similarity {
     * with the same checkpoint resumes.
     */
   def ivfpqIngestStreamOnce(vecs: DataFrame, indexDir: String,
-                            checkpointDir: String): Unit = {
-    val q = vecs.writeStream
+                            checkpointDir: String): Unit =
+    graft.streaming.EventStream.drainOnce(vecs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         ivfpqIngestBatch(batch, indexDir, batchId)
-      }
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop(); q.awaitTermination()
-    }
-  }
+      })
 
   /** WRITER-CLASS sweep of compaction-folded streaming segments, per
     * the live layout's `_FOLDED_SEGS` list: migrate each surviving
@@ -1812,30 +1777,24 @@ object Similarity {
   /** Fold every manifest-ledger delta segment into one base: per-cell
     * sums are additive, so the fold is one groupBy over the segments'
     * union, marker-committed like every fold here. No-op below two
-    * data segments.
+    * segments; a fold set without a data file is deleted instead.
     */
   private def compactDeltaLedger(spark: org.apache.spark.sql.SparkSession,
                                  indexDir: String): Unit = {
     val root = deltaRoot(indexDir)
     val fs = graft.SegmentProtocol.fsOf(spark, root)
-    graft.SegmentProtocol.recoverFold(fs, root)
-    val ids = graft.SegmentProtocol.segIdsOnDisk(fs, root)
-    if (ids.length < 2) return
-    val dataPaths = ids.map(i => new org.apache.hadoop.fs.Path(s"$root/seg=$i"))
-      .filter(graft.SegmentProtocol.hasDataFiles(fs, _)).map(_.toString)
-    val tmp = new org.apache.hadoop.fs.Path(root,
-      graft.SegmentProtocol.FoldTmp)
-    fs.delete(tmp, true)
-    if (dataPaths.isEmpty) {
-      ids.foreach(i =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$root/seg=$i"), true))
-      return
+    def segDir(i: Long) = new org.apache.hadoop.fs.Path(s"$root/seg=$i")
+    graft.SegmentProtocol.fold(fs, root) { ids =>
+      if (ids.length < 2 ||
+          ids.exists(i => graft.SegmentProtocol.hasDataFiles(fs, segDir(i)))) ids
+      else { ids.foreach(i => fs.delete(segDir(i), true)); Seq.empty }
+    } { (segs, tmp) =>
+      spark.read.parquet(segs.filter(graft.SegmentProtocol.hasDataFiles(fs, _))
+          .map(_.toString): _*)
+        .groupBy($"cid")
+        .agg(sum($"d_n").as("d_n"), sum($"d_sum_d2").as("d_sum_d2"))
+        .coalesce(1).write.mode("overwrite").parquet(tmp)
     }
-    spark.read.parquet(dataPaths: _*)
-      .groupBy($"cid")
-      .agg(sum($"d_n").as("d_n"), sum($"d_sum_d2").as("d_sum_d2"))
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    graft.SegmentProtocol.commitFold(fs, root, ids.last)
   }
 
   /** The codes compaction as a schedulable [[graft.Pipeline.Stage]]
@@ -1885,9 +1844,6 @@ object Similarity {
           "max_files_after")
     }
 
-  private val ivfpqAppendDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** Declared q134 shape: train + write the index on the base 2/3 of
     * the corpus (vec_id % 3 ≠ 2), append the held-out third in TWO
     * later batches (split by parity — the multi-append deployment
@@ -1898,26 +1854,13 @@ object Similarity {
   def ivfpqAppendRoundTrip(spark: org.apache.spark.sql.SparkSession,
                            sfDir: String): DataFrame = {
     val emb = graft.sources.Tables.embeddings(spark, sfDir)
-    val dir = ivfpqAppendDirs.computeIfAbsent(sfDir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft_ivfpq_app")
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        if (java.nio.file.Files.exists(d))
-          java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-      ivfpqWriteIndex(emb.filter($"vec_id" % 3 =!= 2), d.toString)
-      ivfpqAppendIndex(
-        emb.filter($"vec_id" % 3 === 2 && $"vec_id" % 2 === 0), d.toString)
-      ivfpqAppendIndex(
-        emb.filter($"vec_id" % 3 === 2 && $"vec_id" % 2 =!= 0), d.toString)
-      d.toString
-    })
+    val dir = graft.SegmentProtocol.sessionStore("ivfpq_app", sfDir) { d =>
+      ivfpqWriteIndex(emb.filter($"vec_id" % 3 =!= 2), d)
+      ivfpqAppendIndex(emb.filter($"vec_id" % 3 === 2 && $"vec_id" % 2 === 0), d)
+      ivfpqAppendIndex(emb.filter($"vec_id" % 3 === 2 && $"vec_id" % 2 =!= 0), d)
+    }
     ivfpqStoredTopK(emb, dir)
   }
-
-  private val ivfpqStreamDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
 
   /** Declared q138 shape — q134's deployment cadence through the
     * STREAMING ingest path: build on the base 2/3 of the corpus, land
@@ -1933,28 +1876,15 @@ object Similarity {
   def ivfpqStreamRoundTrip(spark: org.apache.spark.sql.SparkSession,
                            sfDir: String): DataFrame = {
     val emb = graft.sources.Tables.embeddings(spark, sfDir)
-    val dir = ivfpqStreamDirs.computeIfAbsent(sfDir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft_ivfpq_str")
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        if (java.nio.file.Files.exists(d))
-          java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-      ivfpqWriteIndex(emb.filter($"vec_id" % 3 =!= 2), d.toString)
+    val dir = graft.SegmentProtocol.sessionStore("ivfpq_str", sfDir) { d =>
+      ivfpqWriteIndex(emb.filter($"vec_id" % 3 =!= 2), d)
       ivfpqIngestBatch(
-        emb.filter($"vec_id" % 3 === 2 && $"vec_id" % 2 === 0),
-        d.toString, 0L)
+        emb.filter($"vec_id" % 3 === 2 && $"vec_id" % 2 === 0), d, 0L)
       ivfpqIngestBatch(
-        emb.filter($"vec_id" % 3 === 2 && $"vec_id" % 2 =!= 0),
-        d.toString, 1L)
-      d.toString
-    })
+        emb.filter($"vec_id" % 3 === 2 && $"vec_id" % 2 =!= 0), d, 1L)
+    }
     ivfpqStoredTopK(emb, dir)
   }
-
-  private val ivfpqDeleteDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
 
   /** Declared q135 shape: build the persisted index on the full
     * corpus, tombstone a deterministic ~9% slice (vec_id ≡ 3 mod 11 —
@@ -1969,19 +1899,10 @@ object Similarity {
   def ivfpqDeleteRoundTrip(spark: org.apache.spark.sql.SparkSession,
                            sfDir: String): DataFrame = {
     val emb = graft.sources.Tables.embeddings(spark, sfDir)
-    val dir = ivfpqDeleteDirs.computeIfAbsent(sfDir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft_ivfpq_del")
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        if (java.nio.file.Files.exists(d))
-          java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-      ivfpqWriteIndex(emb, d.toString)
-      ivfpqDeleteIds(emb.filter($"vec_id" % 11 === 3).select($"vec_id"),
-        d.toString)
-      d.toString
-    })
+    val dir = graft.SegmentProtocol.sessionStore("ivfpq_del", sfDir) { d =>
+      ivfpqWriteIndex(emb, d)
+      ivfpqDeleteIds(emb.filter($"vec_id" % 11 === 3).select($"vec_id"), d)
+    }
     ivfpqStoredTopK(emb, dir)
   }
 
@@ -2016,14 +1937,13 @@ object Similarity {
   }
 
   // ------------------------------------------------------------------
-  // The standing manifest ledger (r19, VERDICT #4): q136's health
-  // signal maintained INCREMENTALLY — per-cell (n, Σd2) delta segments
-  // written by every index mutation from the batch's own rows, so the
-  // coordinator-period drift read costs O(nCells × mutations-since-
-  // fold) instead of one broadcast-argmin scan of the corpus. The
-  // per-cell additivity of (n, Σd2) makes the ledger EXACT (the
-  // scaladoc of ivfpqIndexManifest named this); segments fold under
-  // the shared SegmentProtocol kernel during index compaction.
+  // The standing manifest ledger: q136's health signal maintained
+  // INCREMENTALLY — per-cell (n, Σd2) delta segments written by every
+  // index mutation from the batch's own rows, so the coordinator-period
+  // drift read costs O(nCells × mutations-since-fold) instead of one
+  // broadcast-argmin scan of the corpus. The per-cell additivity of
+  // (n, Σd2) makes the ledger EXACT; segments fold under
+  // [[graft.SegmentProtocol.fold]] during index compaction.
   //
   //  - build/retrain writes seg=0 from the codes it just wrote (the
   //    d2 column encodeCellsLit persists — same integer residual as
@@ -2068,18 +1988,11 @@ object Similarity {
                          indexDir: String): Option[DataFrame] = {
     val root = deltaRoot(indexDir)
     val fs = graft.SegmentProtocol.fsOf(spark, root)
-    val (ids, fold) = graft.SegmentProtocol.readView(fs, root)
     // committed streaming segments carry their own not-yet-migrated
     // deltas (q138) — part of the ledger until the sweep moves them
-    val segDeltas = liveSegDirs(fs, indexDir)
-      .map(d => new org.apache.hadoop.fs.Path(d, "_delta"))
+    val paths = (graft.SegmentProtocol.readSegments(fs, root).map(_._2) ++
+        liveSegDirs(fs, indexDir).map(new org.apache.hadoop.fs.Path(_, "_delta")))
       .filter(graft.SegmentProtocol.hasDataFiles(fs, _)).map(_.toString)
-    val paths = ids.map(i => new org.apache.hadoop.fs.Path(s"$root/seg=$i"))
-      .filter(graft.SegmentProtocol.hasDataFiles(fs, _)).map(_.toString) ++
-      fold.collect {
-        case (tmp, _) if graft.SegmentProtocol.hasDataFiles(fs, tmp) =>
-          tmp.toString
-      } ++ segDeltas
     if (paths.isEmpty) None
     else Some(spark.read.parquet(paths: _*)
       .groupBy($"cid")
@@ -2285,9 +2198,6 @@ object Similarity {
       ivfpqRetrainIfDrifted(embeddings, indexDir, driftRatio)
     }
 
-  private val ivfpqRetrainDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** Declared q136 shape — the index lifecycle end-to-end, decision
     * log as the output (the compactionStage decision-record shape):
     * build the index on the corpus, run the retrain stage (run 1:
@@ -2309,14 +2219,7 @@ object Similarity {
         expr("transform(embedding, x -> x + CAST(10.0 AS FLOAT))")
           .as("embedding"))
     val corpus2 = emb.select($"vec_id", $"embedding").unionByName(blob)
-    val dir = ivfpqRetrainDirs.computeIfAbsent(sfDir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft_ivfpq_rt")
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        if (java.nio.file.Files.exists(d))
-          java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
+    val dir = graft.SegmentProtocol.sessionStore("ivfpq_rt", sfDir) { d =>
       val idx = s"$d/index"
       ivfpqWriteIndex(emb, idx)
       val log = Seq(1, 2, 3).map { run =>
@@ -2328,8 +2231,7 @@ object Similarity {
         ivfpqRetrainIfDrifted(liveCorpus, idx).withColumn("run", lit(run))
       }.reduce(_ unionByName _)
       log.coalesce(1).write.mode("overwrite").parquet(s"$d/retrain_log")
-      d.toString
-    })
+    }
     spark.read.parquet(s"$dir/retrain_log")
       .select($"run", $"n_live", $"mean_d2", $"baseline_mean_d2",
         $"retrained")

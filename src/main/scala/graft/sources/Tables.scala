@@ -115,13 +115,6 @@ object Tables {
     }
   }
 
-  /** Register every table as a temp view so pure SQL text runs
-    * against the engine — the surface a BI tool (the reference's
-    * Superset, README.md:154-166) connects to.
-    */
-  def registerViews(s: SparkSession, d: String): Unit =
-    names.foreach(n => load(s, d, n).createOrReplaceTempView(n))
-
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame   = load(s, d, "customer")

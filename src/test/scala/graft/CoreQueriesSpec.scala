@@ -25,6 +25,27 @@ class CoreQueriesSpec extends AnyFunSuite {
     }
   }
 
+  test("q55 registers only the events view it queries") {
+    val s = spark.newSession()
+    SparkEntry.queries("q55_sql_interface")(s, dir)
+    assert(s.catalog.listTables().collect().filter(_.isTemporary)
+      .map(_.name).toSet == Set("events"))
+  }
+
+  test("Verify.dump over a missing table dir fails every query but q97, isolated, and still writes the oracle SQL") {
+    val out = java.nio.file.Files.createTempDirectory("graft_verify_probe")
+    try {
+      val failed = Verify.dump(spark, "/nonexistent", out.toString)
+      assert(failed.toSet == SparkEntry.queries.keySet - "q97_goes_irradiance")
+      assert(java.nio.file.Files.exists(out.resolve("oracle_sql.json")))
+      assert(java.nio.file.Files.isDirectory(out.resolve("q97_goes_irradiance")))
+    } finally {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(out).iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.deleteIfExists(_))
+    }
+  }
+
   test("q01 groups cover all flag/status combos present") {
     val df = SparkEntry.queries("q01_pricing_summary")(spark, dir)
     val li = sources.Tables.lineitem(spark, dir)

@@ -978,11 +978,14 @@ class DedupSimilaritySpec extends AnyFunSuite {
   // ---- q129 standing MinHash screen ----
 
   test("q129 two-batch merge-on-read decisions equal one-shot q127 exactly") {
+    import graft.operators.MinhashStore
     val docs = Tables.documents(spark, dir)
     def sig(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getBoolean(4))).toSeq
-    assert(sig(Dedup.dedupKeepBestLshTwoBatch(docs)) ==
+    val store = mkTmp("graft_minhash_2b")
+    MinhashStore.ingestTwoBatches(docs, store)
+    assert(sig(MinhashStore.dedupKeepBestStored(docs, store)) ==
       sig(Dedup.dedupKeepBestLsh(docs)),
       "incremental band-table path diverged from one-shot keep-best-LSH")
   }
