@@ -11,11 +11,16 @@ import org.apache.spark.sql.SparkSession
   */
 object Engine {
 
-  /** Shared tuning applied to every session (batch, streaming, tests). */
+  /** Shared tuning applied to every session (batch, streaming, tests).
+    * [[graft.functions.GraftExtensions]] puts graft's native functions
+    * in every session state built from it: the session itself, each
+    * `newSession()` and each Thrift JDBC connection.
+    */
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .appName("graft")
+      .withExtensions(new graft.functions.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -5,7 +5,7 @@ import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  /** Dump every selected query's result for one table dir, plus the
+  /** Dump every query's result for one table dir, plus the
     * oracle SQL map — the unit both [[Verify.main]] (one corpus) and
     * [[VerifySweep.main]] (a root of fuzz corpora) drive. A failing
     * query is reported and the others still dump; returns the names of
@@ -13,13 +13,7 @@ object Verify {
     */
   def dump(spark: SparkSession, sfDir: String, outDir: String): Seq[String] = {
     new java.io.File(outDir).mkdirs()
-    // dev-loop filter (driver never sets it): SPARK_GRAFT_ONLY=q69_spend_deciles
-    val only = sys.env.get("SPARK_GRAFT_ONLY").filter(_.nonEmpty)
-      .map(_.split(",").toSet).getOrElse(Set.empty[String])
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (k, _) => only.contains(k) }
-    val failed = selected.toSeq.flatMap { case (name, fn) =>
+    val failed = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")

@@ -15,8 +15,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * CollapseProject inlines that subtree into every copy too, so a
   * 6-group parse costs 6 renders + 6 regex executions per row (q20
   * measured ~1.4 s at sf0.1 for a 5-column extract). This runs the
-  * match once; consume it through a generator barrier (see
-  * `Ingest.logParse`) so the array is also evaluated once.
+  * match once. Read the groups from the projection above it (see
+  * `Ingest.logParse`): CollapseProject does not inline an expensive
+  * expression that several columns read, so the array is also
+  * evaluated once.
   *
   * Per-group semantics mirror `regexp_extract`: unanchored `find()`,
   * "" for a group that did not participate, and "" for every group

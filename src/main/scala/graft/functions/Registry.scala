@@ -7,13 +7,13 @@ import org.apache.spark.sql.SparkSessionExtensions
 
 /** Registration of graft's native Catalyst expressions.
   *
-  * Two paths to the same functions:
-  *  - [[Registry.ensure]] — idempotent per-session registration,
-  *    invoked by the operators themselves, so any externally-created
-  *    SparkSession works;
-  *  - [[GraftExtensions]] — `spark.sql.extensions=graft.functions.GraftExtensions`
-  *    for deployments that want the functions injected at session
-  *    build time (cluster-wide SQL access).
+  * [[Registry.functions]] is the one list. [[GraftExtensions]] injects
+  * it whenever a session state is built, and `graft.Engine.builder`
+  * installs it, so every engine session, each of its `newSession()`s
+  * and each Thrift JDBC connection resolves the `graft_*` functions.
+  * A session built elsewhere opts in with
+  * `spark.sql.extensions=graft.functions.GraftExtensions` (which also
+  * covers its new sessions) or with one [[Registry.ensure]] call.
   */
 object Registry {
 
@@ -41,11 +41,10 @@ object Registry {
     ("graft_rolling_fp", "graft.functions.RollingFingerprints",
       exprs => RollingFingerprints.fromExprs(exprs)))
 
-  /** Idempotently register graft functions in the session's registry.
-    * Skips names already present: re-registering emits a "function
-    * replaced" warning per call, and `ensure` runs at every operator
-    * construction — the warnings burned the bench's bounded stdout
-    * tail (round-7 verdict).
+  /** Register the functions in a live session built without
+    * [[GraftExtensions]]; only that session, not its `newSession()`s.
+    * Skips names already present, so a repeated call is silent (a
+    * re-registration logs a "function replaced" warning).
     */
   def ensure(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
@@ -56,7 +55,10 @@ object Registry {
   }
 }
 
-/** SparkSessionExtensions injector (`spark.sql.extensions`). */
+/** Injects [[Registry.functions]] into every session state built
+  * from a session that carries it (`withExtensions` or
+  * `spark.sql.extensions`).
+  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
     Registry.functions.foreach { case (name, className, builder) =>

@@ -19,13 +19,13 @@ import org.apache.spark.sql.functions._
 object Vec {
 
   /** Quantize `array<float>` → `array<long>` at 3 decimals — resolves
-    * to the native codegen'd [[QuantizeVec]] kernel (registered via
-    * [[Registry.ensure]], which every consuming operator calls).
+    * to the native codegen'd [[QuantizeVec]] kernel, which every engine
+    * session carries (see [[Registry]]).
     */
   def quantize(v: Column): Column = call_function("graft_quantize", v)
 
   /** Exact squared L2 distance of two quantized vectors — the native
-    * [[VecSqDist]] kernel (see [[Registry.ensure]]).
+    * [[VecSqDist]] kernel.
     */
   def sqd2(a: Column, b: Column): Column = call_function("graft_sqd2", a, b)
 
@@ -42,8 +42,7 @@ object Vec {
     call_function("graft_nearest_code", v, cents)
 
   /** Exact integer dot product of two quantized vectors — resolves to
-    * the native codegen'd [[LongDotProduct]] (see [[Registry.ensure]];
-    * operators register it on their input's session).
+    * the native codegen'd [[LongDotProduct]].
     */
   def dotQ(a: Column, b: Column): Column = call_function("graft_dotq", a, b)
 

@@ -45,7 +45,6 @@ object Dedup {
 
   def ngramJaccard(documents: DataFrame, n: Int = 3, tau: Double = 0.1,
                    maxShingleDf: Long = MaxShingleDf): DataFrame = {
-    graft.functions.Registry.ensure(documents.sparkSession)
     // the hashed-shingle frame is materialized ONCE (localCheckpoint)
     // and reused by the DF-cap aggregate and both self-join sides —
     // round 7's probe showed the un-persisted form re-reading and
@@ -136,7 +135,6 @@ object Dedup {
     */
   def minhashSignatures(documents: DataFrame, n: Int = 3,
                         k: Int = MinHashK): DataFrame = {
-    graft.functions.Registry.ensure(documents.sparkSession)
     val sh = documents
       .withColumn("w", TextAnalysis.tokens($"text"))
       .select($"doc_id",
@@ -406,7 +404,6 @@ object Dedup {
     * whose cell count scales with the corpus.
     */
   def embeddingNearDup(embeddings: DataFrame, tau: Double = 0.4): DataFrame = {
-    graft.functions.Registry.ensure(embeddings.sparkSession)
     val q = embeddings.select($"vec_id", $"label",
       Vec.quantize($"embedding").as("v"))
     val n = q.withColumn("nrm", Vec.normQ($"v"))
@@ -444,7 +441,6 @@ object Dedup {
     */
   def embeddingNearDupCells(embeddings: DataFrame, centroids: DataFrame,
                             tau: Double = 0.4): DataFrame = {
-    graft.functions.Registry.ensure(embeddings.sparkSession)
     val q = embeddings.select($"vec_id", Vec.quantize($"embedding").as("v"))
     val n = Similarity.assignCells(q, centroids)
       .withColumn("nrm", Vec.normQ($"v"))
@@ -472,7 +468,6 @@ object Dedup {
   def embeddingNearDupCellsProbed(embeddings: DataFrame,
                                   centroids: DataFrame, nProbe: Int,
                                   tau: Double = 0.4): DataFrame = {
-    graft.functions.Registry.ensure(embeddings.sparkSession)
     val q = embeddings.select($"vec_id", Vec.quantize($"embedding").as("v"))
     val a = Similarity.assignCellsProbed(q, centroids, nProbe)
       .withColumn("nrm", Vec.normQ($"v"))
@@ -497,7 +492,6 @@ object Dedup {
     */
   def embeddingNearDupSeeded(embeddings: DataFrame, nCells: Int = 32,
                              tau: Double = 0.4): DataFrame = {
-    graft.functions.Registry.ensure(embeddings.sparkSession)
     val q = embeddings.select($"vec_id", Vec.quantize($"embedding").as("v"))
     val cents = Similarity.seedCentroids(q, nCells).localCheckpoint(true)
     embeddingNearDupCells(embeddings, cents, tau)
@@ -526,7 +520,6 @@ object Dedup {
     */
   def semdedupPrune(embeddings: DataFrame, nCells: Int = 32,
                     tau: Double = 0.4): DataFrame = {
-    graft.functions.Registry.ensure(embeddings.sparkSession)
     val q = embeddings.select($"vec_id", Vec.quantize($"embedding").as("v"))
     val cents = Similarity.seedCentroids(q, nCells).localCheckpoint(true)
     val n = Similarity.assignCells(q, cents).withColumn("nrm", Vec.normQ($"v"))
@@ -574,7 +567,6 @@ object Dedup {
     */
   def substringDedup(documents: DataFrame, k: Int = 8,
                      hashFingerprints: Boolean = false): DataFrame = {
-    graft.functions.Registry.ensure(documents.sparkSession)
     val mode = if (hashFingerprints) "xx" else "md5"
     val wins = documents
       .withColumn("w", TextAnalysis.tokens($"text"))
@@ -693,7 +685,6 @@ object Dedup {
     */
   def lineDedup(documents: DataFrame, span: Int = 5,
                 hashKeys: Boolean = false): DataFrame = {
-    graft.functions.Registry.ensure(documents.sparkSession)
     val spans = Par.fan(documents, $"doc_id")
       .withColumn("w", graft.operators.TextAnalysis.tokens($"text"))
       // NOT an empty-doc exclusion: split(trim(text)) yields [""]
@@ -874,7 +865,6 @@ object Dedup {
     */
   def exactSubstrRemoval(documents: DataFrame, k: Int = 8,
                          hashFingerprints: Boolean = false): DataFrame = {
-    graft.functions.Registry.ensure(documents.sparkSession)
     require(k >= 2, s"window width k=$k must be >= 2")
     val wins = substrWins(documents, k, hashFingerprints)
     val firsts = substrFirsts(wins)
@@ -891,7 +881,6 @@ object Dedup {
     // form, one tight loop per doc instead of an interpreted lambda
     // per window
     val mode = if (hashFingerprints) "xx" else "md5"
-    graft.functions.Registry.ensure(documents.sparkSession)
     Par.fan(documents, $"doc_id")
       .withColumn("w", TextAnalysis.tokens($"text"))
       .filter(size($"w") >= k)
@@ -987,7 +976,6 @@ object Dedup {
   def exactSubstrRemovalIncremental(batch: DataFrame,
       standingFirsts: Option[DataFrame], k: Int = 8,
       hashFingerprints: Boolean = false): DataFrame = {
-    graft.functions.Registry.ensure(batch.sparkSession)
     require(k >= 2, s"window width k=$k must be >= 2")
     val wins = substrWins(batch, k, hashFingerprints)
     val firsts = mergedFirstsOf(standingFirsts, wins)
@@ -1029,7 +1017,6 @@ object Dedup {
     */
   def exactSubstrRemovalTwoBatch(documents: DataFrame,
                                  k: Int = 8): DataFrame = {
-    graft.functions.Registry.ensure(documents.sparkSession)
     val cutRow = documents.agg(
       percentile_approx($"doc_id", lit(0.5), lit(100000))).head()
     // empty corpus: the median aggregate is NULL — there is nothing

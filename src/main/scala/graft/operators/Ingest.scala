@@ -44,17 +44,14 @@ object Ingest {
     * the match once per extracted column — and CollapseProject inlines
     * the (expensive, concat+date_format) `line` subtree into each copy
     * too, so 5 columns cost 5 renders + 5 matches per row (measured
-    * ~4× slower). The `explode(array(…))` generator is a one-row
-    * barrier: CollapseProject cannot cross a Generate, so the group
-    * array is materialized once and the final projection reads plain
-    * array elements. Still fully codegen'd end to end.
+    * ~4× slower). The final projection reads the group array five
+    * times, so CollapseProject keeps it in its own projection and
+    * evaluates it once per row. Still fully codegen'd end to end.
     */
-  private def parsedLines(lines: DataFrame): DataFrame = {
-    graft.functions.Registry.ensure(lines.sparkSession)
+  private def parsedLines(lines: DataFrame): DataFrame =
     lines
       .select($"event_id",
-        explode(array(call_function("graft_regexp_groups", $"line",
-          lit(logPattern)))).as("g"))
+        call_function("graft_regexp_groups", $"line", lit(logPattern)).as("g"))
       .select(
         $"event_id",
         $"g"(0).as("ip_address"),
@@ -62,25 +59,10 @@ object Ingest {
         $"g"(3).as("url"),
         $"g"(4).cast("int").as("status_code"),
         $"g"(5).cast("long").as("response_size"))
-  }
-
-  /** Order the cheap event source columns up front (explicit range
-    * partitioning + in-partition sort ≡ the same global event_id
-    * order) so a heavy per-row stage built on top runs ONCE, after
-    * the exchange, on every core — the q41 restructure (r20, guide
-    * §4.4-class duplicate evaluation: a final ORDER BY's range
-    * sampler re-executes everything below it a second time, and the
-    * one-row-group local inputs scan as a single task).
-    */
-  private def orderedEvents(events: DataFrame,
-                            cols: org.apache.spark.sql.Column*): DataFrame =
-    events.select(cols: _*)
-      .repartitionByRange(Par.parts(events), $"event_id")
-      .sortWithinPartitions($"event_id")
 
   /** End-to-end: events → log lines → parsed structured records. */
   def logParse(events: DataFrame): DataFrame =
-    parsedLines(toLogLines(orderedEvents(events,
+    parsedLines(toLogLines(Par.orderedEvents(events,
       $"event_id", $"user_id", $"ts", $"event_type", $"value")))
 
   /** JSON payload extraction + aggregation (the Kafka topics carry
@@ -108,9 +90,9 @@ object Ingest {
     * serde pair a Spark Kafka source/sink uses.
     */
   def kafkaRoundTrip(events: DataFrame): DataFrame = {
-    // ordered-first (see orderedEvents): the to_json/from_json serde
+    // ordered-first (see Par.orderedEvents): the to_json/from_json serde
     // pair runs once, post-exchange, instead of twice in the scan task
-    val wire = orderedEvents(events,
+    val wire = Par.orderedEvents(events,
         $"event_id", $"ts", $"event_type", $"value")
       .select(
         $"event_id",

@@ -240,7 +240,6 @@ object Sampling {
                           mod: Int = 97,
                           broadcastEval: Option[Boolean] = None,
                           hashShingleKeys: Boolean = false): DataFrame = {
-    graft.functions.Registry.ensure(documents.sparkSession)
     val evalBase = documents.filter($"doc_id" % mod === 0)
     val shingleKey: Column => Column =
       if (hashShingleKeys) c => xxhash64(c) else identity
@@ -314,7 +313,6 @@ object Sampling {
   def dsirWeights(documents: DataFrame, targetLang: String = "en",
                   topK: Int = 50, hashFeatures: Boolean = false,
                   numBuckets: Int = 8192): DataFrame = {
-    graft.functions.Registry.ensure(documents.sparkSession)
     val keyOf: Column => Column =
       if (hashFeatures) c => pmod(xxhash64(c), lit(numBuckets.toLong))
       else identity
@@ -440,7 +438,6 @@ object Sampling {
   def curationManifest(documents: DataFrame, qualityMin: Double = 0.5,
                        n: Int = 8, mod: Int = 97,
                        broadcastEval: Option[Boolean] = None): DataFrame = {
-    graft.functions.Registry.ensure(documents.sparkSession)
     val byHash = org.apache.spark.sql.expressions.Window
       .partitionBy(md5($"text"))
     val flags = TextAnalysis.withQuality(documents.filter($"doc_id" % mod =!= 0))

@@ -20,7 +20,6 @@ object Similarity {
     * Scores use exact integer-quantized math (see [[Vec]]).
     */
   def cosineTopK(embeddings: DataFrame, nQueries: Int = 10, k: Int = 5): DataFrame = {
-    graft.functions.Registry.ensure(embeddings.sparkSession)
     val q = embeddings
       .select($"vec_id", Vec.quantize($"embedding").as("v"))
       .withColumn("nrm", Vec.normQ($"v"))
@@ -101,7 +100,6 @@ object Similarity {
   def ivfTopK(embeddings: DataFrame, nCells: Int = 16, nProbe: Int = 4,
               nQueries: Int = 10, k: Int = 5,
               centroids: Option[DataFrame] = None): DataFrame = {
-    graft.functions.Registry.ensure(embeddings.sparkSession)
     val q = embeddings
       .select($"vec_id", Vec.quantize($"embedding").as("v"))
       .withColumn("nrm", Vec.normQ($"v"))
@@ -255,7 +253,6 @@ object Similarity {
     * the identical expression tree keeps the doubles engine-exact.
     */
   def normalizeEmbeddings(embeddings: DataFrame): DataFrame = {
-    graft.functions.Registry.ensure(embeddings.sparkSession)
     val q = embeddings.select($"vec_id", Vec.quantize($"embedding").as("v"))
       .withColumn("nrm", Vec.normQ($"v"))
     q.select($"vec_id", $"nrm", posexplode($"v").as(Seq("dim", "qv")))
@@ -275,7 +272,6 @@ object Similarity {
     * corpus size.
     */
   def kmeansStep(embeddings: DataFrame, kCents: Int = 8): DataFrame = {
-    graft.functions.Registry.ensure(embeddings.sparkSession)
     val q = embeddings.select($"vec_id", Vec.quantize($"embedding").as("v"))
     kmeansAssign(q, kCents)
       .select($"cid", posexplode($"v").as(Seq("dim", "q")))
@@ -307,12 +303,10 @@ object Similarity {
     * approximation (same argument as its scaladoc).
     */
   def kmeansTrain(embeddings: DataFrame, kCents: Int = 8,
-                  iters: Int = 5): DataFrame = {
-    graft.functions.Registry.ensure(embeddings.sparkSession)
+                  iters: Int = 5): DataFrame =
     centroidFrame(embeddings.sparkSession, kmeansCents(
       embeddings.select($"vec_id", Vec.quantize($"embedding").as("v")),
       kCents, iters, neutralSeeds = false))
-  }
 
   /** k-means as [[lloyd]]'s one-span case: driver-resident (cid, cv)
     * centroids sorted by cid. The cids are the seed vec_ids, or with
@@ -464,10 +458,8 @@ object Similarity {
     */
   private[operators] def pqTrainDriver(
       embeddings: DataFrame, nSub: Int, kCodes: Int,
-      iters: Int): IndexedSeq[IndexedSeq[Seq[Long]]] = {
-    graft.functions.Registry.ensure(embeddings.sparkSession)
+      iters: Int): IndexedSeq[IndexedSeq[Seq[Long]]] =
     pqTrainDriverQ(quantizedNonEmpty(embeddings), nSub, kCodes, iters)
-  }
 
   /** [[pqTrainDriver]] over a PRE-QUANTIZED (vec_id, v) frame — the
     * seam residual-PQ training needs: the residual vectors (v −
@@ -668,7 +660,6 @@ object Similarity {
   def pqShortlist(embeddings: DataFrame, nSub: Int = 4, kCodes: Int = 16,
                   iters: Int = 3, nQueries: Int = 10,
                   r: Int = 64): DataFrame = {
-    graft.functions.Registry.ensure(embeddings.sparkSession)
     val cents = pqTrainDriver(embeddings, nSub, kCodes, iters)
     val qRows = queryRows(embeddings, nQueries)
     if (cents.head.isEmpty || qRows.isEmpty)
@@ -736,7 +727,6 @@ object Similarity {
   def pqTopK(embeddings: DataFrame, nSub: Int = 4, kCodes: Int = 16,
              iters: Int = 3, nQueries: Int = 10, k: Int = 5,
              rerank: Option[Int] = None): DataFrame = {
-    graft.functions.Registry.ensure(embeddings.sparkSession)
     val cents = pqTrainDriver(embeddings, nSub, kCodes, iters)
     val qRows = queryRows(embeddings, nQueries)
     if (cents.head.isEmpty || qRows.isEmpty)
@@ -954,7 +944,6 @@ object Similarity {
                      nProbe: Int = 4, nSub: Int = 4, kCodes: Int = 16,
                      iters: Int = 3, nQueries: Int = 10,
                      r: Int = 64, byResidual: Boolean = false): DataFrame = {
-    graft.functions.Registry.ensure(embeddings.sparkSession)
     val (coarse, cents) =
       ivfpqTrained(embeddings, nCells, nSub, kCodes, iters, byResidual)
     val qRows = queryRows(embeddings, nQueries)
@@ -1019,7 +1008,6 @@ object Similarity {
                 nQueries: Int = 10, k: Int = 5,
                 rerank: Option[Int] = None,
                 byResidual: Boolean = false): DataFrame = {
-    graft.functions.Registry.ensure(embeddings.sparkSession)
     val (coarse, cents) =
       ivfpqTrained(embeddings, nCells, nSub, kCodes, iters, byResidual)
     ivfpqSearch(embeddings, coarse, cents, nProbe, nQueries, k, rerank,
@@ -1093,7 +1081,6 @@ object Similarity {
                       nCells: Int = 16, nSub: Int = 4, kCodes: Int = 16,
                       iters: Int = 3,
                       byResidual: Boolean = false): Unit = {
-    graft.functions.Registry.ensure(embeddings.sparkSession)
     val spark = embeddings.sparkSession
     // narrow implicits: the full spark.implicits._ would shadow the
     // package-level $ interpolator
@@ -1253,7 +1240,6 @@ object Similarity {
                        iters: Int = 3, nQueries: Int = 10, k: Int = 5,
                        rerank: Option[Int] = None,
                        cap: Long = TrainSampleCap): DataFrame = {
-    graft.functions.Registry.ensure(embeddings.sparkSession)
     val sample = quantizedNonEmpty(
       trainingSample(embeddings, cap).localCheckpoint(true))
     val coarse = kmeansCents(sample, nCells, iters, neutralSeeds = true)
@@ -1278,7 +1264,6 @@ object Similarity {
   def ivfpqProbedCells(embeddings: DataFrame, indexDir: String,
                        nProbe: Int = 4, nQueries: Int = 10): Seq[Long] = {
     val spark = embeddings.sparkSession
-    graft.functions.Registry.ensure(spark)
     val coarse = readCoarse(spark, indexDir)
     val qRows = queryRows(embeddings, nQueries)
     if (coarse.isEmpty || qRows.isEmpty) Seq.empty
@@ -1299,7 +1284,6 @@ object Similarity {
                       nProbe: Int = 4, nQueries: Int = 10, k: Int = 5,
                       rerank: Option[Int] = None): DataFrame = {
     val spark = embeddings.sparkSession
-    graft.functions.Registry.ensure(spark)
     val coarse = readCoarse(spark, indexDir)
     val cents = readCodebooks(spark, indexDir)
     val byResidual = spark.read.parquet(s"$indexDir/meta").head()
@@ -1376,7 +1360,6 @@ object Similarity {
     */
   def ivfpqAppendIndex(batch: DataFrame, indexDir: String): Unit = {
     val spark = batch.sparkSession
-    graft.functions.Registry.ensure(spark)
     // recover-before-mutate (r19): appending into a mid-swap index
     // with no codes/ dir would create a fresh one-batch layout that
     // swap recovery would then promote or park over the real corpus
@@ -1489,7 +1472,6 @@ object Similarity {
   def ivfpqIngestBatch(batch: DataFrame, indexDir: String,
                        batchId: Long): Unit = {
     val spark = batch.sparkSession
-    graft.functions.Registry.ensure(spark)
     ivfpqRecoverCompact(spark, indexDir) // writer-class: swap + seg sweep
     val fs = graft.SegmentProtocol.fsOf(spark, indexDir)
     // the commit marker survives the compaction fold, so a late replay
@@ -1918,7 +1900,6 @@ object Similarity {
     */
   def ivfpqIndexManifest(embeddings: DataFrame, indexDir: String): DataFrame = {
     val spark = embeddings.sparkSession
-    graft.functions.Registry.ensure(spark)
     import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
     val coarse = readCoarse(spark, indexDir)
     require(coarse.nonEmpty,
@@ -2255,7 +2236,6 @@ object Similarity {
     */
   def cellManifest(embeddings: DataFrame, nCells: Int = 32,
                    centroids: Option[DataFrame] = None): DataFrame = {
-    graft.functions.Registry.ensure(embeddings.sparkSession)
     // cap at the oracle's 64-dim window (the q114 rule: the SQL twin
     // sums range(1,65) with null-skip, so dim<=64 matches the real
     // width and dim>64 must truncate identically here). Widths are
@@ -2282,7 +2262,6 @@ object Similarity {
     */
   def assignCellsLit(embeddings: DataFrame,
                      cents: Seq[(Long, Seq[Long])]): DataFrame = {
-    graft.functions.Registry.ensure(embeddings.sparkSession)
     if (cents.isEmpty)
       // empty quantizer (e.g. streaming bootstrap before any seed
       // vector landed): empty assignment, not a mid-batch
@@ -2322,7 +2301,6 @@ object Similarity {
     * against a recursive-CTE replay in DuckDB.
     */
   def kcenterSample(embeddings: DataFrame, k: Int = 8): DataFrame = {
-    graft.functions.Registry.ensure(embeddings.sparkSession)
     val spark = embeddings.sparkSession
     // toDF only — a full implicits._ import would shadow the package
     // $-interpolator with StringToColumn
@@ -2393,7 +2371,6 @@ object Similarity {
   }
 
   def randomProjection(embeddings: DataFrame): DataFrame = {
-    graft.functions.Registry.ensure(embeddings.sparkSession)
     val signs = jlSigns()
     // cap at the sign width (the oracle's subscript join truncates to
     // 64 identically) and drop empty/null vectors (the oracle's
@@ -2419,7 +2396,6 @@ object Similarity {
     */
   def annTopK(embeddings: DataFrame, dim: Int = 64,
               nQueries: Int = 10, k: Int = 5): DataFrame = {
-    graft.functions.Registry.ensure(embeddings.sparkSession)
     val ps = planes(dim)
     val q = embeddings
       .select($"vec_id", Vec.quantize($"embedding").as("v"))

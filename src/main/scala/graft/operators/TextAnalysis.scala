@@ -40,7 +40,6 @@ object TextAnalysis {
     * usual monitoring signal for "how dirty is this crawl").
     */
   def normalizeText(docs: DataFrame): DataFrame = {
-    graft.functions.Registry.ensure(docs.sparkSession)
     val norm = call_function("graft_nfc",
       trim(regexp_replace(col("text"), "[ \t\n\r\f]+", " ")))
     docs.select(col("doc_id"), norm.as("norm_text"),
@@ -83,8 +82,7 @@ object TextAnalysis {
     * (q82), which computes quality and the dedup digest in the same
     * pass over the text.
     */
-  private[graft] def withQuality(documents: DataFrame): DataFrame = {
-    graft.functions.Registry.ensure(documents.sparkSession)
+  private[graft] def withQuality(documents: DataFrame): DataFrame =
     documents
       .withColumn("toks", tokens($"text"))  // bind once; see shinglesOf note
       .withColumn("n_chars_actual", length($"text").cast("long"))
@@ -99,7 +97,6 @@ object TextAnalysis {
       .withColumn("quality",
         $"stop_ratio" * 0.5 + (lit(1.0) - $"punct_ratio") * 0.3 +
           when($"avg_token_len".between(3.0, 8.0), 0.2).otherwise(0.0))
-  }
 
   /** Stopword profiles for [[langId]], in tie-break preference order
     * (first-listed profile wins ties — matches the original
@@ -120,8 +117,7 @@ object TextAnalysis {
     * subtree up to ~12× per row after CollapseProject inlining
     * (8.3 s → <1 s at sf0.1; the SURVEY §7a pitfall).
     */
-  def langId(documents: DataFrame): DataFrame = {
-    graft.functions.Registry.ensure(documents.sparkSession)
+  def langId(documents: DataFrame): DataFrame =
     documents
       .withColumn("predicted",
         call_function("graft_lang_best", tokens(lower($"text")),
@@ -129,7 +125,6 @@ object TextAnalysis {
       .groupBy($"lang", $"predicted")
       .agg(count(lit(1)).as("n"))
       .orderBy($"lang", $"predicted")
-  }
 
   /** Word n-gram shingles from an already-materialized token-array
     * column (guarded: <n tokens → empty array).
@@ -166,11 +161,6 @@ object TextAnalysis {
   val EmailRe = "[A-Za-z0-9._]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
   val PhoneRe = "\\b555-[0-9]{4}\\b"
 
-  /** PII detection + redaction over a text column. The `contact` text
-    * here is derived deterministically from events (stands in for a
-    * raw scraped field); detection counts and the redacted form are
-    * pure per-row Column expressions — one scan, no shuffle.
-    */
   /** The synthetic punctuation-bearing contact string derived from an
     * event row (shared by q41 piiScrub and q89 tokenCounts).
     *
@@ -187,34 +177,22 @@ object TextAnalysis {
     lit("@example.com or 555-"), lpad(($"event_id" % 10000).cast("string"), 4, "0"),
     lit(" re "), $"event_type")
 
-  def piiScrub(events: DataFrame): DataFrame = {
-    graft.functions.Registry.ensure(events.sparkSession)
-    // r20 (guide §4.4-class duplicate evaluation + §2.5 parallelism):
-    // the heavy graft_pii_scan used to sit BELOW the output-ordering
-    // range Exchange, so (a) the range sampling pass evaluated the
-    // whole scrub a second time, and (b) both evaluations ran inside
-    // the single-task scan of the one-row-group input file. Ordering
-    // the cheap source columns FIRST (explicit range partitioning +
-    // in-partition sort ≡ the same global event_id order) and
-    // projecting the scrub AFTER the exchange evaluates the kernel
-    // once, spread over Par.parts tasks. Same rows, same order.
-    val ordered = events
-      .select($"event_id", $"user_id", $"event_type")
-      .repartitionByRange(Par.parts(events), $"event_id")
-      .sortWithinPartitions($"event_id")
-    ordered
+  /** PII detection + redaction over a text column (q41). The
+    * `contact` text is derived deterministically from events (stands
+    * in for a raw scraped field); the scan runs after the event_id
+    * exchange ([[Par.orderedEvents]]).
+    */
+  def piiScrub(events: DataFrame): DataFrame =
+    Par.orderedEvents(events, $"event_id", $"user_id", $"event_type")
       // graft_pii_scan fuses the former four regex expressions
       // (2× count + nested 2× replace) into one native struct-valued
       // scan — one input evaluation, three matcher passes, same
-      // sequential-replace semantics. The explode generator barrier
-      // stops CollapseProject from merging the field extraction into
-      // this project, which would re-render the scan once per field.
+      // sequential-replace semantics
       .select($"event_id",
-        explode(array(call_function("graft_pii_scan", contactOf,
-          lit(EmailRe), lit(PhoneRe)))).as("pii"))
+        call_function("graft_pii_scan", contactOf,
+          lit(EmailRe), lit(PhoneRe)).as("pii"))
       .select($"event_id", $"pii.n_emails".as("n_emails"),
         $"pii.n_phones".as("n_phones"), $"pii.redacted".as("redacted"))
-  }
 
   /** Within-document repetition scoring (the Gopher-style "repeated
     * n-gram fraction" quality rule): most-frequent 3-gram count over
@@ -229,7 +207,6 @@ object TextAnalysis {
     * certifies the test corpora it runs on, not production data.
     */
   def repetition(documents: DataFrame): DataFrame = {
-    graft.functions.Registry.ensure(documents.sparkSession)
     val sh = documents
       .withColumn("w", tokens($"text"))
       .select($"doc_id", explode(shinglesOf($"w")).as("s"))
@@ -295,14 +272,8 @@ object TextAnalysis {
     * own token start, so n_bpe = n_ws + punctuation count.
     */
   def tokenCounts(events: DataFrame): DataFrame =
-    events
-      // r20: order the cheap source columns, then tokenize — same
-      // restructure (and reasons) as piiScrub above
-      .select($"event_id", $"user_id", $"event_type")
-      .repartitionByRange(Par.parts(events), $"event_id")
-      .sortWithinPartitions($"event_id")
-      // generator barrier, as in piiScrub: contact feeds two counters
-      .select($"event_id", explode(array(contactOf)).as("contact"))
+    Par.orderedEvents(events, $"event_id", $"user_id", $"event_type")
+      .select($"event_id", contactOf.as("contact"))
       .select($"event_id",
         size(tokens($"contact")).as("n_ws"),
         bpeishTokenCount($"contact").as("n_bpe"))

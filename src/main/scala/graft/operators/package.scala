@@ -82,5 +82,23 @@ package operators {
         (bytes / advisory).min(BigInt(MaxParts)).max(BigInt(1)).toInt
       math.max(floor, byData)
     }
+
+    /** `events` narrowed to the cheap `cols`, in global `event_id`
+      * order (range partitioning into [[parts]] partitions plus an
+      * in-partition sort), for a heavy per-row stage (regex, serde,
+      * tokenizer) built on top. That stage then runs once per row,
+      * after the exchange, on every core. A plain `orderBy` over the
+      * stage's output does neither, for two reasons:
+      *   - the range partitioner's sampling job re-runs everything
+      *     below the exchange, so the kernel would run twice;
+      *   - AQE sizes an exchange by bytes alone, so an exchange of a
+      *     few cheap columns is coalesced to one or two tasks and the
+      *     kernel runs serially. The fixed [[parts]] count keeps it
+      *     parallel.
+      */
+    def orderedEvents(events: DataFrame, cols: Column*): DataFrame =
+      events.select(cols: _*)
+        .repartitionByRange(parts(events), col("event_id"))
+        .sortWithinPartitions(col("event_id"))
   }
 }

@@ -52,11 +52,6 @@ object Tables {
   val names: Seq[String] = schemas.keys.toSeq
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // every declared query loads through here — the one choke point
-    // where the session is guaranteed in hand, so the native-function
-    // registry is ensured for the text kernels whose operators take
-    // Column-level token arrays (no session handle of their own)
-    graft.functions.Registry.ensure(spark)
     val path = s"$dir/$name.parquet"
     checkContract(spark, name, path)
     spark.read.schema(schemas(name)).parquet(path)

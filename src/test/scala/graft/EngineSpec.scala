@@ -3,14 +3,19 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
-import org.apache.spark.sql.{Encoders, SparkSession, SparkStatus}
+import org.apache.spark.sql.{Encoders, Row, SparkSession, SparkStatus}
+import org.apache.spark.sql.functions._
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.SpanSugar._
+import graft.functions.{Registry, Vec}
+import graft.operators.TextAnalysis
 
 /** The settings `Engine.builder` applies for sessions that re-issue
   * queries: the JVM-wide cache of generated classes holds a dashboard's
   * working set, and the status store, which nothing reads, stays small.
+  * Every session it builds, and every `newSession()` of one, carries
+  * graft's native functions.
   */
 class EngineSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Engine.builder("local[4]", 4).getOrCreate()
@@ -74,5 +79,25 @@ class EngineSpec extends AnyFunSuite {
       assert(SparkStatus.completedJobs(spark) <= 10)
       assert(SparkStatus.sqlExecutions(spark) <= 10)
     }
+  }
+
+  test("a new session resolves every graft function without Registry.ensure") {
+    val fresh = spark.newSession()
+    val missing = Registry.functions.map(_._1).filterNot(fresh.catalog.functionExists)
+    assert(missing.isEmpty, s"not resolvable in newSession(): ${missing.mkString(", ")}")
+  }
+
+  test("Vec.quantize and hashedShinglesOf resolve in a new session with the owning session's values") {
+    val vec = array((col("id") / 7).cast("float"), (-col("id") / 3).cast("float"))
+    val words = split(concat_ws(" ", lit("w"), col("id") % 5, lit("x"), col("id")), " ")
+    def probe(s: SparkSession): Seq[Row] =
+      s.range(40).select(Vec.quantize(vec), VecHof.quantize(vec),
+        TextAnalysis.hashedShinglesOf(words)).collect().toSeq
+    val fresh = probe(spark.newSession())
+    assert(fresh == probe(spark))
+    // values, not just agreement: the quantizer's HOF twin, and two
+    // 3-token shingles for each 4-token row
+    assert(fresh.forall(r => r.getSeq[Long](0) == r.getSeq[Long](1)))
+    assert(fresh.forall(_.getSeq[Long](2).size == 2))
   }
 }

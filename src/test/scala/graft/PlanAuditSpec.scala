@@ -159,6 +159,34 @@ class PlanAuditSpec extends AnyFunSuite {
         "single-lineage window formulation must scan the corpus once")
   }
 
+  test("q20, q41 and q89 run their kernel in one Project above the event_id exchange, with no Generate") {
+    // CollapseProject keeps an expensive expression that several output
+    // columns read in its own Project, so the kernel runs once per row
+    // without a generator barrier
+    import org.apache.spark.sql.execution.{GenerateExec, ProjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    Seq("q20_log_parse" -> "graft_regexp_groups(",
+      "q41_pii_scrub" -> "graft_pii_scan(",
+      "q89_bpeish_tokens" -> "'reach user'").foreach { case (q, kernel) =>
+      val plan = SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan
+      assert(!nodes(plan).exists(_.isInstanceOf[GenerateExec]), s"$q plans a Generate:\n$plan")
+      val owners = nodes(plan).collect {
+        case p: ProjectExec if p.projectList.exists(_.sql.contains(kernel)) => p
+      }
+      assert(owners.size == 1, s"$q: ${owners.size} Projects name $kernel:\n$plan")
+      val uses = owners.head.projectList.map(e => e.sql.sliding(kernel.length).count(_ == kernel)).sum
+      assert(uses == 1, s"$q: $kernel appears $uses times in its Project:\n$plan")
+      assert(nodes(owners.head.child).exists(_.isInstanceOf[ShuffleExchangeExec]),
+        s"$q runs $kernel below the exchange:\n$plan")
+    }
+  }
+
   test("q130's stored code scan partition-prunes to EXACTLY the probed cells") {
     // The 100-TB claim behind IVFPQ ("cid is the partition key, so
     // probed cells are partition-pruned I/O", Similarity.ivfpqTopK

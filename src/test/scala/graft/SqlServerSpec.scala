@@ -88,4 +88,25 @@ class SqlServerSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(results(0)._1 > 0)
     } finally pool.shutdownNow()
   }
+
+  test("a JDBC client calls graft's native functions with direct engine SQL's values") {
+    // each connection runs in its own newSession(), which carries the
+    // functions Engine.builder installs; nothing registers them per
+    // connection
+    val sql =
+      s"""SELECT n_nationkey, graft_nfc(concat(n_name, '${"e\u0301"}')) AS nfc,
+          concat_ws('|', graft_regexp_groups(n_name, '([A-Z])([A-Z]+)')) AS g
+        FROM global_temp.nation ORDER BY n_nationkey"""
+    val conn = connect()
+    try {
+      val rs = conn.createStatement().executeQuery(sql)
+      val viaJdbc = Iterator.continually(rs).takeWhile(_.next())
+        .map(r => (r.getInt(1), r.getString(2), r.getString(3))).toList
+      val direct = spark.sql(sql).collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getString(2))).toList
+      assert(viaJdbc == direct, s"jdbc=${viaJdbc.take(3)} direct=${direct.take(3)}")
+      assert(viaJdbc.nonEmpty && viaJdbc.forall(_._2.endsWith("\u00e9")))
+      assert(viaJdbc.forall(_._3.count(_ == '|') == 1))
+    } finally conn.close()
+  }
 }
