@@ -420,8 +420,8 @@ object SparkEntry {
   /** Shared oracle CTE block: word-shingle near-dup pair scoring with
     * the same stop-shingle DF cap [[operators.Dedup.MaxShingleDf]] the
     * Spark operator applies (hot shingles leave CANDIDATE GENERATION
-    * only; set sizes keep the full set). Used by q24 (pairs) and q66
-    * (cluster edges) so the two oracles cannot drift apart.
+    * only; set sizes keep the full set). Used by q24 (pairs), q66 and
+    * q123 (cluster edges) so the oracles cannot drift apart.
     */
   private val nearDupCtes: String =
     s"""toks AS (
@@ -447,6 +447,63 @@ object SparkEntry {
           FROM inter
           JOIN sizes sa ON doc_a = sa.doc_id
           JOIN sizes sb ON doc_b = sb.doc_id)"""
+
+  /** Shared oracle CTE block: connected components over q24's near-dup
+    * pairs (`scored_pairs`, from [[nearDupCtes]]) plus exact-dup edges,
+    * as a recursive reachability CTE — lbl reaches node ⇒ propagate
+    * along undirected edges; component id = min reachable label (the
+    * same fixed point the Spark-side min-label propagation converges
+    * to). Yields `cc` (doc_id, cluster_id) and `cs` (cluster_id,
+    * cluster_size). Used by q66 (clusters) and q123 (keep-best).
+    */
+  private val clusterCtes: String =
+    """near AS (
+          SELECT doc_a, doc_b FROM scored_pairs WHERE jaccard >= 0.1),
+        hashes AS (SELECT doc_id, md5(text) AS h FROM documents),
+        roots AS (SELECT h, MIN(doc_id) AS root FROM hashes GROUP BY 1),
+        exact_e AS (
+          SELECT r.root AS doc_a, d.doc_id AS doc_b
+          FROM hashes d JOIN roots r ON d.h = r.h
+          WHERE d.doc_id != r.root),
+        edges AS (
+          SELECT doc_a, doc_b FROM near
+          UNION SELECT doc_a, doc_b FROM exact_e),
+        und AS (
+          SELECT doc_a AS u, doc_b AS v FROM edges
+          UNION SELECT doc_b, doc_a FROM edges),
+        reach(node, lbl) AS (
+          SELECT doc_id, doc_id FROM documents
+          UNION
+          SELECT e.v, r.lbl FROM reach r JOIN und e ON r.node = e.u),
+        cc AS (SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY 1),
+        cs AS (SELECT cluster_id, COUNT(*) AS cluster_size FROM cc GROUP BY 1)"""
+
+  /** Shared oracle CTE block: q73's seeded argmin-d2 cell assignment
+    * (the first 32 vectors as centroids; ROW_NUMBER over (d2, cid) =
+    * min(struct(d2, cid))) with each vector's L2 norm. Yields `n`
+    * (vec_id, v, cid, nrm). Used by q106 (pairs) and q107 (pruning).
+    */
+  private val seededCellCtes: String =
+    """q AS (
+          SELECT vec_id,
+            list_transform(embedding,
+              x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
+          FROM embeddings),
+        cents AS (SELECT vec_id AS cid, v AS cv FROM q WHERE vec_id < 32),
+        scored AS (
+          SELECT q.vec_id, q.v, c.cid,
+            CAST(list_sum(list_transform(range(1, 65),
+              i -> (q.v[i] - c.cv[i]) * (q.v[i] - c.cv[i]))) AS BIGINT) AS d2
+          FROM q CROSS JOIN cents c),
+        assigned AS (
+          SELECT vec_id, v, cid FROM (
+            SELECT vec_id, v, cid,
+              ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
+            FROM scored) t WHERE rn = 1),
+        n AS (
+          SELECT vec_id, v, cid,
+            sqrt(CAST(list_sum(list_transform(range(1, 65), i -> v[i]*v[i])) AS DOUBLE)) AS nrm
+          FROM assigned)"""
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
@@ -1001,31 +1058,7 @@ object SparkEntry {
         FROM orders JOIN lineitem ON o_orderkey = l_orderkey
         GROUP BY 1 ORDER BY 1""",
     "q66_dup_clusters" ->
-      // connected components as a recursive reachability CTE: lbl
-      // reaches node ⇒ propagate along undirected edges; component id
-      // = min reachable label (the same fixed point the Spark-side
-      // min-label propagation converges to)
-      s"""WITH RECURSIVE $nearDupCtes,
-        near AS (
-          SELECT doc_a, doc_b FROM scored_pairs WHERE jaccard >= 0.1),
-        hashes AS (SELECT doc_id, md5(text) AS h FROM documents),
-        roots AS (SELECT h, MIN(doc_id) AS root FROM hashes GROUP BY 1),
-        exact_e AS (
-          SELECT r.root AS doc_a, d.doc_id AS doc_b
-          FROM hashes d JOIN roots r ON d.h = r.h
-          WHERE d.doc_id != r.root),
-        edges AS (
-          SELECT doc_a, doc_b FROM near
-          UNION SELECT doc_a, doc_b FROM exact_e),
-        und AS (
-          SELECT doc_a AS u, doc_b AS v FROM edges
-          UNION SELECT doc_b, doc_a FROM edges),
-        reach(node, lbl) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT e.v, r.lbl FROM reach r JOIN und e ON r.node = e.u),
-        cc AS (SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY 1),
-        cs AS (SELECT cluster_id, COUNT(*) AS cluster_size FROM cc GROUP BY 1)
+      s"""WITH RECURSIVE $nearDupCtes, $clusterCtes
         SELECT c.doc_id, c.cluster_id, s.cluster_size,
                c.doc_id = c.cluster_id AS is_keeper
         FROM cc c JOIN cs s ON c.cluster_id = s.cluster_id
@@ -1680,26 +1713,7 @@ object SparkEntry {
     // assignment (ROW_NUMBER over (d2, cid) = min(struct(d2, cid)))
     // as the blocking key, then q27's pairing kernel within cells
     "q106_dedup_embedding_cells" ->
-      """WITH q AS (
-          SELECT vec_id,
-            list_transform(embedding,
-              x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
-          FROM embeddings),
-        cents AS (SELECT vec_id AS cid, v AS cv FROM q WHERE vec_id < 32),
-        scored AS (
-          SELECT q.vec_id, q.v, c.cid,
-            CAST(list_sum(list_transform(range(1, 65),
-              i -> (q.v[i] - c.cv[i]) * (q.v[i] - c.cv[i]))) AS BIGINT) AS d2
-          FROM q CROSS JOIN cents c),
-        assigned AS (
-          SELECT vec_id, v, cid FROM (
-            SELECT vec_id, v, cid,
-              ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-            FROM scored) t WHERE rn = 1),
-        n AS (
-          SELECT vec_id, v, cid,
-            sqrt(CAST(list_sum(list_transform(range(1, 65), i -> v[i]*v[i])) AS DOUBLE)) AS nrm
-          FROM assigned)
+      s"""WITH $seededCellCtes
         SELECT vec_a, vec_b, cell, cosine FROM (
           SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.cid AS cell,
             CAST(list_sum(list_transform(range(1, 65), i -> a.v[i]*b.v[i])) AS DOUBLE)
@@ -1709,26 +1723,7 @@ object SparkEntry {
     // SemDeDup pruning: q106's cell assignment, keeper = no
     // smaller-id cell-mate with cosine >= tau
     "q107_semdedup_prune" ->
-      """WITH q AS (
-          SELECT vec_id,
-            list_transform(embedding,
-              x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
-          FROM embeddings),
-        cents AS (SELECT vec_id AS cid, v AS cv FROM q WHERE vec_id < 32),
-        scored AS (
-          SELECT q.vec_id, q.v, c.cid,
-            CAST(list_sum(list_transform(range(1, 65),
-              i -> (q.v[i] - c.cv[i]) * (q.v[i] - c.cv[i]))) AS BIGINT) AS d2
-          FROM q CROSS JOIN cents c),
-        assigned AS (
-          SELECT vec_id, v, cid FROM (
-            SELECT vec_id, v, cid,
-              ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-            FROM scored) t WHERE rn = 1),
-        n AS (
-          SELECT vec_id, v, cid,
-            sqrt(CAST(list_sum(list_transform(range(1, 65), i -> v[i]*v[i])) AS DOUBLE)) AS nrm
-          FROM assigned),
+      s"""WITH $seededCellCtes,
         dominated AS (
           SELECT DISTINCT b.vec_id FROM n a JOIN n b
             ON a.cid = b.cid AND a.vec_id < b.vec_id
@@ -1929,27 +1924,7 @@ object SparkEntry {
     // best-quality doc per duplicate cluster, min doc_id on ties
     // (mirrors Dedup.dedupKeepBest)
     "q123_dedup_keep_best" ->
-      s"""WITH RECURSIVE $nearDupCtes,
-        near AS (
-          SELECT doc_a, doc_b FROM scored_pairs WHERE jaccard >= 0.1),
-        hashes AS (SELECT doc_id, md5(text) AS h FROM documents),
-        roots AS (SELECT h, MIN(doc_id) AS root FROM hashes GROUP BY 1),
-        exact_e AS (
-          SELECT r.root AS doc_a, d.doc_id AS doc_b
-          FROM hashes d JOIN roots r ON d.h = r.h
-          WHERE d.doc_id != r.root),
-        edges AS (
-          SELECT doc_a, doc_b FROM near
-          UNION SELECT doc_a, doc_b FROM exact_e),
-        und AS (
-          SELECT doc_a AS u, doc_b AS v FROM edges
-          UNION SELECT doc_b, doc_a FROM edges),
-        reach(node, lbl) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT e.v, r.lbl FROM reach r JOIN und e ON r.node = e.u),
-        cc AS (SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY 1),
-        cs AS (SELECT cluster_id, COUNT(*) AS cluster_size FROM cc GROUP BY 1),
+      s"""WITH RECURSIVE $nearDupCtes, $clusterCtes,
         qual AS (
           SELECT doc_id,
             (stop_count * 1.0 / n_tokens) * 0.5

@@ -7,139 +7,47 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
-/** Mergeable Misra-Gries frequent-items summary (the "frequent"
-  * algorithm of Misra & Gries 1982; mergeability per Agarwal et al.
-  * 2013, "Mergeable summaries").
+/** Mergeable weighted Misra-Gries frequent-items summary (Misra &
+  * Gries 1982; weighted form per Berinde et al. 2010, "Space-optimal
+  * heavy hitters with strong error bounds"; mergeability per Agarwal
+  * et al. 2013, "Mergeable summaries"). Counters accumulate a positive
+  * weight per arrival: order spend for the Druid-style TopN candidates
+  * (q132, `Analytics.topCustomersApprox`), 1 per token for the corpus
+  * heavy hitters (q113, `TextAnalysis.heavyHitters`).
   *
-  * The buffer holds at most `capacity` counters. Stream update: an
-  * arriving item increments its counter, opens a new one if a slot is
-  * free, else decrements ALL counters by 1 (dropping zeros) — the
-  * classic generalization of Boyer-Moore majority. Merge: add the two
-  * counter maps, then subtract the (capacity+1)-largest count from
-  * everything and drop non-positives — the error stays additive, so
-  * partial aggregation in ANY tree shape preserves the guarantee:
-  *
-  *   true_count - n / (capacity + 1)  <=  estimate  <=  true_count
-  *
-  * hence every item with true frequency > n/(capacity+1) survives in
-  * the summary no matter how Spark partitions the data. The retained
-  * COUNTER VALUES do depend on merge order, so [[candidates]] exposes
-  * only the retained KEYS: the deterministic production pattern is
-  * two-pass — sketch for candidates, then exact recount of just those
-  * candidates (TextAnalysis.heavyHitters), which makes the final
-  * output independent of partitioning and therefore oracle-equal.
-  *
-  * The working buffer is a `mutable.HashMap` mutated in place
-  * (decrement-all runs `mapValuesInPlace` + `filterInPlace`, merge
-  * folds the smaller side into the larger): on a web-scale vocabulary
-  * most arrivals take the full-buffer path, and rebuilding an
-  * immutable `capacity`-entry map per arrival — the previous
-  * implementation — is an O(capacity) allocate-and-copy on the
-  * sketch's hot path. The declared buffer type stays the read-only
-  * `collection.Map` so the encoder boundary (Spark serializes the
-  * buffer only at shuffle edges) accepts whichever concrete map the
-  * deserializer hands back; [[asMutable]] upgrades it on first touch.
-  */
-class MisraGries(capacity: Int)
-    extends Aggregator[String, collection.Map[String, Long], Seq[String]]
-    with Serializable {
-
-  /** In-place view of a buffer: pass-through when it is already the
-    * working HashMap, one copy when the deserializer handed back an
-    * immutable map (once per shuffled partial, not per row).
-    */
-  private def asMutable(
-      b: collection.Map[String, Long]): mutable.HashMap[String, Long] =
-    b match {
-      case m: mutable.HashMap[String, Long] => m
-      case other => mutable.HashMap.from(other)
-    }
-
-  // fresh instance per group — the buffer is mutated in place
-  override def zero: collection.Map[String, Long] =
-    mutable.HashMap.empty[String, Long]
-
-  override def reduce(b: collection.Map[String, Long],
-                      w: String): collection.Map[String, Long] = {
-    val m = asMutable(b)
-    m.get(w) match {
-      case Some(c) => m.update(w, c + 1)
-      case None if m.size < capacity => m.update(w, 1L)
-      case None =>
-        // decrement-all: each surviving counter absorbs one "vote"
-        // against, the arriving item's single vote is spent too
-        m.mapValuesInPlace((_, c) => c - 1)
-        m.filterInPlace((_, c) => c > 0)
-    }
-    m
-  }
-
-  override def merge(a: collection.Map[String, Long],
-                     b: collection.Map[String, Long]): collection.Map[String, Long] = {
-    // fold the smaller side into the larger — merge cost tracks the
-    // smaller partial regardless of which argument Spark passes first
-    val (into, from) = if (a.size >= b.size) (a, b) else (b, a)
-    val m = asMutable(into)
-    from.foreach { case (k, c) =>
-      m.update(k, m.getOrElse(k, 0L) + c)
-    }
-    if (m.size > capacity) {
-      val cut = m.valuesIterator.toArray.sorted(Ordering[Long].reverse)
-        .apply(capacity) // (capacity+1)-th largest
-      m.mapValuesInPlace((_, c) => c - cut)
-      m.filterInPlace((_, c) => c > 0)
-    }
-    m
-  }
-
-  override def finish(b: collection.Map[String, Long]): Seq[String] =
-    b.keys.toSeq.sorted
-
-  override def bufferEncoder: Encoder[collection.Map[String, Long]] =
-    ExpressionEncoder[collection.Map[String, Long]]()
-  override def outputEncoder: Encoder[Seq[String]] =
-    ExpressionEncoder[Seq[String]]()
-}
-
-object MisraGries {
-  /** Column form: the retained candidate keys (sorted array<string>)
-    * of a capacity-`capacity` Misra-Gries summary over `term`.
-    */
-  def candidates(term: Column, capacity: Int): Column =
-    udaf(new MisraGries(capacity), ExpressionEncoder[String]()).apply(term)
-}
-
-/** WEIGHTED Misra-Gries (the Druid-TopN candidate summary): counters
-  * accumulate an arbitrary positive weight per arrival (order spend,
-  * bytes, revenue) instead of 1. Stream update inserts the arriving
-  * key (or adds its weight), and when the buffer would exceed its
-  * headroom subtracts a batched decrement δ (the purgeK-th-smallest
-  * counter — see [[purgeK]]) from all and drops non-positives —
-  * every subtraction event removes its δ from ≥ capacity+1 counters
-  * at once, so the total mass any key can lose is ≤ W/(capacity+1)
-  * (W = total weight seen), the same additive guarantee as the
-  * unit-weight form (Berinde et al. 2010, "Space-optimal heavy
-  * hitters with strong error bounds"):
+  * Stream update inserts the arriving key (or adds its weight), and
+  * when the buffer would exceed its headroom subtracts a batched
+  * decrement δ (the purgeK-th-smallest counter, see [[purgeK]]) from
+  * all and drops non-positives. Every subtraction event removes its δ
+  * from ≥ capacity+1 counters at once, so the total mass any key can
+  * lose is ≤ W/(capacity+1) (W = total weight seen):
   *
   *   true_weight - W / (capacity + 1)  <=  estimate  <=  true_weight
   *
   * Merge sums the maps and then applies the SAME batched purge,
-  * looped until the buffer is back within capacity+purgeK (Agarwal
-  * et al.'s mergeability argument is weight-agnostic and each loop
-  * iteration removes its full δ from ≥ capacity+1 counters), so
-  * partial aggregation in any tree shape preserves both the additive
-  * bound and the buffer-size invariant, and every key with true
-  * weight > W/(capacity+1) survives to the candidate list no matter
-  * how Spark partitions the data. Like the unit form, retained
-  * COUNTER VALUES depend on merge order, so only the KEYS are
-  * exposed and the consumer recounts them exactly (the two-pass
-  * q113 discipline — Analytics.topCustomersApprox).
+  * looped until the buffer is back within capacity+purgeK (the
+  * mergeability argument is weight-agnostic and each loop iteration
+  * removes its full δ from ≥ capacity+1 counters), so partial
+  * aggregation in any tree shape preserves both the additive bound
+  * and the buffer-size invariant, and every key with true weight >
+  * W/(capacity+1) survives to the candidate list no matter how Spark
+  * partitions the data. The retained COUNTER VALUES depend on merge
+  * order, so only the KEYS are exposed and the consumer recounts them
+  * exactly: the two-pass discipline (sketch for candidates, exact
+  * recount of just those) makes the final output independent of
+  * partitioning and therefore oracle-equal.
+  *
+  * The working buffer is a `mutable.HashMap` mutated in place. The
+  * declared buffer type stays the read-only `collection.Map` so the
+  * encoder boundary (Spark serializes the buffer only at shuffle
+  * edges) accepts whichever concrete map the deserializer hands back;
+  * `asMutable` upgrades it on first touch.
   */
 class WeightedMisraGries(capacity: Int)
     extends Aggregator[(String, Long), collection.Map[String, Long], Seq[String]]
     with Serializable {
 
-  /** Purge batch size — the amortization lever (r17). The textbook
+  /** Purge batch size, the amortization lever. The textbook
     * subtract-the-min purge fires on ~every arrival once the buffer
     * is full and scans all `capacity` counters each time: O(capacity)
     * PER ROW, which measured 39.6 s of q132's 40.5 s at 10×
@@ -198,7 +106,7 @@ class WeightedMisraGries(capacity: Int)
     from.foreach { case (k, c) =>
       m.update(k, m.getOrElse(k, 0L) + c)
     }
-    // LOOP the purge (r18, ADVICE): a merge of two at-capacity
+    // LOOP the purge: a merge of two at-capacity
     // buffers can exceed the bound by ~capacity, and one purge only
     // guarantees evicting >= purgeK entries — a single shot would let
     // the buffer grow ~capacity per merge-tree level, unbounding the

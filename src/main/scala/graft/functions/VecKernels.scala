@@ -11,13 +11,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * The higher-order-function formulations (`transform` / `zip_with` /
   * `aggregate`) are CodegenFallback at the lambda level: every row
   * pays interpreted lambda dispatch plus an intermediate array
-  * allocation PER CENTROID. Profiling the r19 baseline (guide §1)
-  * put a single Lloyd-round task at ~0.5 s for 2 000 × dim-64 rows —
+  * allocation PER CENTROID. Profiling the HOF forms put a single
+  * Lloyd-round task at ~0.5 s for 2 000 × dim-64 rows —
   * ~250 µs/row of pure interpreter overhead — and the same kernels
   * sit inside every ANN encode/search scan. These expressions compile
-  * to tight primitive loops inside whole-stage codegen (the
-  * [[LongDotProduct]] precedent): no allocation, no boxing, no lambda
-  * dispatch.
+  * to tight primitive loops inside whole-stage codegen: no
+  * allocation, no boxing, no lambda dispatch.
   *
   * Exactness: all arithmetic is `long` add/multiply in the same
   * order as the HOF twins (associative integer math, wraps
@@ -104,16 +103,10 @@ object VecKernels {
   }
 }
 
-/** Σ (a_i − b_i)² over two `array<long>` quantized vectors — the
-  * squared-L2 inner kernel of every cell assignment and exact
-  * re-rank. Length mismatch → NULL (the `zip_with` pad rule), same
-  * as [[LongDotProduct]].
+/** Shared type check of the binary kernels over two `array<bigint>`
+  * quantized vectors.
   */
-case class VecSqDist(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_sqd2"
+abstract class LongArrayPair extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = {
     val ok = Seq(left, right).forall(_.dataType match {
@@ -127,6 +120,26 @@ case class VecSqDist(left: Expression, right: Expression)
   }
 
   override def nullable: Boolean = true
+}
+
+/** Σ term(a_i, b_i) over two `array<bigint>` quantized vectors, as a
+  * primitive `long` loop inside whole-stage codegen: no allocation, no
+  * boxing, no lambda dispatch. Length mismatch → NULL, matching the
+  * higher-order twin (`zip_with` pads the shorter side with nulls,
+  * which nulls the whole fold) — a ragged vector must not yield a
+  * plausible-looking partial score. Integer addition is associative,
+  * so the result is bit-identical to the HOF formulation and to any
+  * oracle engine.
+  */
+abstract class PairedLongSum extends LongArrayPair {
+
+  override def dataType: DataType = LongType
+
+  /** The per-element term, interpreted. */
+  protected def term(x: Long, y: Long): Long
+
+  /** The per-element term as a Java expression over two `long` locals. */
+  protected def termCode(x: String, y: String): String
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
@@ -135,11 +148,7 @@ case class VecSqDist(left: Expression, right: Expression)
     if (n != y.numElements()) return null
     var s = 0L
     var i = 0
-    while (i < n) {
-      val d = x.getLong(i) - y.getLong(i)
-      s += d * d
-      i += 1
-    }
+    while (i < n) { s += term(x.getLong(i), y.getLong(i)); i += 1 }
     s
   }
 
@@ -148,7 +157,8 @@ case class VecSqDist(left: Expression, right: Expression)
       val n = ctx.freshName("n")
       val i = ctx.freshName("i")
       val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
+      val xi = ctx.freshName("xi")
+      val yi = ctx.freshName("yi")
       s"""
          |final int $n = $x.numElements();
          |if ($n != $y.numElements()) {
@@ -156,13 +166,44 @@ case class VecSqDist(left: Expression, right: Expression)
          |} else {
          |  long $s = 0L;
          |  for (int $i = 0; $i < $n; $i++) {
-         |    final long $d = $x.getLong($i) - $y.getLong($i);
-         |    $s += $d * $d;
+         |    final long $xi = $x.getLong($i);
+         |    final long $yi = $y.getLong($i);
+         |    $s += ${termCode(xi, yi)};
          |  }
          |  ${ev.value} = $s;
          |}
        """.stripMargin
     })
+}
+
+/** Exact dot product Σ a_i·b_i of two quantized vectors — the hot
+  * inner kernel of [[Vec.dotQ]]-based operators (embedding near-dup,
+  * cosine top-k, ANN rescoring).
+  */
+case class LongDotProduct(left: Expression, right: Expression)
+    extends PairedLongSum {
+
+  override def prettyName: String = "graft_dotq"
+
+  override protected def term(x: Long, y: Long): Long = x * y
+  override protected def termCode(x: String, y: String): String = s"$x * $y"
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): LongDotProduct =
+    copy(left = newLeft, right = newRight)
+}
+
+/** Σ (a_i − b_i)² of two quantized vectors — the squared-L2 inner
+  * kernel of every cell assignment and exact re-rank.
+  */
+case class VecSqDist(left: Expression, right: Expression)
+    extends PairedLongSum {
+
+  override def prettyName: String = "graft_sqd2"
+
+  override protected def term(x: Long, y: Long): Long = (x - y) * (x - y)
+  override protected def termCode(x: String, y: String): String =
+    s"($x - $y) * ($x - $y)"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecSqDist =
@@ -282,23 +323,10 @@ object QuantizeVec {
   * yield null elements.
   */
 case class VecSubtract(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends LongArrayPair {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def prettyName: String = "graft_vec_sub"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (array<bigint>, array<bigint>), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-
-  override def nullable: Boolean = true
 
   override def nullSafeEval(a: Any, b: Any): Any =
     VecKernels.vecSub(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])

@@ -688,11 +688,12 @@ object Analytics {
     * rank — no global single-partition window. Customer count grows
     * with the data, so `Window.orderBy(cents)` would funnel every
     * customer through one task at scale; instead the rank is computed
-    * with the same two-phase scan as [[Sampling.prefixShards]]:
-    * range-partition on the sort key, per-partition row_number, and a
-    * bounded one-row-per-partition count gather whose running sum
-    * becomes each partition's rank offset. ntile's bucket function of
-    * (rank, n) is then pure per-row arithmetic — SQL ntile fills the
+    * with the two-phase scan [[Par.rangeOffsets]] (shared with
+    * [[Sampling.prefixShards]]): range-partition on the sort key,
+    * per-partition row_number, and a bounded one-row-per-partition
+    * count gather whose running sum becomes each partition's rank
+    * offset. ntile's bucket function of (rank, n) is then pure
+    * per-row arithmetic — SQL ntile fills the
     * first (n mod 10) buckets with ceil(n/10) rows and the rest with
     * floor(n/10) — and percent_rank is (rank-1)/(n-1) exactly because
     * the sort key (cents desc, custkey) is unique (no peer groups).
@@ -700,21 +701,11 @@ object Analytics {
     * customer scale-up by raising `parts`.
     */
   def spendDeciles(orders: DataFrame, parts: Int = 32): DataFrame = {
-    val spark = orders.sparkSession
     val spend = orders.groupBy($"o_custkey")
       .agg(sum(round($"o_totalprice" * 100).cast("long")).as("cents"),
         count(lit(1)).as("n_orders"))
-    // checkpoint pins the sampled range boundaries so the offset
-    // gather and the final pass see the SAME partitioning
-    val ranged = spend.repartitionByRange(parts, $"cents".desc, $"o_custkey")
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(true)
-    val perPart = ranged.groupBy($"pid").agg(count(lit(1)).as("pcnt"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val n = perPart.map(_._2).sum
-    val offsets = perPart.map(_._1).zip(perPart.map(_._2).scanLeft(0L)(_ + _))
-    val offDf = broadcast(spark.createDataFrame(offsets.toSeq)
-      .toDF("pid", "offset"))
+    val (ranged, n) = Par.rangeOffsets(spend, parts,
+      Seq($"cents".desc, $"o_custkey"), count(lit(1)))
     val wLocal = Window.partitionBy($"pid")
       .orderBy($"cents".desc, $"o_custkey")
     // ntile(10) closed form at rank r (1-based): q = n div 10 rows in
@@ -732,7 +723,7 @@ object Analytics {
     val pctRank =
       if (n <= 1L) lit(0.0)
       else ($"rank" - 1L).cast("double") / lit((n - 1L).toDouble)
-    ranged.join(offDf, Seq("pid"))
+    ranged
       .withColumn("rank", $"offset" + row_number().over(wLocal))
       .select($"o_custkey", ($"cents" / 100.0).as("total_spend"),
         $"n_orders", decile.cast("int").as("decile"),

@@ -203,6 +203,11 @@ object Dedup {
     * hamming distance 3 must agree on ≥1 band — pigeonhole), then
     * verify candidates with the exact popcount of the XOR. Candidate
     * generation is an equi-join on (band, band_val), never all pairs.
+    * A doc may carry several hashes (q137's tile family): the pair's
+    * verdict is the MINIMUM hamming over every hash combination the
+    * bands surface, so one matching tile pair is enough. The same
+    * (doc_a, doc_b) aggregation collapses a single-hash pair found
+    * through several bands to one row.
     *
     * `maxBandDf` is the hot-bucket guard (the [[MaxShingleDf]] move
     * applied to bands): a DEGENERATE band — one whose value is shared
@@ -232,56 +237,15 @@ object Dedup {
           .select($"band", $"band_val")
         banded.join(broadcast(hot), Seq("band", "band_val"), "left_anti")
       }
-    val cands = kept.as("a").join(kept.as("b"),
+    kept.as("a").join(kept.as("b"),
         col("a.band") === col("b.band") &&
         col("a.band_val") === col("b.band_val") &&
         col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.h").as("h_a"), col("b.h").as("h_b"))
-      .dropDuplicates("doc_a", "doc_b")
-    cands
-      .withColumn("hamming", bit_count($"h_a".bitwiseXOR($"h_b")))
+        bit_count(col("a.h").bitwiseXOR(col("b.h"))).as("hamming"))
       .filter($"hamming" <= maxHamming)
-      .select($"doc_a", $"doc_b", $"hamming")
-      .orderBy($"doc_a", $"doc_b")
-  }
-
-  /** [[hammingBandPairs]] for MULTI-ROW-PER-DOC hash tables (r19, the
-    * tiled-pHash pairing): with a tile family per doc, the pair's
-    * verdict is the MINIMUM hamming over every variant combination
-    * the bands surface — the single-row kernel's arbitrary
-    * dropDuplicates pick could discard the one tile pair that
-    * matches. Same banding, same hot-bucket DF cap; the dedup key
-    * widens to (pair, h_a, h_b) so distinct variant combos survive to
-    * the min.
-    */
-  private[graft] def hammingBandPairsMulti(hashes: DataFrame,
-      hashCol: String, maxHamming: Int,
-      maxBandDf: Long = Long.MaxValue): DataFrame = {
-    val banded = hashes.select($"doc_id", col(hashCol).as("h"),
-        explode(sequence(lit(0), lit(3))).as("band"))
-      .withColumn("band_val", expr("(h >> (band * 16)) & 65535"))
-    val kept =
-      if (maxBandDf == Long.MaxValue) banded
-      else {
-        val hot = banded.groupBy($"band", $"band_val")
-          .agg(count(lit(1)).as("df"))
-          .filter($"df" > maxBandDf)
-          .select($"band", $"band_val")
-        banded.join(broadcast(hot), Seq("band", "band_val"), "left_anti")
-      }
-    val cands = kept.as("a").join(kept.as("b"),
-        col("a.band") === col("b.band") &&
-        col("a.band_val") === col("b.band_val") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.h").as("h_a"), col("b.h").as("h_b"))
-      .dropDuplicates("doc_a", "doc_b", "h_a", "h_b")
-    cands
-      .withColumn("hamming", bit_count($"h_a".bitwiseXOR($"h_b")))
       .groupBy($"doc_a", $"doc_b")
       .agg(min($"hamming").as("hamming"))
-      .filter($"hamming" <= maxHamming)
       .orderBy($"doc_a", $"doc_b")
   }
 
@@ -790,7 +754,7 @@ object Dedup {
     * [[Multimodal.MediaDecoder.pHashTiles]] family — whole frame plus
     * nine 75% windows on the eighth grid — and a pair's verdict is
     * the MINIMUM hamming over the variants the bands surface
-    * ([[hammingBandPairsMulti]]). A border-trimmed or aspect-ratio-
+    * ([[hammingBandPairs]]). A border-trimmed or aspect-ratio-
     * normalized re-upload whose window lands on the grid collides
     * with one tile of its original BIT-FOR-BIT (pHashWindow's pooling
     * exactness); near-grid crops degrade to band-catchable
@@ -808,7 +772,7 @@ object Dedup {
     val hashes = Multimodal.imagePHashTiled(
         Multimodal.asMultimodalWithCrops(documents))
       .localCheckpoint(true)
-    hammingBandPairsMulti(hashes, "phash", maxHamming, maxBandDf)
+    hammingBandPairs(hashes, "phash", maxHamming, maxBandDf)
   }
 
   /** Exact-substring REMOVAL at arbitrary alignment (q124) — the Lee

@@ -324,15 +324,21 @@ object Multimodal {
       * [[decodePpm]] downstream, so rendition dedup exercises
       * decode → transform → encode → re-decode end to end.
       */
-    def encodePpmUpscale2x(img: PpmImage): Array[Byte] = {
-      val w2 = img.width * 2; val h2 = img.height * 2
+    def encodePpmUpscale2x(img: PpmImage): Array[Byte] =
+      encodePpm(img, img.width * 2, img.height * 2)((x, y) => (x / 2, y / 2))
+
+    /** A `w2`×`h2` P6 payload whose pixel (x, y) copies `img`'s pixel
+      * `src(x, y)` — the one writer behind both re-encode seams.
+      */
+    private def encodePpm(img: PpmImage, w2: Int, h2: Int)(
+        src: (Int, Int) => (Int, Int)): Array[Byte] = {
       val header = s"P6\n$w2 $h2\n${img.maxval}\n"
         .getBytes(java.nio.charset.StandardCharsets.US_ASCII)
       val out = new Array[Byte](header.length + w2 * h2 * 3)
       System.arraycopy(header, 0, out, 0, header.length)
       var p = 0
       while (p < w2 * h2) {
-        val sx = (p % w2) / 2; val sy = (p / w2) / 2
+        val (sx, sy) = src(p % w2, p / w2)
         val si = (sy * img.width + sx) * 3
         val di = header.length + p * 3
         out(di) = img.pixels(si)
@@ -343,9 +349,9 @@ object Multimodal {
       out
     }
 
-    /** The crop-tolerant tile family of an image (r19, VERDICT #6 —
-      * q133's documented gap: a rescale preserves the whole-frame
-      * pHash grid, a CROP shifts it wholesale, so every bit can flip):
+    /** The crop-tolerant tile family of an image (q133's documented
+      * gap: a rescale preserves the whole-frame pHash grid, a CROP
+      * shifts it wholesale, so every bit can flip):
       * the whole-frame pHash (variant 0) plus nine 75%-window pHashes
       * at the 3×3 offsets of the `w/8` grid (variant 1 + oy·3 + ox).
       * A border crop of up to 25% that lands on the eighth-grid —
@@ -374,25 +380,8 @@ object Multimodal {
       * back to its original. Same real encode seam as
       * [[encodePpmUpscale2x]]: full bytes, re-decoded downstream.
       */
-    def encodePpmCropBorder(img: PpmImage): Array[Byte] = {
-      val (u, v) = (img.width / 8, img.height / 8)
-      val (x0, y0, w2, h2) = (0, 0, 6 * u, 6 * v)
-      val header = s"P6\n$w2 $h2\n${img.maxval}\n"
-        .getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-      val out = new Array[Byte](header.length + w2 * h2 * 3)
-      System.arraycopy(header, 0, out, 0, header.length)
-      var p = 0
-      while (p < w2 * h2) {
-        val sx = x0 + p % w2; val sy = y0 + p / w2
-        val si = (sy * img.width + sx) * 3
-        val di = header.length + p * 3
-        out(di) = img.pixels(si)
-        out(di + 1) = img.pixels(si + 1)
-        out(di + 2) = img.pixels(si + 2)
-        p += 1
-      }
-      out
-    }
+    def encodePpmCropBorder(img: PpmImage): Array[Byte] =
+      encodePpm(img, 6 * (img.width / 8), 6 * (img.height / 8))((x, y) => (x, y))
 
     /** Deterministic byte statistics for non-image modalities — the
       * same output shape as the image path, over the raw bytes.
@@ -538,7 +527,15 @@ object Multimodal {
     * per image — the hash table is the tiny artifact the pairing
     * self-join runs on.
     */
-  def imageDHashes(multimodal: DataFrame): DataFrame = {
+  def imageDHashes(multimodal: DataFrame): DataFrame =
+    imageHashes(multimodal, "dhash", MediaDecoder.dHash)
+
+  /** (doc_id, `hashCol`) with `hash` applied to every decodable
+    * `image` payload — the shared body of [[imageDHashes]] and
+    * [[imagePHashes]].
+    */
+  private def imageHashes(multimodal: DataFrame, hashCol: String,
+                          hash: MediaDecoder.PpmImage => Long): DataFrame = {
     val spark = multimodal.sparkSession
     import spark.implicits.newProductEncoder
     multimodal
@@ -546,10 +543,9 @@ object Multimodal {
       .select("doc_id", "payload")
       .as[(Long, Array[Byte])]
       .mapPartitions(_.flatMap { case (id, payload) =>
-        MediaDecoder.decodePpm(payload)
-          .map(img => (id, MediaDecoder.dHash(img)))
+        MediaDecoder.decodePpm(payload).map(img => (id, hash(img)))
       })
-      .toDF("doc_id", "dhash")
+      .toDF("doc_id", hashCol)
   }
 
   /** Sidecar-asset id base for cropped renditions (the q137 feed):
@@ -625,19 +621,8 @@ object Multimodal {
     * same drop-undecodable contract, same 8-bytes-per-image output
     * economics; only the hash function differs).
     */
-  def imagePHashes(multimodal: DataFrame): DataFrame = {
-    val spark = multimodal.sparkSession
-    import spark.implicits.newProductEncoder
-    multimodal
-      .filter($"modality" === "image")
-      .select("doc_id", "payload")
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, payload) =>
-        MediaDecoder.decodePpm(payload)
-          .map(img => (id, MediaDecoder.pHash(img)))
-      })
-      .toDF("doc_id", "phash")
-  }
+  def imagePHashes(multimodal: DataFrame): DataFrame =
+    imageHashes(multimodal, "phash", MediaDecoder.pHash)
 
   /** Frame sampling: split each payload into fixed-width frames and
     * keep every `stride`-th one — the video keyframe-sampling access

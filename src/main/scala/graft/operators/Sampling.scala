@@ -94,13 +94,8 @@ object Sampling {
   /** Token-budget shard assignment via a DISTRIBUTED prefix sum — the
     * packing step that splits a corpus into ≈budget-token training
     * shards in doc_id order. A naive global running-sum window would
-    * funnel the whole corpus through ONE partition; instead:
-    * range-partition on the order key, per-partition token totals
-    * (tiny: one row per partition) prefix-summed on the driver, then
-    * a per-partition window adds the broadcast offset — every stage
-    * partition-parallel, the classic two-phase scan. The checkpoint
-    * pins the sampled range boundaries so the offsets and the window
-    * see the SAME partitioning.
+    * funnel the whole corpus through ONE partition; the two-phase scan
+    * of [[tokenCumBefore]] keeps every stage partition-parallel.
     *
     * Shard ids are identical for ANY partition count: the cumulative
     * sum is partitioning-invariant integer math.
@@ -112,36 +107,22 @@ object Sampling {
       .select($"doc_id", $"n_tokens", $"cum_before", $"shard")
       .orderBy($"doc_id")
 
-  /** The two-phase distributed prefix sum over per-doc token counts in
-    * doc_id order — shared engine of [[prefixShards]] (q83) and
-    * [[contextPack]] (q95). Range-partition on the order key,
-    * per-partition totals (ONE row per partition) prefix-summed on the
-    * driver, broadcast back as offsets added under a per-partition
-    * window: every stage partition-parallel; the only collect is
-    * `parts` rows. The checkpoint pins the sampled range boundaries so
-    * the offsets and the window see the SAME partitioning. Output is
-    * partition-count-invariant integer math (q83's invariance spec).
+  /** The distributed prefix sum over per-doc token counts in doc_id
+    * order ([[Par.rangeOffsets]]) — shared engine of [[prefixShards]]
+    * (q83) and [[contextPack]] (q95). Output is partition-count-
+    * invariant integer math (q83's invariance spec).
     */
   private[graft] def tokenCumBefore(documents: DataFrame,
                                     parts: Int): DataFrame = {
-    val spark = documents.sparkSession
     val toks = documents.select($"doc_id",
       size(TextAnalysis.tokens($"text")).cast("long").as("n_tokens"))
-    val ranged = toks.repartitionByRange(parts, $"doc_id")
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(true)
-    val perPart = ranged.groupBy($"pid").agg(sum($"n_tokens").as("ptotal"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val offsets = perPart.map(_._1)
-      .zip(perPart.map(_._2).scanLeft(0L)(_ + _))
-    val offDf = broadcast(spark.createDataFrame(offsets.toSeq)
-      .toDF("pid", "offset"))
+    val (ranged, _) =
+      Par.rangeOffsets(toks, parts, Seq($"doc_id"), sum($"n_tokens"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"pid").orderBy($"doc_id")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    ranged.join(offDf, Seq("pid"))
-      .withColumn("cum_before",
-        coalesce(sum($"n_tokens").over(w), lit(0L)) + $"offset")
+    ranged.withColumn("cum_before",
+      coalesce(sum($"n_tokens").over(w), lit(0L)) + $"offset")
   }
 
   /** Context-window packing (q95): concatenate the corpus token stream

@@ -25,11 +25,20 @@ object Similarity {
       .withColumn("nrm", Vec.normQ($"v"))
     val queries = q.filter($"vec_id" < nQueries)
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qnrm"))
-    val scored = q.join(broadcast(queries), $"vec_id" =!= $"query_id")
+    rankByCosine(q.join(broadcast(queries), $"vec_id" =!= $"query_id"), k)
+  }
+
+  /** The exact quantized-cosine tail shared by every cosine search
+    * ([[cosineTopK]], [[ivfTopK]], [[annTopK]]): score (query_id,
+    * vec_id, v, nrm, qv, qnrm) candidates, keep the top `k` per query
+    * by (cosine desc, vec_id) — a window over the candidate output,
+    * partitioned by query, never global.
+    */
+  private def rankByCosine(cands: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"vec_id")
+    cands
       .select($"query_id", $"vec_id",
         (Vec.dotQ($"v", $"qv").cast("double") / ($"nrm" * $"qnrm")).as("cosine"))
-    val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"vec_id")
-    scored
       .withColumn("rank", row_number().over(w))
       .filter($"rank" <= k)
       .select($"query_id", $"vec_id", $"cosine", $"rank")
@@ -137,16 +146,8 @@ object Similarity {
       .withColumn("pr", row_number().over(probeW))
       .filter($"pr" <= nProbe)
       .select($"query_id", $"qv", $"qnrm", $"cell")
-    val cands = assigned.join(probes, Seq("cell"))
-      .filter($"vec_id" =!= $"query_id")
-    val scoredC = cands.select($"query_id", $"vec_id",
-      (Vec.dotQ($"v", $"qv").cast("double") / ($"nrm" * $"qnrm")).as("cosine"))
-    val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"vec_id")
-    scoredC
-      .withColumn("rank", row_number().over(w))
-      .filter($"rank" <= k)
-      .select($"query_id", $"vec_id", $"cosine", $"rank")
-      .orderBy($"query_id", $"rank")
+    rankByCosine(assigned.join(probes, Seq("cell"))
+      .filter($"vec_id" =!= $"query_id"), k)
   }
 
   /** [[ivfTopK]] over a quantizer trained in-engine by [[kmeansTrain]]
@@ -729,23 +730,8 @@ object Similarity {
              rerank: Option[Int] = None): DataFrame = {
     val cents = pqTrainDriver(embeddings, nSub, kCodes, iters)
     val qRows = queryRows(embeddings, nQueries)
-    if (cents.head.isEmpty || qRows.isEmpty)
-      return embeddings.select($"vec_id".as("query_id"), $"vec_id",
-        lit(0L).as("d2"), lit(0).as("rank")).filter(lit(false))
-    val dim = qRows.head.getSeq[Long](1).size
-    val r = rerank.getOrElse(autoRerank(embeddings, dim))
-    val short = adcShortlist(embeddings, cents, qRows, r)
-      .select($"query_id", $"vec_id")
-    val qmap = typedlit(qRows.map(row =>
-      row.getLong(0) -> row.getSeq[Long](1).toList).toMap)
-    val exactD2 = Vec.sqd2($"v", element_at(qmap, $"query_id"))
-    val w = Window.partitionBy($"query_id").orderBy($"d2", $"vec_id")
-    quantizedNonEmpty(embeddings).join(broadcast(short), Seq("vec_id"))
-      .select($"query_id", $"vec_id", exactD2.as("d2"))
-      .withColumn("rank", row_number().over(w))
-      .filter($"rank" <= k)
-      .select($"query_id", $"vec_id", $"d2", $"rank")
-      .orderBy($"query_id", $"rank")
+    shortlistThenRerank(embeddings, qRows, cents.head.isEmpty, k, rerank)(
+      r => adcShortlist(embeddings, cents, qRows, r))
   }
 
   /** One map-only projection emitting BOTH the coarse-cell assignment
@@ -1024,24 +1010,29 @@ object Similarity {
       nQueries: Int, k: Int, rerank: Option[Int],
       byResidual: Boolean): DataFrame = {
     val qRows = queryRows(embeddings, nQueries)
-    if (coarse.isEmpty || cents.head.isEmpty || qRows.isEmpty)
+    shortlistThenRerank(embeddings, qRows,
+        coarse.isEmpty || cents.head.isEmpty, k, rerank)(
+      r => ivfpqCore(embeddings, cents, coarse, qRows, nProbe, r, byResidual))
+  }
+
+  /** The two-stage frame shared by the PQ searches ([[pqTopK]],
+    * [[ivfpqTopK]], [[ivfpqStoredTopK]]): an untrained quantizer or an
+    * empty query set answers with the empty (query_id, vec_id, d2,
+    * rank) frame; otherwise `shortlist` is built with the re-rank
+    * budget (`rerank`, or [[autoRerank]] at the query dimension), and
+    * its (query_id, vec_id) pairs are re-ranked by exact L2: full
+    * vectors are fetched for the broadcast shortlist ids only, scored
+    * against the inlined query map, and the top `k` per query kept.
+    */
+  private def shortlistThenRerank(embeddings: DataFrame,
+      qRows: Array[org.apache.spark.sql.Row], untrained: Boolean, k: Int,
+      rerank: Option[Int])(shortlist: Int => DataFrame): DataFrame = {
+    if (untrained || qRows.isEmpty)
       return embeddings.select($"vec_id".as("query_id"), $"vec_id",
         lit(0L).as("d2"), lit(0).as("rank")).filter(lit(false))
     val dim = qRows.head.getSeq[Long](1).size
-    val r = rerank.getOrElse(autoRerank(embeddings, dim))
-    val short = ivfpqCore(embeddings, cents, coarse, qRows, nProbe, r,
-        byResidual)
+    val short = shortlist(rerank.getOrElse(autoRerank(embeddings, dim)))
       .select($"query_id", $"vec_id")
-    exactRerank(embeddings, short, qRows, k)
-  }
-
-  /** Exact-L2 re-rank of a broadcast (query_id, vec_id) shortlist —
-    * the shared tail of [[ivfpqTopK]] and [[ivfpqStoredTopK]]: fetch
-    * full vectors for the shortlist ids only, score against the
-    * inlined query map, keep top-k per query.
-    */
-  private def exactRerank(embeddings: DataFrame, short: DataFrame,
-      qRows: Array[org.apache.spark.sql.Row], k: Int): DataFrame = {
     val qmap = typedlit(qRows.map(row =>
       row.getLong(0) -> row.getSeq[Long](1).toList).toMap)
     val exactD2 = Vec.sqd2($"v", element_at(qmap, $"query_id"))
@@ -1289,24 +1280,20 @@ object Similarity {
     val byResidual = spark.read.parquet(s"$indexDir/meta").head()
       .getAs[Boolean]("by_residual")
     val qRows = queryRows(embeddings, nQueries)
-    if (coarse.isEmpty || cents.head.isEmpty || qRows.isEmpty)
-      return embeddings.select($"vec_id".as("query_id"), $"vec_id",
-        lit(0L).as("d2"), lit(0).as("rank")).filter(lit(false))
-    val probe = probeMap(coarse, qRows, nProbe)
-    val probed = probe.values.flatten.toSeq.distinct.sorted
-    val dim = qRows.head.getSeq[Long](1).size
-    val r = rerank.getOrElse(autoRerank(embeddings, dim))
-    // tombstoned rows leave the scan BEFORE the ADC arithmetic and
-    // the top-r window (q135): a deleted vector must not occupy a
-    // shortlist slot, or k live results could shrink to k-1
-    val visible = readTombstones(spark, indexDir) match {
-      case None => storedCodes(spark, indexDir, probed)
-      case Some(ts) =>
-        storedCodes(spark, indexDir, probed).join(ts, Seq("vec_id"), "left_anti")
+    shortlistThenRerank(embeddings, qRows,
+        coarse.isEmpty || cents.head.isEmpty, k, rerank) { r =>
+      val probe = probeMap(coarse, qRows, nProbe)
+      val probed = probe.values.flatten.toSeq.distinct.sorted
+      // tombstoned rows leave the scan BEFORE the ADC arithmetic and
+      // the top-r window (q135): a deleted vector must not occupy a
+      // shortlist slot, or k live results could shrink to k-1
+      val visible = readTombstones(spark, indexDir) match {
+        case None => storedCodes(spark, indexDir, probed)
+        case Some(ts) =>
+          storedCodes(spark, indexDir, probed).join(ts, Seq("vec_id"), "left_anti")
+      }
+      adcScanCore(visible, cents, coarse, qRows, probe, r, byResidual)
     }
-    val short = adcScanCore(visible, cents, coarse, qRows, probe, r, byResidual)
-      .select($"query_id", $"vec_id")
-    exactRerank(embeddings, short, qRows, k)
   }
 
   /** Declared q130 shape: build the persisted index ONCE per source
@@ -2413,17 +2400,9 @@ object Similarity {
     val queries = bucketed.filter($"vec_id" < nQueries)
       .select($"table", $"bucket", $"vec_id".as("query_id"),
         $"v".as("qv"), $"nrm".as("qnrm"))
-    val cands = bucketed.join(queries, Seq("table", "bucket"))
+    rankByCosine(bucketed.join(queries, Seq("table", "bucket"))
       .filter($"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id", $"v", $"nrm", $"qv", $"qnrm")
-      .dropDuplicates("query_id", "vec_id")
-    val scored = cands.select($"query_id", $"vec_id",
-      (Vec.dotQ($"v", $"qv").cast("double") / ($"nrm" * $"qnrm")).as("cosine"))
-    val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"vec_id")
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter($"rank" <= k)
-      .select($"query_id", $"vec_id", $"cosine", $"rank")
-      .orderBy($"query_id", $"rank")
+      .dropDuplicates("query_id", "vec_id"), k)
   }
 }

@@ -794,7 +794,8 @@ object TextAnalysis {
   }
 
   /** Two-pass heavy hitters over the corpus vocabulary (q113): pass 1
-    * runs a mergeable Misra-Gries summary ([[graft.functions.MisraGries]],
+    * runs a mergeable Misra-Gries summary
+    * ([[graft.functions.WeightedMisraGries]] with weight 1 per token,
     * capacity [[HhCapacity]]) to a CANDIDATE set; pass 2 recounts just
     * the candidates exactly and keeps terms above the frequency
     * threshold n_tokens / [[HhDenom]]. The sketch guarantees every
@@ -808,7 +809,7 @@ object TextAnalysis {
     * Why not just GROUP BY at 100 TB: the exact aggregate shuffles
     * the full (term, count) vocabulary — billions of distinct terms
     * for web-scale n-gram vocabularies — while the sketch pass is one
-    * scan producing a ≤capacity-row summary per partition with a
+    * scan producing a ≤(capacity + purgeK)-row summary per partition with a
     * constant-size merge tree, and the recount pass semi-joins a
     * broadcast candidate list so only candidate rows shuffle. The
     * sketch's additive-error merge bound is spec-pinned in NewOpsSpec
@@ -888,7 +889,7 @@ object TextAnalysis {
   }
 
   def heavyHitters(documents: DataFrame): DataFrame = {
-    import graft.functions.MisraGries
+    import graft.functions.WeightedMisraGries
     val toks = documents
       .select(explode(tokens(lower($"text"))).as("w"))
       .filter($"w" =!= "")
@@ -896,7 +897,7 @@ object TextAnalysis {
     // scan), eagerly materialized — the one-row certificate both the
     // candidate list and the threshold read from
     val p1 = toks
-      .agg(MisraGries.candidates($"w", HhCapacity).as("cand"),
+      .agg(WeightedMisraGries.candidates($"w", lit(1L), HhCapacity).as("cand"),
         count(lit(1)).as("n_tokens"))
       .localCheckpoint(true)
     val cands = p1.select(explode($"cand").as("w"))

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{broadcast, col, spark_partition_id}
 
 package object operators {
   /** `$"name"` Column shorthand without a SparkSession-bound
@@ -13,8 +13,8 @@ package object operators {
 }
 
 package operators {
-  /** Scale-adaptive partition counts for EXPLICIT repartitions
-    * (r20, guide §2 "make partitioning scale-adaptive").
+  /** Scale-adaptive partition counts for EXPLICIT repartitions, and
+    * the distributed ordered-scan helpers built on them.
     *
     * Context: an explicit `repartitionByRange(n, k)` is the only way
     * to keep a CPU-dense post-exchange stage parallel — AQE's
@@ -22,12 +22,12 @@ package operators {
     * ship but expensive to compute (regex scans, tokenizers, shingle
     * kernels over a few MB of text) gets coalesced down to 1-2 tasks
     * and runs serially. But a CONSTANT n would be tuned to either the
-    * local box or the cluster (the thing the round brief forbids), so
-    * the count is derived from the session and the input: at least
-    * `defaultParallelism` (use every core — the local lever), growing
-    * with the optimizer's size estimate so partitions approach the
-    * advisory partition size at scale (the cluster lever, same target
-    * AQE itself coalesces toward).
+    * local box or the cluster, never both, so the count is derived
+    * from the session and the input: at least `defaultParallelism`
+    * (use every core — the local lever), growing with the optimizer's
+    * size estimate so partitions approach the advisory partition size
+    * at scale (the cluster lever, same target AQE itself coalesces
+    * toward).
     */
   object Par {
     val MaxParts = 1 << 18
@@ -100,5 +100,34 @@ package operators {
       events.select(cols: _*)
         .repartitionByRange(parts(events), col("event_id"))
         .sortWithinPartitions(col("event_id"))
+
+    /** The two-phase distributed scan in `order`, without a global
+      * single-partition window: range-partition `df` into `nParts`
+      * partitions on the order key, total `measure` (an aggregate
+      * column, e.g. `sum(n)` or `count(lit(1))`) per partition,
+      * prefix-sum those `nParts` totals on the driver, and join them
+      * back as a broadcast `offset` column: the measure of every
+      * partition before the row's own. A per-partition window over
+      * `pid` then finishes the scan. Every stage is partition-parallel;
+      * the only collect is one row per partition. The checkpoint pins
+      * the sampled range boundaries so the totals and the final pass
+      * see the SAME partitioning.
+      *
+      * Returns the ranged frame with `pid` and `offset` columns, and
+      * the grand total of `measure`.
+      */
+    def rangeOffsets(df: DataFrame, nParts: Int, order: Seq[Column],
+                     measure: Column): (DataFrame, Long) = {
+      val ranged = df.repartitionByRange(nParts, order: _*)
+        .withColumn("pid", spark_partition_id())
+        .localCheckpoint(true)
+      val perPart = ranged.groupBy(col("pid")).agg(measure)
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
+      val offsets = perPart.map(_._1)
+        .zip(perPart.map(_._2).scanLeft(0L)(_ + _))
+      val offDf = broadcast(df.sparkSession.createDataFrame(offsets.toSeq)
+        .toDF("pid", "offset"))
+      (ranged.join(offDf, Seq("pid")), perPart.map(_._2).sum)
+    }
   }
 }

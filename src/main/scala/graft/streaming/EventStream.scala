@@ -258,14 +258,8 @@ object EventStream {
     import org.apache.spark.sql.streaming.GroupStateTimeout
     import org.apache.spark.sql.streaming.GroupState
     val spark = events.sparkSession
-    import spark.implicits.{newProductEncoder, newLongEncoder}
-    events
-      .select("user_id", "ts", "value")
-      .withColumn("ts_us", org.apache.spark.sql.functions.unix_micros(
-        org.apache.spark.sql.functions.col("ts")))
-      .select("user_id", "ts_us", "value")
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
+    import spark.implicits.newProductEncoder
+    byUser(events)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
         (uid: Long, rows: Iterator[(Long, Long, Double)], state: GroupState[UserProfile]) =>
           val prev = state.getOption.getOrElse(UserProfile(uid, 0L, 0.0, Long.MinValue))
@@ -324,14 +318,8 @@ object EventStream {
   def newHighAlerts(events: DataFrame): org.apache.spark.sql.Dataset[Alert] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = events.sparkSession
-    import spark.implicits.{newProductEncoder, newLongEncoder, newDoubleEncoder}
-    events
-      .select("user_id", "ts", "value")
-      .withColumn("ts_us", org.apache.spark.sql.functions.unix_micros(
-        org.apache.spark.sql.functions.col("ts")))
-      .select("user_id", "ts_us", "value")
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
+    import spark.implicits.{newProductEncoder, newDoubleEncoder}
+    byUser(events)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (uid: Long, rows: Iterator[(Long, Long, Double)], state: GroupState[Double]) =>
           var mx = state.getOption.getOrElse(Double.NegativeInfinity)
@@ -345,16 +333,18 @@ object EventStream {
       }
   }
 
-  /** Run the streaming rollup over everything currently in the
-    * directory and return the final result table (memory sink,
-    * complete mode — the smoke path used by tests; production would
-    * `writeStream` to a real sink with `append` + watermark).
+  /** (user_id, ts_us, value) rows keyed by user — the input both
+    * per-user state operators ([[userProfiles]], [[newHighAlerts]])
+    * fold.
     */
-  def runOnce(spark: SparkSession, dir: String, name: String = "rollup"): DataFrame = {
-    drainOnce(windowRollup(readEventStream(spark, dir), watermarked = true)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name))
-    spark.table(name)
+  private def byUser(events: DataFrame)
+      : org.apache.spark.sql.KeyValueGroupedDataset[Long, (Long, Long, Double)] = {
+    val spark = events.sparkSession
+    import spark.implicits.{newProductEncoder, newLongEncoder}
+    events
+      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("value"))
+      .as[(Long, Long, Double)]
+      .groupByKey(_._1)
   }
 
   /** Broker-URL conf gating the Kafka connector path. */
@@ -494,21 +484,6 @@ object EventStream {
                        streaming: Boolean): DataFrame =
     clickPurchaseJoin(clicks0, purchases0, streaming, "left_outer")
 
-  /** Drive the stream-stream join over everything in `dir` and return
-    * the joined pairs (memory sink, append mode — inner stream-stream
-    * joins emit exactly-once as the watermark closes match windows).
-    */
-  def runClickPurchaseJoinOnce(spark: SparkSession, dir: String,
-                               name: String = "sjoin",
-                               joinType: String = "inner"): DataFrame = {
-    drainOnce(clickPurchaseJoin(
-        readEventStream(spark, dir), readEventStream(spark, dir),
-        streaming = true, joinType)
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name))
-    spark.table(name)
-  }
-
   /** Stream-static dimension enrichment — the ingestion-time lookup
     * join (Druid's lookup/dimension join; the reference enriches GOES
     * events against station metadata the same way). The event stream
@@ -538,20 +513,6 @@ object EventStream {
     events.join(dims, col("user_id") === col("c_custkey"), "left")
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"), col("c_mktsegment"), col("nation"))
-  }
-
-  /** Drive the stream-static enrichment over everything in `dir`
-    * against the given dim frames (memory sink, append mode — a
-    * stream-static join is stateless, so every event emits in the
-    * micro-batch it arrives in).
-    */
-  def runEnrichOnce(spark: SparkSession, dir: String,
-                    customer: DataFrame, nation: DataFrame,
-                    name: String = "enrich"): DataFrame = {
-    drainOnce(enrichWithDims(readEventStream(spark, dir), customer, nation)
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name))
-    spark.table(name)
   }
 
   /** The production sink path: watermarked rollup in APPEND mode to a

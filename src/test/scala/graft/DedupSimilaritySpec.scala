@@ -292,7 +292,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("streaming rollup equals batch rollup") {
     val batch = EventStream.batchRollup(Tables.events(spark, dir))
-    val stream = EventStream.runOnce(spark, dir, "rollup_spec")
+    val stream = MemorySink.drain(EventStream.windowRollup(
+      EventStream.readEventStream(spark, dir), watermarked = true),
+      "complete", "rollup_spec")
     val b = batch.collect().map(_.toSeq).toSet
     val s = stream.collect().map(_.toSeq).toSet
     assert(b == s, s"stream/batch mismatch: missing=${(b -- s).take(3)} extra=${(s -- b).take(3)}")

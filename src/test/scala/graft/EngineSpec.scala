@@ -53,13 +53,21 @@ class EngineSpec extends AnyFunSuite {
     // variants, so they stop compiling once each variant is cached. q07 had
     // the same symptom from its two countDistincts; see distinctCounts.
     def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    val compiled = (1 to 3).map { _ =>
-      val before = compiles
-      dashboard.foreach(sink)
-      compiles - before
+    // classes compiled per query, per sweep
+    val perQuery = (1 to 3).map { _ =>
+      dashboard.map { q =>
+        val before = compiles
+        sink(q)
+        q -> (compiles - before)
+      }
     }
+    val compiled = perQuery.map(_.map(_._2).sum)
+    def compiledIn(sweep: Int): String = perQuery(sweep - 1)
+      .collect { case (q, n) if n > 0 => s"$q $n" }.mkString(", ")
     assert(compiled.head > 0, "the first sweep compiled nothing: is codegen on?")
-    assert(compiled(2) == 0, s"classes compiled per sweep: ${compiled.mkString(", ")}")
+    assert(compiled(2) == 0,
+      s"classes compiled per sweep: ${compiled.mkString(", ")}; " +
+        s"sweep 2: ${compiledIn(2)}; sweep 3: ${compiledIn(3)}")
   }
 
   test("the status store keeps at most 10 jobs and 10 SQL executions") {

@@ -1745,17 +1745,18 @@ class NewOpsSpec extends AnyFunSuite {
     // the encoder boundary hands back immutable maps; merge folds the
     // SMALLER side into the larger, so the conversion path must work
     // whichever argument is the deserialized one
-    val mg = new graft.functions.MisraGries(4)
+    val mg = new graft.functions.WeightedMisraGries(4)
     val big = Map("a" -> 5L, "b" -> 4L, "c" -> 3L) // immutable, larger
-    val small = ("d" :: "d" :: Nil).foldLeft(mg.zero)(mg.reduce) // mutable
+    val small = ("d" :: "d" :: Nil).map(_ -> 1L).foldLeft(mg.zero)(mg.reduce) // mutable
     val m1 = mg.merge(big, small)
     val m2 = mg.merge(small, Map("a" -> 5L, "b" -> 4L, "c" -> 3L))
     assert(m1.toMap == Map("a" -> 5L, "b" -> 4L, "c" -> 3L, "d" -> 2L))
     assert(m1.toMap == m2.toMap, "merge must be argument-order symmetric here")
-    // immutable-vs-immutable with overflow takes the cut path
+    // immutable-vs-immutable with overflow takes the cut path: six keys
+    // exceed the capacity + purgeK = 4 + 1 buffer bound
     val over = mg.merge(Map("a" -> 5L, "b" -> 4L, "c" -> 3L),
-      Map("d" -> 2L, "e" -> 1L))
-    assert(over.size <= 4 && over.contains("a"))
+      Map("d" -> 2L, "e" -> 1L, "f" -> 1L))
+    assert(over.size <= 4 + 1 && over.contains("a"))
   }
 
   test("quantile rollup: non-finite values are counted apart and never picked") {
@@ -1865,10 +1866,10 @@ class NewOpsSpec extends AnyFunSuite {
   }
 
   test("misra-gries: retention guarantee holds under adversarial merge shapes") {
-    val mg = new graft.functions.MisraGries(4)
+    val mg = new graft.functions.WeightedMisraGries(4)
     // stream: 'hot' appears 40 times among 100 items -> freq > n/(cap+1)=20
-    val stream = (0 until 40).map(_ => "hot") ++
-      (0 until 60).map(i => s"cold$i")
+    val stream = ((0 until 40).map(_ => "hot") ++
+      (0 until 60).map(i => s"cold$i")).map(_ -> 1L)
     // worst-case shapes: sequential, reversed, and a deep two-sided
     // merge tree over 10-item chunks
     val seqBuf = stream.foldLeft(mg.zero)(mg.reduce)
@@ -1879,7 +1880,8 @@ class NewOpsSpec extends AnyFunSuite {
       .map(_.foldLeft(mg.zero)(mg.reduce)).toSeq
     val merged = chunks.reduce(mg.merge)
     assert(merged.contains("hot"), "merge tree lost the heavy item")
-    assert(merged.size <= 4, "merge exceeded capacity")
+    // the buffer bound is capacity + purgeK, purgeK = max(1, 4 / 4)
+    assert(merged.size <= 4 + 1, "merge exceeded capacity")
     // estimate bound: est <= true and true - est <= n/(cap+1)
     val est = merged.getOrElse("hot", 0L)
     assert(est <= 40 && 40 - est <= 100 / 5,

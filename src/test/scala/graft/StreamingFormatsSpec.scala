@@ -206,7 +206,10 @@ class StreamingFormatsSpec extends AnyFunSuite {
     val events = Tables.events(spark, dir)
     val batch = EventStream.clickPurchaseJoin(events, events, streaming = false)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val streamed = EventStream.runClickPurchaseJoinOnce(spark, dir)
+    val streamed = MemorySink.drain(EventStream.clickPurchaseJoin(
+        EventStream.readEventStream(spark, dir),
+        EventStream.readEventStream(spark, dir), streaming = true),
+        "append", "sjoin")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // an inner stream-stream join emits a pair once both sides have
     // arrived; with the whole directory processed, the final result
@@ -230,7 +233,9 @@ class StreamingFormatsSpec extends AnyFunSuite {
       .contains("BroadcastHashJoin"),
       "dim side not broadcast in the enrichment join")
     val batch = batchDf.collect().map(key).toSet
-    val got = EventStream.runEnrichOnce(spark, dir, customer, nation)
+    val got = MemorySink.drain(EventStream.enrichWithDims(
+        EventStream.readEventStream(spark, dir), customer, nation),
+        "append", "enrich")
       .collect().map(key).toSet
     assert(got == batch,
       s"stream/batch enrichment diverge: ${(got diff batch).take(3)} / ${(batch diff got).take(3)}")
@@ -250,8 +255,10 @@ class StreamingFormatsSpec extends AnyFunSuite {
 
   test("left-outer stream-stream join: exact matches, nulls only past the watermark") {
     val events = Tables.events(spark, dir)
-    val streamed = EventStream
-      .runClickPurchaseJoinOnce(spark, dir, "sjoin_lo", "left_outer").collect()
+    val streamed = MemorySink.drain(EventStream.clickPurchaseJoin(
+        EventStream.readEventStream(spark, dir),
+        EventStream.readEventStream(spark, dir), streaming = true, "left_outer"),
+        "append", "sjoin_lo").collect()
     val batch = EventStream.clickAbandonment(events, events, streaming = false)
       .collect()
     def key(r: org.apache.spark.sql.Row) =
