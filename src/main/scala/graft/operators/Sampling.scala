@@ -71,11 +71,10 @@ object Sampling {
                   dropLangs: Set[String] = Set("zh"),
                   salt: String = "smpl"): DataFrame = {
     // ONE pass over the text computes BOTH per-doc signals (quality
-    // components and the md5 dedup digest) — round 7's form derived
-    // them in separate lineages and planned three full corpus scans.
-    // The exact-dup keeper is a window min over the digest (same
-    // shuffle key the old groupBy+join used, one exchange instead of
-    // two and no join back); thresholds ride a broadcast literal.
+    // components and the md5 dedup digest): deriving them in separate
+    // lineages plans three full corpus scans. The exact-dup keeper is
+    // a window min over the digest (one exchange on the digest key, no
+    // join back); thresholds ride a broadcast literal.
     val base = TextAnalysis.withQuality(documents)
       .select($"doc_id", $"lang", md5($"text").as("h"), $"quality")
     base
